@@ -277,26 +277,18 @@ def lsh_bands(
     non-duplicate docs, so the downstream join shuffles evenly.
     """
     rows_per_band = num_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(F.col("sig"), bi * rows_per_band + j + 1).cast("string")
-                            for j in range(rows_per_band)
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for bi in range(bands)
-        ]
+    band_rows = ", ".join(
+        "named_struct('band', {bi}, 'band_key', md5(concat_ws(',', {cols})))".format(
+            bi=bi,
+            cols=", ".join(
+                f"CAST(element_at(sig, {bi * rows_per_band + j + 1}) AS STRING)"
+                for j in range(rows_per_band)
+            ),
+        )
+        for bi in range(bands)
     )
-    return sig_df.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
+    # SQL text: one py4j call instead of one per expression node
+    return sig_df.selectExpr("doc_id", f"inline(array({band_rows}))")
 
 
 def minhash_lsh_pairs(
@@ -383,55 +375,49 @@ def _bucket_pairs(
         if cap_method == "anti_join":
             big = (
                 buckets.groupBy(*bucket_cols)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") > max_bucket_size)
+                .agg(F.expr("count(1) AS _n"))
+                .where(f"_n > {int(max_bucket_size)}")
                 .select(*bucket_cols)
             )
             buckets = buckets.join(F.broadcast(big), on=bucket_cols, how="left_anti")
         elif cap_method == "window":
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*bucket_cols)
-            buckets = (
-                buckets.withColumn("_n", F.count(F.lit(1)).over(w))
-                .where(F.col("_n") <= max_bucket_size)
-                .drop("_n")
-            )
+            buckets = _cap_buckets(buckets, bucket_cols, max_bucket_size)
         else:
             raise ValueError(f"cap_method must be window|anti_join: {cap_method}")
-    ids_sorted = F.array_sort(F.collect_list("doc_id"))
-    groups = buckets.groupBy(*bucket_cols).agg(ids_sorted.alias("ids"))
-    groups = groups.where(F.size("ids") >= 2)
+    groups = (
+        buckets.groupBy(*bucket_cols)
+        .agg(F.expr("array_sort(collect_list(doc_id)) AS ids"))
+        .where("size(ids) >= 2")
+    )
+    return _pairs_within(groups, "ids").selectExpr(
+        "CAST(a AS BIGINT) AS doc_a", "CAST(b AS BIGINT) AS doc_b"
+    ).distinct()
 
-    # numpy in-bucket expansion: one triu_indices per bucket.  The earlier
-    # nested transform/filter/explode expression ran INTERPRETED (higher-
-    # order functions are outside whole-stage codegen) and built a struct
-    # per ORDERED pair (k² per bucket, half discarded) — measured ~3x
-    # slower at ~500k candidate pairs.  ids are sorted and unique within a
-    # bucket, so triu(k=1) emits exactly the a < b pairs.
-    def expand(batches: "pd.DataFrame"):
-        import numpy as _np
-        import pandas as _pd
 
-        for pdf in batches:
-            out_a, out_b = [], []
-            for ids in pdf["ids"]:
-                arr = _np.asarray(ids, dtype=_np.int64)
-                ia, ib = _np.triu_indices(arr.size, 1)
-                out_a.append(arr[ia])
-                out_b.append(arr[ib])
-            if out_a:
-                yield _pd.DataFrame(
-                    {
-                        "doc_a": _np.concatenate(out_a),
-                        "doc_b": _np.concatenate(out_b),
-                    }
-                )
-
+def _cap_buckets(rows: DataFrame, bucket_cols: list[str], max_bucket_size: int) -> DataFrame:
+    """Drop the rows of buckets with more than ``max_bucket_size`` members
+    (a window count sharing the downstream groupBy's hash partitioning)."""
+    keys = ", ".join(f"`{c}`" for c in bucket_cols)
     return (
-        groups.select("ids")
-        .mapInPandas(expand, "doc_a long, doc_b long")
-        .distinct()
+        rows.withColumn("_n", F.expr(f"count(1) OVER (PARTITION BY {keys})"))
+        .where(f"_n <= {int(max_bucket_size)}")
+        .drop("_n")
+    )
+
+
+def _pairs_within(groups: DataFrame, members: str) -> DataFrame:
+    """Every (a, b) pair of the ``members`` array's elements with b at a
+    later array position than a — the upper triangle, in the JVM.
+
+    Two generators: ``posexplode`` gives each element with its position,
+    then ``explode`` of the slice after that position gives its partners.
+    Kept out of Python on purpose: a Python worker stage has a fixed cost
+    of ~0.2-0.3 s a task on a 4-CPU local[4] host (worker hand-off and
+    import-cache invalidation), far more than the expansion of
+    bucket-capped arrays costs here.
+    """
+    return groups.selectExpr(members, f"posexplode({members}) AS (pa, a)").selectExpr(
+        "a", f"explode(slice({members}, pa + 2, size({members}))) AS b"
     )
 
 
@@ -548,101 +534,31 @@ def simhash_near_pairs(
     width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
     sh = simhash(df, text_col, id_col, engine=engine)
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk", "c.val")
+    chunk_rows = ", ".join(
+        f"named_struct('chunk', {i}, 'val', shiftright(simhash, {i * width}) & {mask}L)"
+        for i in range(bands)
+    )
+    chunks = sh.selectExpr("doc_id", "simhash", f"inline(array({chunk_rows}))")
     if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk", "val")
-        chunks = (
-            chunks.withColumn("_n", F.count(F.lit(1)).over(w))
-            .where(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
-    # one groupBy + in-bucket explosion (see _bucket_pairs): the fingerprint
+        chunks = _cap_buckets(chunks, ["chunk", "val"], max_bucket_size)
+    # one groupBy + in-bucket expansion (see _bucket_pairs): the fingerprint
     # rides along in the member struct, so hamming is computed in place and
     # the simhash aggregation lineage runs exactly once
-    members = F.array_sort(F.collect_list(F.struct("doc_id", "simhash")))
-    groups = chunks.groupBy("chunk", "val").agg(members.alias("ms")).where(
-        F.size("ms") >= 2
+    groups = (
+        chunks.groupBy("chunk", "val")
+        .agg(F.expr("array_sort(collect_list(struct(doc_id, simhash))) AS ms"))
+        .where("size(ms) >= 2")
     )
-    if engine == "arrow":
-        # numpy pair expansion: triu indices + byte-LUT popcount per bucket —
-        # the interpreted nested-lambda expansion costs ~30µs per candidate
-        # pair, which dominates on near-dup-heavy corpora
-        import numpy as np
-        import pandas as pd
-
-        lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-
-        def expand(batches):
-            for pdf in batches:
-                out_a, out_b, out_h = [], [], []
-                for ms in pdf["ms"]:
-                    ids = np.array([m["doc_id"] for m in ms], dtype=np.int64)
-                    hv = np.array([m["simhash"] for m in ms], dtype=np.uint64)
-                    ia, ib = np.triu_indices(len(ids), 1)
-                    x = (hv[ia] ^ hv[ib]).view(np.uint8).reshape(-1, 8)
-                    h = lut[x].sum(axis=1).astype(np.int64)
-                    m = h <= max_hamming
-                    out_a.append(ids[ia][m])
-                    out_b.append(ids[ib][m])
-                    out_h.append(h[m])
-                if out_a:
-                    yield pd.DataFrame(
-                        {
-                            "doc_a": np.concatenate(out_a),
-                            "doc_b": np.concatenate(out_b),
-                            "hamming": np.concatenate(out_h),
-                        }
-                    )
-
-        return (
-            groups.mapInPandas(expand, "doc_a long, doc_b long, hamming long")
-            .distinct()
+    return (
+        _pairs_within(groups, "ms")
+        .selectExpr(
+            "CAST(a.doc_id AS BIGINT) AS doc_a",
+            "CAST(b.doc_id AS BIGINT) AS doc_b",
+            "CAST(bit_count(a.simhash ^ b.simhash) AS BIGINT) AS hamming",
         )
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ms"),
-                lambda x: F.transform(
-                    F.col("ms"),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("a"),
-                        y["doc_id"].alias("b"),
-                        F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("h"),
-                    ),
-                ),
-            )
-        ),
-        lambda p: p["a"] < p["b"],
-    )
-    cand = (
-        groups.select(F.explode(pair_structs).alias("p"))
-        .select(
-            F.col("p.a").alias("doc_a"),
-            F.col("p.b").alias("doc_b"),
-            F.col("p.h").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        .where(f"hamming <= {int(max_hamming)}")
         .distinct()
     )
-    return cand
 
 
 def ngram_jaccard_pairs_minhash(

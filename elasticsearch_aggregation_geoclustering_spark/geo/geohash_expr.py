@@ -12,6 +12,13 @@ stays on the Arrow/numpy path.  Out-of-range coordinates produce undefined
 keys here (the numpy path raises); callers own range-filtering, which the
 reference's mapper enforces at index time anyway.
 
+The expressions are written as SQL text and parsed JVM-side: building the
+same tree from ``pyspark.sql.functions`` calls costs one py4j round trip
+per node (several hundred per key expression, ~0.1 ms each), a fixed
+per-request cost that dwarfed the codegen'd evaluation on small inputs.
+Double constants are spelled ``repr(x) + "D"``, which parses back to the
+identical double, so the keys stay bit-identical.
+
 Java's long shifts/or/and/xor are bit-identical to the numpy uint64 ops for
 these masked values — pinned against the numpy implementation on edge and
 random coordinates by tests/test_geohash.py.
@@ -38,22 +45,71 @@ _LAT_MAX = float(np.nextafter(90.0, -np.inf))
 _LON_MAX = float(np.nextafter(180.0, -np.inf))
 
 
-def _encode_axis_expr(deg: Column, decode_step: float, edge_max: float) -> Column:
+def _dbl(x: float) -> str:
+    """A double literal that parses back to exactly ``x``."""
+    return repr(float(x)) + "D"
+
+
+def _name(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _axis_sql(deg: str, decode_step: float, edge_max: float) -> str:
     """Lucene encodeLatitude/encodeLongitude, sign-flipped to unsigned order."""
-    clamped = F.least(deg.cast("double"), F.lit(edge_max))
-    q = F.floor(clamped / F.lit(decode_step))
-    return q.bitwiseXOR(F.lit(0x80000000)).bitwiseAND(F.lit(0xFFFFFFFF))
+    q = f"FLOOR(LEAST({deg}, {_dbl(edge_max)}) / {_dbl(decode_step)})"
+    return f"(({q} ^ 2147483648L) & 4294967295L)"
 
 
-def _spread_bits_expr(x: Column) -> Column:
-    """Spread the low 32 bits to even bit positions (5-step magic masks)."""
-    for shift, mask in _SPREAD_STEPS:
-        x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
-    return x
+def _spread_sql(x: str, shift: int, mask: int) -> str:
+    """One step of spreading the low 32 bits to even bit positions."""
+    return f"(({x} | shiftleft({x}, {shift})) & {mask}L)"
 
 
-def cell_expr(lon: Column, lat: Column, precision: int, *, validate: bool = True) -> Column:
-    """``Geohash.longEncode(lon, lat, precision)`` as a codegen-able Column.
+def _key_sql(lat_bits: str, lon_bits: str, precision: int) -> str:
+    """Morton-interleave spread lat (even bits) and lon (odd bits), keep the
+    top 5·precision bits and pack the level low.  lon<<1 may set bit 63
+    (negative long, correct bit pattern); the unsigned shift right restores
+    a non-negative key for precision <= 11 (shift >= 9)."""
+    morton = f"({lat_bits} | shiftleft({lon_bits}, 1))"
+    shift = 4 + 5 * (12 - precision)
+    return f"CAST((shiftleft(shiftrightunsigned({morton}, {shift}), 4) | {precision}) AS BIGINT)"
+
+
+def _validator_sql(lon: str, lat: str) -> str:
+    """Additive coordinate guard: NULL when absent, raises when out of
+    range/NaN, else 0 — add it to a key expression to validate without
+    nesting the key inside a CASE branch.
+
+    The validator rides OUTSIDE the heavy key expression as an additive
+    term: ``key + CASE(...)``.  Putting ``key`` inside a CASE branch would
+    disable codegen common-subexpression elimination (conditional branches
+    are evaluated lazily, so the textual copies of FLOOR(least(...)) in the
+    spread-bits expansion each re-evaluate per row — measured 4x slower).
+    Here key stays unconditional, NULL coords null-propagate through the
+    addition, and the raise fires when the term is evaluated on a bad row.
+    """
+    bad = (
+        f"{lon} < -180.0D OR {lon} > 180.0D OR {lat} < -90.0D OR {lat} > 90.0D"
+        f" OR isnan({lon}) OR isnan({lat})"
+    )
+    err = (
+        "raise_error(concat('geo coordinate out of range: lon=', "
+        f"CAST({lon} AS STRING), ' lat=', CAST({lat} AS STRING)))"
+    )
+    return (
+        f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN CAST(NULL AS BIGINT)"
+        f" WHEN {bad} THEN CAST({err} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+    )
+
+
+def _check_precision(precision: int) -> None:
+    if not 1 <= precision <= 11:
+        raise ValueError(f"JVM cell keys support precision 1..11: {precision}")
+
+
+def cell_expr(lon_col: str, lat_col: str, precision: int, *, validate: bool = True) -> Column:
+    """``Geohash.longEncode(lon, lat, precision)`` as a codegen-able Column
+    over the named coordinate columns.
 
     Bit-identical to geo.geohash.long_encode for precision 1..11.
 
@@ -69,58 +125,22 @@ def cell_expr(lon: Column, lat: Column, precision: int, *, validate: bool = True
     null-free upstream and the branch shows up in a profile; the unvalidated
     expression maps NULL to the +edge cell and out-of-range to undefined
     keys.
+
+    The single-expression form textually expands each spread step's input
+    twice (2^5-fold); prefer :func:`with_cell_column` on hot paths.
     """
-    if not 1 <= precision <= 11:
-        raise ValueError(f"cell_expr supports precision 1..11: {precision}")
-    lon_d, lat_d = lon.cast("double"), lat.cast("double")
-    lat_e = _encode_axis_expr(lat_d, LATITUDE_DECODE, _LAT_MAX)
-    lon_e = _encode_axis_expr(lon_d, LONGITUDE_DECODE, _LON_MAX)
-    # morton: lat on even bits, lon on odd — lon<<1 may set bit 63 (negative
-    # long, correct bit pattern); the unsigned shift right restores a
-    # non-negative key for precision <= 11 (shift >= 9)
-    morton = _spread_bits_expr(lat_e).bitwiseOR(
-        F.shiftleft(_spread_bits_expr(lon_e), 1)
-    )
-    shift = 4 + 5 * (12 - precision)
-    key = F.shiftleft(F.shiftrightunsigned(morton, shift), 4).bitwiseOR(
-        F.lit(precision)
-    ).cast("long")
-    if not validate:
-        return key
-    # the validator rides OUTSIDE the heavy key expression as an additive
-    # term: `key + CASE(...)`.  Putting `key` inside a CASE branch would
-    # disable codegen common-subexpression elimination (conditional branches
-    # are evaluated lazily, so the ~32 textual copies of FLOOR(least(...))
-    # in the spread-bits expansion each re-evaluate per row — measured 4x
-    # slower).  Here key stays unconditional (CSE collapses the copies),
-    # while NULL coords null-propagate through the addition, and the raise
-    # fires when the validator term is evaluated on a bad row.
-    return key + _validator_expr(lon_d, lat_d)
-
-
-def _validator_expr(lon_d: Column, lat_d: Column) -> Column:
-    """Additive coordinate guard: NULL when absent, raises when out of
-    range/NaN, else 0 — add it to a key expression to validate without
-    nesting the key inside a CASE branch."""
-    absent = lon_d.isNull() | lat_d.isNull()
-    bad = (
-        (lon_d < F.lit(-180.0)) | (lon_d > F.lit(180.0))
-        | (lat_d < F.lit(-90.0)) | (lat_d > F.lit(90.0))
-        | F.isnan(lon_d) | F.isnan(lat_d)
-    )
-    err = F.raise_error(
-        F.concat(
-            F.lit("geo coordinate out of range: lon="),
-            lon_d.cast("string"),
-            F.lit(" lat="),
-            lat_d.cast("string"),
-        )
-    )
-    return (
-        F.when(absent, F.lit(None).cast("long"))
-        .when(bad, err.cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-    )
+    _check_precision(precision)
+    lon = f"CAST({_name(lon_col)} AS DOUBLE)"
+    lat = f"CAST({_name(lat_col)} AS DOUBLE)"
+    lat_bits = _axis_sql(lat, LATITUDE_DECODE, _LAT_MAX)
+    lon_bits = _axis_sql(lon, LONGITUDE_DECODE, _LON_MAX)
+    for shift, mask in _SPREAD_STEPS:
+        lat_bits = _spread_sql(lat_bits, shift, mask)
+        lon_bits = _spread_sql(lon_bits, shift, mask)
+    key = _key_sql(lat_bits, lon_bits, precision)
+    if validate:
+        key = f"{key} + ({_validator_sql(lon, lat)})"
+    return F.expr(key)
 
 
 def with_cell_column(
@@ -144,30 +164,24 @@ def with_cell_column(
     whole-stage codegen fuses the Projects into one function with local
     variables anyway.
     """
-    if not 1 <= precision <= 11:
-        raise ValueError(f"with_cell_column supports precision 1..11: {precision}")
-    lon_d, lat_d = F.col(lon_col).cast("double"), F.col(lat_col).cast("double")
-    tlat, tlon = f"_gh_{out_col}_lat", f"_gh_{out_col}_lon"
-    df = df.withColumns(
-        {
-            tlat: _encode_axis_expr(lat_d, LATITUDE_DECODE, _LAT_MAX),
-            tlon: _encode_axis_expr(lon_d, LONGITUDE_DECODE, _LON_MAX),
-        }
+    _check_precision(precision)
+    lon = f"CAST({_name(lon_col)} AS DOUBLE)"
+    lat = f"CAST({_name(lat_col)} AS DOUBLE)"
+    temps = [(f"_gh_{out_col}_lat{i}", f"_gh_{out_col}_lon{i}") for i in range(len(_SPREAD_STEPS) + 1)]
+    tlat, tlon = (_name(c) for c in temps[0])
+    df = df.selectExpr(
+        "*",
+        f"{_axis_sql(lat, LATITUDE_DECODE, _LAT_MAX)} AS {tlat}",
+        f"{_axis_sql(lon, LONGITUDE_DECODE, _LON_MAX)} AS {tlon}",
     )
-    for shift, mask in _SPREAD_STEPS:
-        df = df.withColumns(
-            {
-                c: F.col(c).bitwiseOR(F.shiftleft(F.col(c), shift)).bitwiseAND(F.lit(mask))
-                for c in (tlat, tlon)
-            }
+    for (shift, mask), (nlat, nlon) in zip(_SPREAD_STEPS, temps[1:]):
+        df = df.selectExpr(
+            "*",
+            f"{_spread_sql(tlat, shift, mask)} AS {_name(nlat)}",
+            f"{_spread_sql(tlon, shift, mask)} AS {_name(nlon)}",
         )
-    morton = F.col(tlat).bitwiseOR(F.shiftleft(F.col(tlon), 1))
-    kshift = 4 + 5 * (12 - precision)
-    key = (
-        F.shiftleft(F.shiftrightunsigned(morton, kshift), 4)
-        .bitwiseOR(F.lit(precision))
-        .cast("long")
-    )
+        tlat, tlon = _name(nlat), _name(nlon)
+    key = _key_sql(tlat, tlon, precision)
     if validate:
-        key = key + _validator_expr(lon_d, lat_d)
-    return df.withColumn(out_col, key).drop(tlat, tlon)
+        key = f"{key} + ({_validator_sql(lon, lat)})"
+    return df.withColumn(out_col, F.expr(key)).drop(*[c for pair in temps for c in pair])

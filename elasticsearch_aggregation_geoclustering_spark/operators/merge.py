@@ -29,6 +29,15 @@ the FIRST in-radius candidate, applies that single merge scalar-side, and
 re-vectorizes from the next position — identical decisions to the
 element-by-element loop (``merge_clusters_reference``, kept for tests), but
 k=10,000 anchors cost O(k) numpy passes instead of 10⁸ Python iterations.
+
+Most anchors absorb nothing (z9 over world-scattered points: ~180 of 10,000
+do), and an anchor's centroid only moves once it absorbs, so an anchor with
+no later candidate within its radius at its ORIGINAL centroid absorbs
+nothing at all — its ratio revisits retry the same centroid and miss again.
+One vectorized pass over latitude-sorted neighbour pairs finds the anchors
+that may absorb (``_may_absorb``, conservative by a relative margin far above
+the last-ulp differences between vector and scalar trig), and only those
+run the exact scan; the rest are emitted as they are.
 """
 
 from __future__ import annotations
@@ -69,6 +78,56 @@ def _arc_np(lat1: float, lon1: float, lat2: np.ndarray, lon2: np.ndarray) -> np.
     return EARTH_MEAN_RADIUS * 2.0 * np.arcsin(np.minimum(1.0, np.sqrt(h * 0.5)))
 
 
+#: the pre-pass is skipped when the latitude band holds more than this many
+#: neighbour pairs per candidate: so many neighbours means most anchors
+#: absorb (large radii, dense data), and the pair pass would only add cost
+_MAX_PAIRS_PER_CANDIDATE = 64
+
+#: neighbour pairs tested per vector pass (bounds the pass's memory)
+_PAIRS_PER_PASS = 1 << 17
+
+#: relative slack that keeps the pre-pass conservative: it may flag an
+#: anchor that absorbs nothing, never the reverse
+_SLACK = 1e-7
+
+
+def _may_absorb(
+    lat: np.ndarray, lon: np.ndarray, order: np.ndarray, radius_m: float
+) -> np.ndarray | None:
+    """Mask of candidates with a LATER candidate within the merge radius of
+    their own centroid, or None when the band is too dense to be worth it.
+
+    A hit needs ``d <= fixed_radius <= radius_m`` and ``d >= R·|Δlat|``, so
+    only pairs within ``radius_m / R`` of latitude can hit: sort by latitude,
+    take each candidate's window of higher-latitude neighbours by bisection
+    and test the pairs in vector passes.  ``order`` sorts ``lat``.
+    """
+    n = lat.size
+    slat = lat[order]
+    cut = radius_m / EARTH_MEAN_RADIUS / _DEG * (1.0 + _SLACK)
+    width = np.searchsorted(slat, slat + cut, side="right") - np.arange(n) - 1
+    ends = np.cumsum(width)
+    if ends[-1] > _MAX_PAIRS_PER_CANDIDATE * n:
+        return None
+    starts = ends - width
+    mask = np.zeros(n, dtype=bool)
+    lo = 0
+    while lo < n:
+        stop = int(np.searchsorted(ends, starts[lo] + _PAIRS_PER_PASS, side="right"))
+        hi = max(lo + 1, stop)
+        w = width[lo:hi]
+        # pair (a, b): a runs over sorted positions, b over a's window above it
+        a = np.repeat(np.arange(lo, hi), w)
+        b = a + 1 + np.arange(a.size) - np.repeat(starts[lo:hi] - starts[lo], w)
+        ia, ib = order[a], order[b]
+        d = _arc_np(lat[ia], lon[ia], lat[ib], lon[ib])
+        fr = radius_m * np.cos(((lat[ia] + lat[ib]) / 2.0) * _DEG)
+        hit = d <= fr * (1.0 + _SLACK) + _SLACK
+        mask[np.minimum(ia, ib)[hit]] = True
+        lo = hi
+    return mask
+
+
 def merge_clusters(
     candidates: list[Cluster],
     radius_m: float,
@@ -93,6 +152,14 @@ def merge_clusters(
     lon = np.array([c.lon for c in candidates], dtype=np.float64)
     cnt = np.array([c.doc_count for c in candidates], dtype=np.float64)
     visited = np.array([c.visited for c in candidates], dtype=bool)
+    order = np.argsort(lat, kind="stable")
+    slat = lat[order]
+    may_absorb = _may_absorb(lat, lon, order, radius_m)
+    # first-pass latitude band (see the scan below), and the bisection
+    # window around it, wide enough that no rounding of the window bounds
+    # can drop a candidate the exact band test keeps
+    lat_cut = radius_m * max(1.0, ratio) / EARTH_MEAN_RADIUS / _DEG  # degrees
+    window = lat_cut * (1.0 + _SLACK) + _SLACK
 
     final: list[Cluster] = []
     for i in range(n):
@@ -101,6 +168,11 @@ def merge_clusters(
         visited[i] = True
         bucket = candidates[i]
         blat, blon, bcnt = float(lat[i]), float(lon[i]), float(cnt[i])
+        if may_absorb is not None and not may_absorb[i]:
+            bucket.lat, bucket.lon, bucket.doc_count = blat, blon, int(bcnt)
+            bucket.visited = True
+            final.append(bucket)
+            continue
 
         def absorb(j: int) -> None:
             nonlocal blat, blon, bcnt
@@ -126,18 +198,18 @@ def merge_clusters(
         # overwhelming majority of far candidates WITHOUT changing any
         # decision: haversine(d) >= R·|Δlat|, a hit needs d <= fr <=
         # radius_m, and a ratio revisit needs d < ratio·fr — so |Δlat_rad| >
-        # radius_m·max(1, ratio)/R can be neither.  For world-scattered
-        # candidates this cuts the O(k²) trig work ~50x.
-        lat_cut = radius_m * max(1.0, ratio) / EARTH_MEAN_RADIUS / _DEG  # degrees
+        # radius_m·max(1, ratio)/R can be neither.  The band's members come
+        # from bisecting the latitude-sorted order, then return to
+        # collection order, so each step costs the band, not all k.
         revisit: list[int] = []
-        idx = np.flatnonzero(~visited[i + 1 :]) + i + 1
-        pos = 0
-        while pos < idx.size:
-            rest = idx[pos:]
-            near = np.flatnonzero(np.abs(lat[rest] - blat) <= lat_cut)
-            if near.size == 0:
+        last = i  # the scan resumes after the last absorbed candidate
+        while True:
+            lo, hi = np.searchsorted(slat, (blat - window, blat + window), side="left")
+            band = order[lo:hi]
+            band = np.sort(band[(band > last) & ~visited[band]])
+            cand = band[np.abs(lat[band] - blat) <= lat_cut]
+            if cand.size == 0:
                 break
-            cand = rest[near]  # order preserved => first hit is still first
             d = _arc_np(blat, blon, lat[cand], lon[cand])
             fr = radius_m * np.cos(((blat + lat[cand]) / 2.0) * _DEG)
             hit = d <= fr
@@ -153,8 +225,8 @@ def merge_clusters(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     rm = (fp > 0) & (dp / fp < ratio)
                 revisit.extend(int(j) for j in cand[:first][rm])
-            absorb(int(cand[first]))
-            pos += int(near[first]) + 1
+            last = int(cand[first])
+            absorb(last)
 
         # second pass (ratio): retry near-misses against the moved centroid,
         # in collection order, one at a time (the centroid keeps moving)

@@ -203,9 +203,9 @@ class InvertedIndex:
     """Reader over an index directory produced by plans.index_build.
 
     Point-in-time snapshot semantics (exactly an ES/Lucene ``IndexReader``):
-    stats, the tombstone set, the df cache AND the postings relation are all
-    pinned at ``open()``/first use — Spark snapshots the segment file
-    listing when the reader DataFrame is created, so index mutations
+    stats, the tombstone set, the df cache AND the postings and docmap
+    relations are all pinned at ``open()``/first use — Spark snapshots the
+    file listing when the reader DataFrame is created, so index mutations
     (``append_index`` / ``upsert_index`` / ``merge_segments``) on the same
     directory are NOT visible to an already-open reader, and compaction can
     leave it holding references to rewritten files.  After mutating the
@@ -223,6 +223,7 @@ class InvertedIndex:
     _deletes_checked: bool = False
     _deleted: DataFrame | None = None
     _postings_df: DataFrame | None = None
+    _docmap_df: DataFrame | None = None
     _decoded_cache: DataFrame | None = None
     _decoded_cache_terms: frozenset | None = None
     _gram_checked: bool = False
@@ -254,6 +255,7 @@ class InvertedIndex:
         self._deletes_checked = False
         self._deleted = None
         self._postings_df = None
+        self._docmap_df = None
         if self._decoded_cache is not None:
             self._decoded_cache.unpersist()
         self._decoded_cache = None
@@ -341,7 +343,12 @@ class InvertedIndex:
         return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
 
     def docmap(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        """The docmap relation, pinned per reader like :meth:`postings`: one
+        directory listing per point-in-time view, and docmap parts that a
+        later ``append_index`` adds stay invisible until :meth:`refresh`."""
+        if self._docmap_df is None:
+            self._docmap_df = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        return self._docmap_df
 
     def term_doc_rows(self, terms: list[str] | None = None, lucene_norms: bool = False) -> DataFrame:
         """Decoded posting stream: (term, doc_id, tf, dl).

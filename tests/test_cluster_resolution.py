@@ -4,7 +4,6 @@ the bucket-size caps that bound the LSH pair generators at scale."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from elasticsearch_aggregation_geoclustering_spark.extras import dedup, similarity
 
@@ -91,10 +90,10 @@ def test_cell_expr_out_of_range_raises(spark):
 
     bad = spark.createDataFrame([(181.0, 0.0)], "lon double, lat double")
     with pytest.raises(Exception, match="out of range"):
-        bad.select(cell_expr(F.col("lon"), F.col("lat"), 9)).collect()
+        bad.select(cell_expr("lon", "lat", 9)).collect()
     # NULL coordinates propagate (absent, not invalid)
     nul = spark.createDataFrame([(None, 10.0)], "lon double, lat double")
-    assert nul.select(cell_expr(F.col("lon"), F.col("lat"), 9).alias("c")).collect()[0]["c"] is None
+    assert nul.select(cell_expr("lon", "lat", 9).alias("c")).collect()[0]["c"] is None
 
 
 def test_dropped_bucket_stats_observability(spark):

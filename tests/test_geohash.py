@@ -148,9 +148,9 @@ def test_arc_distance_symmetry():
 
 def test_jvm_cell_expr_matches_numpy(spark):
     """The codegen bit-arithmetic encoder is bit-identical to the numpy one
-    for every precision 1..11, on edge and random coordinates."""
+    for every precision 1..11, on edge and random coordinates — as one
+    Column and as the staged projections the clustering plan uses."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from elasticsearch_aggregation_geoclustering_spark.geo import geohash_expr
     from elasticsearch_aggregation_geoclustering_spark.geo.geohash import long_encode
@@ -171,21 +171,23 @@ def test_jvm_cell_expr_matches_numpy(spark):
         got = [
             r["k"]
             for r in df.select(
-                geohash_expr.cell_expr(F.col("lon"), F.col("lat"), precision).alias("k")
+                geohash_expr.cell_expr("lon", "lat", precision).alias("k")
             ).collect()
         ]
         expect = long_encode(lons, lats, precision).tolist()
         assert got == expect, f"precision {precision}"
+        staged = geohash_expr.with_cell_column(df, "lon", "lat", precision, "k")
+        assert staged.columns == ["lon", "lat", "k"]
+        assert [r["k"] for r in staged.collect()] == expect, f"staged precision {precision}"
 
 
 def test_jvm_cell_expr_rejects_precision_12():
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
     from elasticsearch_aggregation_geoclustering_spark.geo import geohash_expr
 
     with _pytest.raises(ValueError):
-        geohash_expr.cell_expr(F.col("lon"), F.col("lat"), 12)
+        geohash_expr.cell_expr("lon", "lat", 12)
 
 
 def test_geo_distance_filter_matches_numpy(spark):

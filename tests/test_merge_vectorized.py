@@ -9,6 +9,7 @@ import pytest
 
 from elasticsearch_aggregation_geoclustering_spark.operators.merge import (
     Cluster,
+    _may_absorb,
     merge_clusters,
     merge_clusters_reference,
 )
@@ -45,6 +46,47 @@ def test_vectorized_matches_reference(seed, ratio):
         assert g.cells == w.cells
         assert g.lat == pytest.approx(w.lat, abs=1e-12)
         assert g.lon == pytest.approx(w.lon, abs=1e-12)
+
+
+def _clumped_candidates(rng: np.random.Generator, n: int, radius_m: float) -> list[Cluster]:
+    """World-scattered candidates plus small clumps a radius wide, and
+    near-misses just past it, so some anchors absorb, some only come close
+    (ratio revisits) and most have no neighbour at all."""
+    deg = radius_m / 111_195.0
+    lats = rng.uniform(-80, 80, n)
+    lons = rng.uniform(-179, 179, n)
+    near = rng.random(n) < 0.3
+    src = rng.integers(0, max(1, n // 10), n)
+    step = deg * rng.choice([0.3, 0.9, 1.1], n)
+    lats = np.where(near, lats[src] + step * rng.choice([-1, 1], n), lats)
+    lons = np.where(near, lons[src], lons)
+    counts = rng.integers(1, 50, n)
+    cells = np.sort(rng.choice(10**9, size=n, replace=False))[::-1]
+    return [
+        Cluster(cell=int(c), lat=float(la), lon=float(lo), doc_count=int(dc))
+        for c, la, lo, dc in zip(cells, lats, lons, counts)
+    ]
+
+
+@pytest.mark.parametrize("seed", range(6))
+@pytest.mark.parametrize("ratio", [0.0, 1.2])
+def test_absorb_prepass_matches_reference(seed, ratio):
+    """Anchors the pre-pass proves unable to absorb skip the exact scan; the
+    result stays bit-identical to the reference loop."""
+    rng = np.random.default_rng(100 + seed)
+    n = int(rng.integers(300, 601))
+    radius_m = float(rng.uniform(5_000, 60_000))
+    cands = _clumped_candidates(rng, n, radius_m)
+    lat = np.array([c.lat for c in cands])
+    lon = np.array([c.lon for c in cands])
+    may = _may_absorb(lat, lon, np.argsort(lat, kind="stable"), radius_m)
+    assert may is not None and 0 < may.sum() < n  # some anchors are skipped
+    got = merge_clusters(copy.deepcopy(cands), radius_m, ratio)
+    want = merge_clusters_reference(copy.deepcopy(cands), radius_m, ratio)
+    assert [(c.cell, c.doc_count, c.cells, c.lat, c.lon) for c in got] == [
+        (c.cell, c.doc_count, c.cells, c.lat, c.lon) for c in want
+    ]
+    assert len(got) < n  # merges happened
 
 
 def test_empty_and_single():

@@ -195,12 +195,17 @@ def test_multi_match_persist_releases_and_scores_match(spark):
     docs = spark.createDataFrame(
         [(i, t, t[:10]) for i, t in DOCS], "doc_id long, text string, title string"
     )
-    # snapshot the shared session's persistent-RDD count: earlier tests'
+    # snapshot the shared session's persistent-RDD ids: earlier tests'
     # dropped caches are reclaimed by the ContextCleaner on GC time, so an
     # absolute ==0 is order/GC-dependent — the hygiene contract is that THIS
-    # call adds nothing
-    jsc = spark.sparkContext._jsc.sc()
-    persisted_before = jsc.getPersistentRDDs().size()
+    # call adds nothing (comparing sizes would let a new cache hide behind
+    # an old one the cleaner reclaimed meanwhile)
+    jsc = spark.sparkContext._jsc
+
+    def persisted_ids() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    persisted_before = persisted_ids()
     got = _bits(
         (r["doc_id"], r["score"])
         for r in multimatch.multi_match_best_fields(
@@ -216,4 +221,4 @@ def test_multi_match_persist_releases_and_scores_match(spark):
     assert got == again and len(got) > 0
     # the query-scoped persist must be released (snapshot hygiene: a long
     # session running many multi_match queries must not accumulate caches)
-    assert jsc.getPersistentRDDs().size() <= persisted_before
+    assert persisted_ids() <= persisted_before

@@ -71,6 +71,18 @@ def test_append_index_matches_union(spark, corpus, tmp_path_factory):
     assert min(i for i in ids if i >= 120) >= base
 
 
+def test_docmap_pinned_until_refresh(spark, corpus, tmp_path_factory):
+    """An open reader's docmap is a point-in-time view: an append's docmap
+    parts stay invisible to it until refresh()."""
+    d = str(tmp_path_factory.mktemp("docmap_pit"))
+    build_index(spark, spark.createDataFrame(corpus.iloc[:120]), d, docs_per_segment=DPS)
+    idx = InvertedIndex.open(spark, d)
+    assert idx.docmap().count() == 120
+    append_index(spark, spark.createDataFrame(corpus.iloc[120:]), d)
+    assert idx.docmap().count() == 120
+    assert idx.refresh().docmap().count() == 200
+
+
 def test_append_to_missing_index_builds(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fresh"))
     stats = append_index(spark, spark.createDataFrame(corpus.iloc[:50]), d)
