@@ -8,9 +8,8 @@ entirely from geo_cell_aggregate's plan.
 
 Valid for precision 1..11: at level 12 the packed key uses bit 63 and the
 signed-long shifts would need extra care, so that (rare, max-zoom) case
-stays on the Arrow/numpy path.  Out-of-range coordinates produce undefined
-keys here (the numpy path raises); callers own range-filtering, which the
-reference's mapper enforces at index time anyway.
+stays on the Arrow/numpy path.  Out-of-range and NaN coordinates raise at
+execution time, as the numpy path does; NULL coordinates yield a NULL key.
 
 The expressions are written as SQL text and parsed JVM-side: building the
 same tree from ``pyspark.sql.functions`` calls costs one py4j round trip
@@ -107,24 +106,20 @@ def _check_precision(precision: int) -> None:
         raise ValueError(f"JVM cell keys support precision 1..11: {precision}")
 
 
-def cell_expr(lon_col: str, lat_col: str, precision: int, *, validate: bool = True) -> Column:
+def cell_expr(lon_col: str, lat_col: str, precision: int) -> Column:
     """``Geohash.longEncode(lon, lat, precision)`` as a codegen-able Column
     over the named coordinate columns.
 
     Bit-identical to geo.geohash.long_encode for precision 1..11.
 
-    With ``validate`` (default) an out-of-range or NaN coordinate raises at
-    execution time instead of silently producing an undefined cell key — the
-    same failure mode as the Arrow/numpy path at precision 12, and the loud
-    analog of the range check ES's geo_point mapper applies at index time.
-    A NULL coordinate yields a NULL key (an absent value, not an invalid
-    one — the reference skips docs with no value, and the raw expression
-    would otherwise silently encode NULL as the +edge cell because Spark's
-    ``least`` SKIPS nulls).  The guard is a codegen'd CASE branch — set
-    ``validate=False`` only when the input is already range-checked and
-    null-free upstream and the branch shows up in a profile; the unvalidated
-    expression maps NULL to the +edge cell and out-of-range to undefined
-    keys.
+    An out-of-range or NaN coordinate raises at execution time instead of
+    silently producing an undefined cell key — the same failure mode as the
+    Arrow/numpy path at precision 12, and the loud analog of the range check
+    ES's geo_point mapper applies at index time.  A NULL coordinate yields a
+    NULL key (an absent value, not an invalid one — the reference skips docs
+    with no value, and the raw expression would otherwise silently encode
+    NULL as the +edge cell because Spark's ``least`` SKIPS nulls).  The
+    guard is a codegen'd CASE branch.
 
     The single-expression form textually expands each spread step's input
     twice (2^5-fold); prefer :func:`with_cell_column` on hot paths.
@@ -137,10 +132,7 @@ def cell_expr(lon_col: str, lat_col: str, precision: int, *, validate: bool = Tr
     for shift, mask in _SPREAD_STEPS:
         lat_bits = _spread_sql(lat_bits, shift, mask)
         lon_bits = _spread_sql(lon_bits, shift, mask)
-    key = _key_sql(lat_bits, lon_bits, precision)
-    if validate:
-        key = f"{key} + ({_validator_sql(lon, lat)})"
-    return F.expr(key)
+    return F.expr(f"{_key_sql(lat_bits, lon_bits, precision)} + ({_validator_sql(lon, lat)})")
 
 
 def with_cell_column(
@@ -149,8 +141,6 @@ def with_cell_column(
     lat_col: str,
     precision: int,
     out_col: str = "cell",
-    *,
-    validate: bool = True,
 ):
     """``cell_expr`` as STAGED projections: same bits, linear-size codegen.
 
@@ -181,7 +171,5 @@ def with_cell_column(
             f"{_spread_sql(tlon, shift, mask)} AS {_name(nlon)}",
         )
         tlat, tlon = _name(nlat), _name(nlon)
-    key = _key_sql(tlat, tlon, precision)
-    if validate:
-        key = f"{key} + ({_validator_sql(lon, lat)})"
+    key = f"{_key_sql(tlat, tlon, precision)} + ({_validator_sql(lon, lat)})"
     return df.withColumn(out_col, F.expr(key)).drop(*[c for pair in temps for c in pair])

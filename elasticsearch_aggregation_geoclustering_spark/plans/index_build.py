@@ -4,17 +4,19 @@ The Spark-first shape of Elasticsearch's bulk-index path (SURVEY.md §3.2),
 designed so the LARGE column (``content``) is read once, never shuffled, and
 never persisted — everything global rides key-only column-pruned jobs:
 
-1. **deterministic key buckets** — two cheap jobs over ONLY the natural-key
-   columns (Catalyst prunes ``content`` out of both scans): a fixed-seed
-   sample picks ~equi-depth key boundaries on the driver, and a
-   ``groupBy(bucket).count()`` yields exact per-bucket row counts.  The
-   bucket is a PURE FUNCTION of the key (a chain of struct comparisons
-   against literal boundaries), so — unlike ``repartitionByRange``'s
-   per-action sampled boundaries — every job in the build sees the same
-   assignment without persisting anything.  Cumulative bucket counts give
-   each bucket's starting docID; docIDs depend only on the global key order,
-   never on where boundaries fall, so ids are identical across runs and
-   parallelism levels (resume-stable).
+1. **deterministic key buckets** (``_rank_plan``) — two cheap jobs over
+   ONLY the natural-key columns (Catalyst prunes ``content`` out of both
+   scans), no sampling: one aggregation reads the count and the min/max of
+   an order-preserving key encoding, and a ``groupBy(fine bucket).count()``
+   over a prefix of that encoding yields exact counts the driver packs into
+   balanced buckets.  The bucket is a PURE FUNCTION of the key (a chain of
+   comparisons against literal boundaries), so — unlike
+   ``repartitionByRange``'s per-action sampled boundaries — every job in the
+   build sees the same assignment without persisting anything.  Cumulative
+   bucket counts give each bucket's starting docID; docIDs depend only on
+   the global key order, never on where boundaries fall, so ids are
+   identical across runs and parallelism levels (resume-stable).  Appends
+   and upserts plan their batch through the same two jobs.
 2. **tokenize placement is a measured choice** (``pack_before_shuffle``):
    by default tokenization runs fused inside the segment builder (one Python
    stage per doc — fastest when Python CPU is the bottleneck, e.g. local
@@ -49,7 +51,7 @@ Resumability (north_rule): completed segment ids are recorded in
 atomically with deterministic bytes and sha256 recorded
 (tests/test_index_build.py asserts byte-identical resume).
 
-Scale notes: the bucket expression is O(#buckets) struct comparisons per row
+Scale notes: the bucket expression is O(#buckets) comparisons per row
 (#buckets = 2·partitions); at many thousands of target partitions switch the
 assignment to a range-join against a broadcast boundary table instead.  The
 two key-only jobs are metadata-cheap on columnar sources at any scale.
@@ -98,7 +100,8 @@ def _sample_key_boundaries(
     n_buckets: int,
     seed: int = 42,
 ) -> list[tuple]:
-    """~Equi-depth key boundaries from a fixed-seed key-only sample.
+    """~Equi-depth key boundaries from a fixed-seed key-only sample —
+    ``_rank_plan``'s fallback for keys its string encoding cannot order.
 
     Returns at most ``n_buckets - 1`` strictly increasing key tuples; rows
     with key <= boundaries[i] (and > boundaries[i-1]) fall in bucket i.
@@ -226,6 +229,12 @@ _PROXY_BYTES = 7
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
+def _text_misorders(dtype: str) -> bool:
+    """Fractional types, whose string form does not sort in value order
+    (as text ``"-1.5" < "-10.0"`` and ``"9.5" > "10.5"``)."""
+    return dtype in ("float", "double") or dtype.startswith("decimal")
+
+
 def _encoded_key_expr(key_cols: tuple[str, ...], dtypes: dict[str, str]) -> Column:
     """Order-preserving string encoding of the key tuple.
 
@@ -283,10 +292,14 @@ def _pack_fine_counts(
 
 
 def _rank_plan(
-    df: DataFrame, key_cols: tuple[str, ...], num_partitions: int
-) -> tuple[Column, dict[int, int], int]:
+    df: DataFrame,
+    key_cols: tuple[str, ...],
+    num_partitions: int,
+    *,
+    content_col: str | None = None,
+) -> tuple[Column, dict[int, int], int, dict | None]:
     """The docID pre-plan: (bucket expression, exact per-bucket counts,
-    n_docs) in exactly TWO key-only jobs, no sampling.
+    n_docs, batch fingerprint) in exactly TWO key-only jobs, no sampling.
 
     Job 1 is one aggregation (count + min/max encoded key + per-int-column
     min); job 2 counts rows per fine proxy bucket (≤ 2^16 groups) and the
@@ -294,14 +307,32 @@ def _rank_plan(
     docIDs are invariant to where the boundaries fall — the bucket is
     monotone in key and offsets are exact prefix counts, so
     ``offset[bucket] + within-bucket key rank`` IS the global key rank
-    regardless of balance.  Negative integer keys break the zero-pad
-    encoding's order, so they fall back to the legacy sampled-bounds path
-    (one extra sample job) — same docIDs either way.
+    regardless of balance.  Keys the zero-pad string encoding cannot order
+    (negative integers, NUL inside a string, float/double/decimal columns)
+    fall back to sampled bounds (one extra sample job) — same docIDs either
+    way.
+
+    With ``content_col`` (appends and upserts) job 1 also folds the
+    append-ledger fingerprint: ``n_docs``, struct ``min_key``/``max_key``,
+    ``key_xor`` = ``bit_xor(xxhash64(*key_cols))`` and ``content_xor`` =
+    ``bit_xor(xxhash64(*key_cols, content))`` (the one aggregate that reads
+    the content column).  Without it the fourth element is None and the jobs
+    stay key-only.
     """
     dtypes = dict(df.dtypes)
     enc = _encoded_key_expr(key_cols, dtypes)
     int_cols = [c for c in key_cols if dtypes[c] in _INT_TYPES]
     str_cols = [c for c in key_cols if dtypes[c] not in _INT_TYPES]
+    ledger_aggs = []
+    if content_col is not None:
+        keys = [F.col(c) for c in key_cols]
+        ks = _key_struct(key_cols)
+        ledger_aggs = [
+            F.min(ks).alias("_kmin"),
+            F.max(ks).alias("_kmax"),
+            F.bit_xor(F.xxhash64(*keys)).alias("_kxor"),
+            F.bit_xor(F.xxhash64(*keys, F.col(content_col))).alias("_cxor"),
+        ]
     # a NUL inside a key string would collide with the encoding's column
     # separator (breaking tuple-order monotonicity) — detect in the same agg
     nul_checks = [F.instr(F.col(c).cast("string"), "\x00") for c in str_cols]
@@ -328,18 +359,30 @@ def _rank_plan(
         nul_probe.alias("_nul"),
         null_key_probe.alias("_nullkey"),
         *[F.min(F.col(c)).alias(f"_imin_{c}") for c in int_cols],
+        *ledger_aggs,
     ).collect()[0]
     n_docs = int(row["_n"])
     if n_docs == 0:
-        return F.lit(0).cast("int"), {}, 0
+        return F.lit(0).cast("int"), {}, 0, None
     if (row["_nullkey"] or 0) > 0:
         raise ValueError(
             f"key columns {list(key_cols)} contain NULL values: docID "
             "assignment requires a total order over non-null unique keys — "
             "filter or fill the key columns before indexing"
         )
-    needs_fallback = (row["_nul"] or 0) > 0 or any(
-        row[f"_imin_{c}"] is not None and row[f"_imin_{c}"] < 0 for c in int_cols
+    fp = None
+    if content_col is not None:
+        fp = {
+            "n_docs": n_docs,
+            "min_key": list(row["_kmin"]),
+            "max_key": list(row["_kmax"]),
+            "key_xor": int(row["_kxor"]),
+            "content_xor": int(row["_cxor"]),
+        }
+    needs_fallback = (
+        (row["_nul"] or 0) > 0
+        or any(row[f"_imin_{c}"] < 0 for c in int_cols)
+        or any(_text_misorders(dtypes[c]) for c in str_cols)
     )
     if needs_fallback:
         bounds = _sample_key_boundaries(df, key_cols, n_docs, 2 * num_partitions)
@@ -351,7 +394,7 @@ def _rank_plan(
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
-        return bexpr, counts, n_docs
+        return bexpr, counts, n_docs, fp
     prefix_len = len(os.path.commonprefix([row["_min"].encode(), row["_max"].encode()]))
     fine = _fine_bucket_expr(enc, prefix_len)
     fine_counts = {
@@ -365,7 +408,7 @@ def _rank_plan(
     bexpr: Column = F.lit(0)
     for b in bounds:
         bexpr = bexpr + (fine > F.lit(b)).cast("int")
-    return bexpr.cast("int"), counts, n_docs
+    return bexpr.cast("int"), counts, n_docs, fp
 
 
 def assign_doc_ids(
@@ -380,18 +423,9 @@ def assign_doc_ids(
     boundaries).
     """
     num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    bexpr, counts, _ = _rank_plan(df, key_cols, num_partitions)
+    bexpr, counts, _, _ = _rank_plan(df, key_cols, num_partitions)
     offsets = _bucket_offsets(counts)
-    # hash exchange on a driver-planned slot (see _partition_slot_expr): same
-    # contiguous-bucket placement as repartitionByRange, WITHOUT its
-    # boundary-sampling job (a second full pass over the input)
-    ranged = (
-        df.withColumn("_b", bexpr)
-        .withColumn("_slot", _partition_slot_expr(counts, num_partitions))
-        .repartition(num_partitions, F.col("_slot"))
-        .drop("_slot")
-        .sortWithinPartitions("_b", *[F.col(c) for c in key_cols])
-    )
+    ranged = _slot_exchange(df, bexpr, counts, num_partitions, key_cols)
     out_cols = [c for c in df.columns]
     schema = ", ".join(
         ["doc_id long"] + [f"`{n}` {t}" for n, t in ranged.drop("_b").dtypes]
@@ -408,6 +442,30 @@ def assign_doc_ids(
             yield pdf
 
     return ranged.mapInPandas(run, schema).select("doc_id", *out_cols)
+
+
+def _slot_exchange(
+    df: DataFrame,
+    bexpr: Column,
+    counts: dict[int, int],
+    num_partitions: int,
+    key_cols: tuple[str, ...],
+) -> DataFrame:
+    """Add the bucket column ``_b`` and route whole buckets to partitions.
+
+    A hash exchange on a driver-planned slot (see _partition_slot_expr): the
+    same contiguous-bucket placement as ``repartitionByRange``, WITHOUT its
+    boundary-sampling job, which would re-run the whole child plan (scan +
+    sha256, + tokenize/pack in pack mode) once more over every row.  Rows
+    come out sorted by (bucket, key) within each partition.
+    """
+    return (
+        df.withColumn("_b", bexpr)
+        .withColumn("_slot", _partition_slot_expr(counts, num_partitions))
+        .repartition(num_partitions, F.col("_slot"))
+        .drop("_slot")
+        .sortWithinPartitions("_b", *[F.col(c) for c in key_cols])
+    )
 
 
 def _assign_ids_for_batch(
@@ -695,7 +753,6 @@ def build_index(
     resume: bool = True,
     num_partitions: int | None = None,
     pack_before_shuffle: bool = False,
-    n_docs_hint: int | None = None,
     index_options: str = "positions",
 ) -> dict:
     """Build (or resume) the inverted index; returns the stats dict.
@@ -733,21 +790,13 @@ def build_index(
     if manifest is not None:
         docs_per_segment = manifest.docs_per_segment
         index_options = manifest.index_options
-    with_positions = index_options == "positions"
 
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
     # TWO key-only pre-jobs total (content pruned out of both scans), no
     # sampling: one agg for count + min/max key, one exact fine-bucket count
-    # -> literal boundaries + exact offsets (see _rank_plan).  n_docs_hint is
-    # retained for API compatibility; the count now rides the first agg for
-    # free, so the hint changes nothing.
-    bexpr, counts, n_docs = _rank_plan(docs, key_cols, num_partitions)
-    if n_docs_hint is not None and n_docs_hint != n_docs:
-        warnings.warn(
-            f"build_index: n_docs_hint={n_docs_hint} != measured {n_docs}; using measured"
-        )
-    offsets = _bucket_offsets(counts)
+    # -> literal boundaries + exact offsets (see _rank_plan)
+    bexpr, counts, n_docs, _ = _rank_plan(docs, key_cols, num_partitions)
 
     if manifest is None:
         manifest = IndexManifest(
@@ -759,348 +808,64 @@ def build_index(
         save_manifest(index_dir, manifest)
 
     # a crash can leave interior manifest parts not yet folded into
-    # manifest.json — both count as claimed, but a segment is only DONE if
-    # its artifacts actually exist on disk (a deleted/corrupt segment gets
-    # rebuilt even when still listed)
+    # manifest.json — both count as claimed (see _done_segments)
     parts = seg_store.load_manifest_parts(index_dir) if resume else {}
     claimed = manifest.completed_segment_ids() | {int(k) for k in parts}
-    done = frozenset(
-        sid
-        for sid in claimed
-        if os.path.exists(seg_store.segment_postings_path(index_dir, sid))
-        and os.path.exists(seg_store.docmap_part_path(index_dir, sid))
-    )
+    done = _done_segments(index_dir, claimed)
     stale = {str(s) for s in claimed - done}
     if stale:
         manifest.segments = {k: v for k, v in manifest.segments.items() if k not in stale}
         parts = {k: v for k, v in parts.items() if k not in stale}
 
     if len(done) < max(1, manifest.num_segments_expected):
-        dm_cols = tuple([*key_cols, *docmap_cols])
-        # sha256 JVM-side so the python workers never hash
-        work = docs.select(*key_cols, *docmap_cols, content_col).withColumn(
-            "sha256", F.sha2(F.col(content_col).cast("binary"), 256)
+        _write_segments(
+            docs, index_dir, manifest, bexpr, counts, _bucket_offsets(counts), done,
+            content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
+            num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
         )
-        if pack_before_shuffle:
-            packed_fields = (
-                ["terms_blob string", "codes_pk binary", "n_terms long", "dl long"]
-                if with_positions
-                else ["terms_blob string", "tfs_vb binary", "n_terms long"]
-            )
-            pack_schema = ", ".join(
-                [f"`{n}` {t}" for n, t in work.drop(content_col).dtypes] + packed_fields
-            )
-            work = work.mapInPandas(
-                _pack_fn(content_col, [*dm_cols, "sha256"], with_positions), pack_schema
-            )
-        # hash exchange on a driver-planned slot: identical placement to
-        # repartitionByRange (contiguous balanced buckets per partition)
-        # minus the range-boundary SAMPLING job, which re-ran this whole
-        # child — scan + sha256 (+ tokenize/pack in pack mode) — once more
-        # over every row (guide §2.4: remove shuffles/passes outright)
-        ranged = (
-            work.withColumn("_b", bexpr)
-            .withColumn("_slot", _partition_slot_expr(counts, num_partitions))
-            .repartition(num_partitions, F.col("_slot"))
-            .drop("_slot")
-            .sortWithinPartitions("_b", *[F.col(c) for c in key_cols])
-        )
-        frag_schema = ", ".join(
-            ["doc_id long"]
-            + [f"`{n}` {t}" for n, t in ranged.drop("_b").dtypes]
-            + ["seg_id long"]
-        )
-        frags = ranged.mapInPandas(
-            _partition_builder_fn(
-                index_dir, offsets, docs_per_segment, content_col, dm_cols, done,
-                with_positions,
-            ),
-            frag_schema,
-        )
-        # the ONE full-data job: interior segments are written as side
-        # effects inside the partitions above; only boundary rows reach this
-        # tiny shuffle (≲ 2·docs_per_segment rows per partition)
-        frag_rows = (
-            frags.groupBy("seg_id")
-            .applyInPandas(
-                _build_segment_fn(index_dir, content_col, dm_cols, with_positions),
-                SEGMENT_MANIFEST_SPARK_SCHEMA,
-            )
-            .collect()
-        )
-        for row in frag_rows:
-            manifest.segments[str(row["seg_id"])] = row.asDict()
         parts = seg_store.load_manifest_parts(index_dir)
+    return _commit(spark, index_dir, manifest, parts)
 
-    for sid, meta in parts.items():
-        manifest.segments.setdefault(sid, meta)
-    save_manifest(index_dir, manifest)
 
-    # global term stats: one input row per distinct (term, segment) — the
-    # parquet scan is pruned to (term, df); partial aggregation collapses hot
-    # terms map-side, so no skewed reducer.
-    postings = spark.read.parquet(seg_store.segments_glob(index_dir))
-    term_stats_dir = os.path.join(index_dir, "term_stats")
-    # the groupBy's exchange already hash-partitions by term, so the write
-    # rides THAT partitioning: each file is term-sorted (row-group min/max
-    # stats prune point lookups within every file) and AQE sizes the file
-    # count from the data.  The earlier repartitionByRange(term) bought
-    # cross-file range disjointness at the price of a SECOND exchange plus
-    # its boundary-sampling job (one more full pass over the aggregated
-    # dictionary) — per-lookup cost is a footer-stats check per file either
-    # way, so the extra exchange was pure overhead.
-    (
-        postings.groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(term_stats_dir)
+def _done_segments(index_dir: str, claimed: set[int]) -> frozenset[int]:
+    """The claimed segments a resumed write skips: a segment is only DONE
+    when its postings file and its docmap part both exist on disk (a
+    deleted/corrupt segment gets rebuilt even when the manifest lists it)."""
+    return frozenset(
+        sid
+        for sid in claimed
+        if os.path.exists(seg_store.segment_postings_path(index_dir, sid))
+        and os.path.exists(seg_store.docmap_part_path(index_dir, sid))
     )
 
-    n_docs_total = sum(m["n_docs"] for m in manifest.segments.values())
-    total_tokens = sum(m["total_tokens"] for m in manifest.segments.values())
-    stats = {
-        "n_docs": int(n_docs_total),
-        "total_tokens": int(total_tokens),
-        "avgdl": (total_tokens / n_docs_total) if n_docs_total else 0.0,
-        "n_segments": len(manifest.segments),
-        "tokenizer_version": manifest.tokenizer_version,
-        "index_options": manifest.index_options,
-    }
-    save_stats(index_dir, stats)
-    return stats
 
-
-def append_index(
-    spark: SparkSession,
+def _write_segments(
     docs: DataFrame,
     index_dir: str,
+    manifest: IndexManifest,
+    bexpr: Column,
+    counts: dict[int, int],
+    offsets: dict[int, int],
+    done: frozenset[int],
     *,
-    content_col: str = "content",
-    key_cols: tuple[str, ...] = ("repo", "path", "commit"),
-    docmap_cols: tuple[str, ...] = (),
-    num_partitions: int | None = None,
-    pack_before_shuffle: bool = False,
-    n_docs_hint: int | None = None,
-    batch_id: int | None = None,
-    content_xor: int | None = None,
-    allow_key_reuse: bool = False,
-) -> dict:
-    """Append a batch of NEW documents to an existing index (ES ``_bulk``).
+    content_col: str,
+    key_cols: tuple[str, ...],
+    docmap_cols: tuple[str, ...],
+    num_partitions: int,
+    pack_before_shuffle: bool,
+) -> None:
+    """The ONE full-data job, shared by ``build_index`` and ``append_index``:
+    build every segment of ``docs`` not in ``done``, with docIDs
+    ``offsets[bucket] + key rank`` (``bexpr``/``counts`` from _rank_plan).
 
-    Elasticsearch indexing is incremental: each refresh adds small segments
-    and background merges compact them.  Same shape here: the batch gets
-    fresh docIDs starting at the next segment boundary after the existing
-    maximum (``base_sid·docs_per_segment`` — the gap of < docs_per_segment
-    unused ids keeps the segment-range invariant without rewriting the last
-    partial segment), builds its own segments with the same deterministic
-    bucket machinery, and the global term stats are recomputed from the
-    per-segment df rows (tiny).  Compact with ``merge_segments`` when small
-    segments accumulate.
-
-    Append-only semantics: keys are assumed NEW (no upsert — dedupe upstream,
-    e.g. dedup.dedup_exact).  Batches are resumable AND idempotent: the
-    manifest's append ledger records each batch's exact fingerprint
-    (n_docs, min/max key) with its reserved base segment id, so a killed
-    append re-run completes only the missing segments byte-identically, and
-    an at-least-once redelivery (foreachBatch retry) is a no-op — without
-    the ledger, a resume would recompute the id base from its own half-built
-    segments and duplicate the batch under shifted ids.
-
-    Batch identity beyond keys: the key-only fingerprint cannot tell a
-    REPLAY of a batch from a NEW batch that legitimately reuses the same
-    key set (``upsert_index``'s update path).  Two optional disambiguators,
-    recorded in the ledger entry when provided:
-
-    - ``batch_id``: an external batch identity.  Structured Streaming's
-      ``foreachBatch`` guarantees a redelivered micro-batch reuses the same
-      ``batch_id``, so identical keys + a DIFFERENT batch_id is a new batch
-      (gets a fresh base_sid), identical batch_id is a replay (resumes).
-    - ``content_xor``: an order-insensitive 64-bit fold of
-      ``xxhash64(*key_cols, content)`` over the batch, for ad-hoc callers
-      with no external identity (``upsert_index`` computes it when no
-      batch_id is given).  Same keys + different content ⇒ different xor ⇒
-      new batch.  When the caller supplies NEITHER, append_index folds it
-      itself in the fingerprint pass (reading content there once) so every
-      ledger entry carries content identity — otherwise a later upsert of
-      the exact same key set could not tell replay from re-upsert and would
-      silently drop the update.
-
-    ``allow_key_reuse=True`` (set by ``upsert_index``) additionally relaxes
-    the keys-globally-unique contract: a (n, min, max)-colliding entry with
-    a different ``key_xor`` is treated as a distinct batch instead of an
-    error, because upserted key sets may legitimately overlap old ones.
+    Interior segments are written as side effects inside the partitions
+    (each leaves a manifest part); only boundary rows reach the tiny
+    ``groupBy(seg_id)`` fragment shuffle (≲ 2·docs_per_segment rows per
+    partition), whose lineage rows land in ``manifest.segments``.
     """
-    manifest = load_manifest(index_dir)
-    if manifest is None:
-        return build_index(
-            spark,
-            docs,
-            index_dir,
-            content_col=content_col,
-            key_cols=key_cols,
-            docmap_cols=docmap_cols,
-            num_partitions=num_partitions,
-            pack_before_shuffle=pack_before_shuffle,
-            n_docs_hint=n_docs_hint,
-        )
-    docs_per_segment = manifest.docs_per_segment
     with_positions = manifest.index_options == "positions"
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-
-    n_new = n_docs_hint if n_docs_hint is not None else docs.select(*key_cols).count()
-    if n_new == 0:
-        return load_stats(index_dir)
-    bounds = _sample_key_boundaries(docs, key_cols, n_new, 2 * num_partitions)
-    bexpr = _bucket_column(key_cols, bounds, dict(docs.dtypes))
-    ks = _key_struct(key_cols)
-    # content identity: when the caller did not supply a content_xor, fold
-    # one into this same fingerprint pass (bit_xor is associative and
-    # commutative, so XOR of per-bucket folds equals upsert_index's
-    # whole-frame fold bit for bit).  Recording it on EVERY ledger entry is
-    # what lets a later upsert of the exact same key set distinguish
-    # replay from re-upsert — without it, upsert_index._is_replay degrades
-    # to key identity and silently drops the update.  Cost: this scan then
-    # reads the content column once; pass content_xor explicitly to skip.
-    fold_content = content_xor is None
-    count_rows = (
-        docs.select(
-            bexpr.alias("_b"),
-            ks.alias("_k"),
-            F.xxhash64(*[F.col(c) for c in key_cols]).alias("_kh"),
-            *(
-                [
-                    F.xxhash64(
-                        *[F.col(c) for c in key_cols], F.col(content_col)
-                    ).alias("_ch")
-                ]
-                if fold_content
-                else []
-            ),
-        )
-        .groupBy("_b")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min("_k").alias("kmin"),
-            F.max("_k").alias("kmax"),
-            *([F.bit_xor(F.col("_ch")).alias("cxor")] if fold_content else []),
-            # order-insensitive 64-bit fold of every key in the bucket: the
-            # same key-only scan (content still pruned), but the ledger match
-            # now distinguishes batches that agree on (n, min, max) while
-            # differing in interior keys.  Content is deliberately NOT folded
-            # in — that would force a second full content read per append;
-            # same-key-different-content is a violation of the keys-globally-
-            # unique contract and is surfaced by the replay warning below.
-            F.bit_xor(F.col("_kh")).alias("kxor"),
-            # same non-null-keys contract as _rank_plan, same free ride on
-            # the existing key-only aggregation
-            F.max(
-                F.greatest(*[F.col(f"_k.{c}").isNull().cast("int") for c in key_cols])
-                if len(key_cols) > 1
-                else F.col(f"_k.{key_cols[0]}").isNull().cast("int")
-            ).alias("knull"),
-        )
-        .collect()
-    )
-    if not count_rows:  # hint said rows exist but the batch is actually empty
-        return load_stats(index_dir)
-    if any((r["knull"] or 0) > 0 for r in count_rows):
-        raise ValueError(
-            f"key columns {list(key_cols)} contain NULL values: docID "
-            "assignment requires a total order over non-null unique keys — "
-            "filter or fill the key columns before indexing"
-        )
-    counts = {r["_b"]: r["cnt"] for r in count_rows}
-    n_new = sum(counts.values())
-    key_xor = 0
-    for r in count_rows:
-        key_xor ^= int(r["kxor"])
-    if fold_content:
-        cx = 0
-        for r in count_rows:
-            cx ^= int(r["cxor"])
-        content_xor = cx
-    batch_fp = {
-        "n_docs": int(n_new),
-        "min_key": list(min(tuple(r["kmin"]) for r in count_rows)),
-        "max_key": list(max(tuple(r["kmax"]) for r in count_rows)),
-        "key_xor": key_xor,
-    }
-
-    # the ledger makes resumes/replays id-stable: a killed or re-delivered
-    # batch MUST NOT recompute base_sid from the segments it already half
-    # wrote (that would shift every remaining doc's id and duplicate docs).
-    # Keys are globally unique by contract, so an identical (n, min, max,
-    # key_xor) fingerprint identifies the same batch.
-    existing = manifest.completed_segment_ids() | {
-        int(k) for k in seg_store.load_manifest_parts(index_dir)
-    }
-    _legacy = ("n_docs", "min_key", "max_key")
-    prior = None
-    for e in manifest.appends:
-        if not all(e[k] == batch_fp[k] for k in _legacy):
-            continue
-        if e.get("key_xor") is not None and e["key_xor"] != batch_fp["key_xor"]:
-            if allow_key_reuse:
-                continue  # upsert: a distinct batch colliding on (n,min,max)
-            raise ValueError(
-                "append batch matches a prior ledger entry on (n_docs, min_key,"
-                f" max_key) but not on key_xor ({e['key_xor']} != "
-                f"{batch_fp['key_xor']}): a different batch is reusing a prior"
-                " fingerprint — the keys-globally-unique contract is violated"
-            )
-        # identical key set — disambiguate replay vs legitimate re-upsert
-        if (
-            batch_id is not None
-            and e.get("batch_id") is not None
-            and e["batch_id"] != batch_id
-        ):
-            continue  # same keys, different external batch ⇒ new batch
-        if (
-            content_xor is not None
-            and e.get("content_xor") is not None
-            and e["content_xor"] != content_xor
-        ):
-            continue  # same keys, different content ⇒ new batch
-        prior = e
-        break
-    if prior is not None:
-        prior.setdefault("key_xor", batch_fp["key_xor"])  # backfill old ledgers
-        import warnings
-
-        warnings.warn(
-            f"append_index: batch fingerprint {batch_fp['n_docs']} docs / "
-            f"key_xor={batch_fp['key_xor']} matches ledger entry base_sid="
-            f"{prior['base_sid']} — treating as a resume/replay of that batch"
-            " (already-built segments will be skipped)",
-            stacklevel=2,
-        )
-        base_sid = int(prior["base_sid"])
-    else:
-        base_sid = max((max(existing) + 1) if existing else 0, manifest.num_segments_expected)
-        entry = {**batch_fp, "base_sid": base_sid}
-        if batch_id is not None:
-            entry["batch_id"] = int(batch_id)
-        if content_xor is not None:
-            entry["content_xor"] = int(content_xor)
-        manifest.appends.append(entry)
-    id_offset = base_sid * docs_per_segment
-
-    offsets = {b: off + id_offset for b, off in _bucket_offsets(counts).items()}
-    manifest.num_segments_expected = max(
-        manifest.num_segments_expected,
-        base_sid + ((n_new + docs_per_segment - 1) // docs_per_segment),
-    )
-    save_manifest(index_dir, manifest)
-
-    # a resumed append skips batch segments whose artifacts already exist
-    done = frozenset(
-        sid
-        for sid in existing
-        if os.path.exists(seg_store.segment_postings_path(index_dir, sid))
-    )
-
     dm_cols = tuple([*key_cols, *docmap_cols])
+    # sha256 JVM-side so the python workers never hash
     work = docs.select(*key_cols, *docmap_cols, content_col).withColumn(
         "sha256", F.sha2(F.col(content_col).cast("binary"), 256)
     )
@@ -1116,15 +881,7 @@ def append_index(
         work = work.mapInPandas(
             _pack_fn(content_col, [*dm_cols, "sha256"], with_positions), pack_schema
         )
-    # driver-planned hash exchange instead of repartitionByRange — drops the
-    # boundary-sampling pass (see build_index)
-    ranged = (
-        work.withColumn("_b", bexpr)
-        .withColumn("_slot", _partition_slot_expr(counts, num_partitions))
-        .repartition(num_partitions, F.col("_slot"))
-        .drop("_slot")
-        .sortWithinPartitions("_b", *[F.col(c) for c in key_cols])
-    )
+    ranged = _slot_exchange(work, bexpr, counts, num_partitions, key_cols)
     frag_schema = ", ".join(
         ["doc_id long"]
         + [f"`{n}` {t}" for n, t in ranged.drop("_b").dtypes]
@@ -1132,8 +889,8 @@ def append_index(
     )
     frags = ranged.mapInPandas(
         _partition_builder_fn(
-            index_dir, offsets, docs_per_segment, content_col, dm_cols, done,
-            with_positions,
+            index_dir, offsets, manifest.docs_per_segment, content_col, dm_cols,
+            done, with_positions,
         ),
         frag_schema,
     )
@@ -1147,13 +904,29 @@ def append_index(
     )
     for row in frag_rows:
         manifest.segments[str(row["seg_id"])] = row.asDict()
-    for sid, meta in seg_store.load_manifest_parts(index_dir).items():
+
+
+def _commit(
+    spark: SparkSession, index_dir: str, manifest: IndexManifest, parts: dict
+) -> dict:
+    """Fold manifest ``parts`` into manifest.json, then rewrite the global
+    term stats and stats.json from it; returns the stats dict."""
+    for sid, meta in parts.items():
         manifest.segments.setdefault(sid, meta)
     save_manifest(index_dir, manifest)
 
+    # global term stats: one input row per distinct (term, segment) — the
+    # parquet scan is pruned to (term, df); partial aggregation collapses hot
+    # terms map-side, so no skewed reducer.
     postings = spark.read.parquet(seg_store.segments_glob(index_dir))
-    # ride the groupBy's own hash partitioning (see build_index): term-sorted
-    # files without a second exchange or its sampling pass
+    # the groupBy's exchange already hash-partitions by term, so the write
+    # rides THAT partitioning: each file is term-sorted (row-group min/max
+    # stats prune point lookups within every file) and AQE sizes the file
+    # count from the data.  The earlier repartitionByRange(term) bought
+    # cross-file range disjointness at the price of a SECOND exchange plus
+    # its boundary-sampling job (one more full pass over the aggregated
+    # dictionary) — per-lookup cost is a footer-stats check per file either
+    # way, so the extra exchange was pure overhead.
     (
         postings.groupBy("term")
         .agg(F.sum("df").alias("df"))
@@ -1161,6 +934,7 @@ def append_index(
         .write.mode("overwrite")
         .parquet(os.path.join(index_dir, "term_stats"))
     )
+
     n_docs_total = sum(m["n_docs"] for m in manifest.segments.values())
     total_tokens = sum(m["total_tokens"] for m in manifest.segments.values())
     stats = {
@@ -1173,6 +947,198 @@ def append_index(
     }
     save_stats(index_dir, stats)
     return stats
+
+
+def _match_ledger(
+    appends: list[dict], fp: dict, batch_id: int | None, allow_key_reuse: bool
+) -> dict | None:
+    """The append ledger's replay rule: the prior entry that this batch
+    (fingerprint ``fp`` from _rank_plan) resumes or replays, or None for a
+    new batch.
+
+    An entry is a candidate when it agrees on (n_docs, min_key, max_key) and,
+    when it records one, on ``key_xor``.  A candidate that disagrees only on
+    ``key_xor`` is a different batch reusing a fingerprint: an error under
+    the keys-globally-unique contract, skipped when ``allow_key_reuse``
+    (upserted key sets may overlap old ones).  An identical key set is then
+    told apart by ``batch_id`` when both sides carry one — it alone decides,
+    since foreachBatch reuses the id on redelivery — otherwise by
+    ``content_xor`` when both sides carry one; an entry carrying neither
+    (older ledgers) matches on keys alone.
+    """
+    for e in appends:
+        if any(e[k] != fp[k] for k in ("n_docs", "min_key", "max_key")):
+            continue
+        if e.get("key_xor") is not None and e["key_xor"] != fp["key_xor"]:
+            if allow_key_reuse:
+                continue
+            raise ValueError(
+                "append batch matches a prior ledger entry on (n_docs, min_key,"
+                f" max_key) but not on key_xor ({e['key_xor']} != "
+                f"{fp['key_xor']}): a different batch is reusing a prior"
+                " fingerprint — the keys-globally-unique contract is violated"
+            )
+        if batch_id is not None and e.get("batch_id") is not None:
+            same = e["batch_id"] == batch_id
+        elif e.get("content_xor") is not None:
+            same = e["content_xor"] == fp["content_xor"]
+        else:
+            same = True
+        if same:
+            return e
+    return None
+
+
+def append_index(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    *,
+    content_col: str = "content",
+    key_cols: tuple[str, ...] = ("repo", "path", "commit"),
+    docmap_cols: tuple[str, ...] = (),
+    num_partitions: int | None = None,
+    pack_before_shuffle: bool = False,
+    batch_id: int | None = None,
+) -> dict:
+    """Append a batch of NEW documents to an existing index (ES ``_bulk``).
+
+    Elasticsearch indexing is incremental: each refresh adds small segments
+    and background merges compact them.  Same shape here: the batch gets
+    fresh docIDs starting at the next segment boundary after the existing
+    maximum (``base_sid·docs_per_segment`` — the gap of < docs_per_segment
+    unused ids keeps the segment-range invariant without rewriting the last
+    partial segment), and goes through the same planner and segment writer
+    as ``build_index``: ``_rank_plan``'s two key-only jobs give the buckets,
+    exact offsets and the batch fingerprint, so docIDs are
+    ``base_sid·docs_per_segment + key rank``.  The global term stats are
+    recomputed from the per-segment df rows (tiny).  Compact with
+    ``merge_segments`` when small segments accumulate.
+
+    Append-only semantics: keys are assumed NEW (no upsert — dedupe upstream,
+    e.g. dedup.dedup_exact).  Batches are resumable AND idempotent: the
+    manifest's append ledger records each batch's fingerprint (n_docs,
+    min/max key, ``key_xor`` = an order-insensitive 64-bit fold of
+    ``xxhash64(*key_cols)``) with its reserved base segment id, so a killed
+    append re-run completes only the missing segments byte-identically, and
+    an at-least-once redelivery (foreachBatch retry) is a no-op — without
+    the ledger, a resume would recompute the id base from its own half-built
+    segments and duplicate the batch under shifted ids.
+
+    Batch identity beyond keys: the key fingerprint cannot tell a REPLAY of
+    a batch from a NEW batch that legitimately reuses the same key set
+    (``upsert_index``'s update path).  Two disambiguators are recorded in
+    the ledger entry, and one rule (``_match_ledger``) applies them for
+    appends and upserts alike:
+
+    - ``batch_id``: an external batch identity.  When both the batch and the
+      ledger entry carry one, it ALONE decides: Structured Streaming's
+      ``foreachBatch`` reuses the same ``batch_id`` on redelivery, so the
+      same id is a replay (resumes, even if the content differs) and a
+      different id is a new batch (gets a fresh base_sid).
+    - ``content_xor``: an order-insensitive 64-bit fold of
+      ``xxhash64(*key_cols, content)`` over the batch; it decides when the
+      two sides do not both carry a batch_id.  Same keys + different content
+      ⇒ new batch.  The planner's first job folds it (reading content there
+      once), so every ledger entry carries content identity — otherwise a
+      later upsert of the exact same key set could not tell replay from
+      re-upsert and would silently drop the update.
+
+    A batch that matches a ledger entry on (n, min, max) but not on
+    ``key_xor`` reuses a prior fingerprint with different keys: an error
+    here, under the keys-globally-unique contract (``upsert_index`` treats
+    it as a distinct batch, since upserted key sets may overlap old ones).
+    """
+    return _ingest(
+        spark, docs, index_dir,
+        content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
+        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
+        batch_id=batch_id, upsert=False,
+    )
+
+
+def _ingest(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    *,
+    content_col: str,
+    key_cols: tuple[str, ...],
+    docmap_cols: tuple[str, ...],
+    num_partitions: int | None,
+    pack_before_shuffle: bool,
+    batch_id: int | None,
+    upsert: bool,
+) -> dict:
+    """``append_index`` and, with ``upsert``, ``upsert_index``: plan the
+    batch once, match it against the ledger once, tombstone the batch's keys
+    first when an upsert is not a replay, then write its segments."""
+    manifest = load_manifest(index_dir)
+    if manifest is None:
+        return build_index(
+            spark,
+            docs,
+            index_dir,
+            content_col=content_col,
+            key_cols=key_cols,
+            docmap_cols=docmap_cols,
+            num_partitions=num_partitions,
+            pack_before_shuffle=pack_before_shuffle,
+        )
+    docs_per_segment = manifest.docs_per_segment
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
+
+    bexpr, counts, n_new, fp = _rank_plan(
+        docs, key_cols, num_partitions, content_col=content_col
+    )
+    if n_new == 0:
+        return load_stats(index_dir)
+
+    # the ledger makes resumes/replays id-stable: a killed or re-delivered
+    # batch MUST NOT recompute base_sid from the segments it already half
+    # wrote (that would shift every remaining doc's id and duplicate docs)
+    prior = _match_ledger(manifest.appends, fp, batch_id, allow_key_reuse=upsert)
+    if upsert and prior is None:
+        # a replayed upsert must NOT re-delete: its first attempt's docs hold
+        # the batch's keys, and the ledger-matched append below skips
+        # rebuilding them (tombstoning is idempotent, so a crash between the
+        # delete and the ledger write simply re-deletes)
+        delete_by_keys(spark, index_dir, docs.select(*key_cols), key_cols)
+    existing = manifest.completed_segment_ids() | {
+        int(k) for k in seg_store.load_manifest_parts(index_dir)
+    }
+    if prior is not None:
+        prior.setdefault("key_xor", fp["key_xor"])  # backfill old ledgers
+        warnings.warn(
+            f"append_index: batch fingerprint {fp['n_docs']} docs / "
+            f"key_xor={fp['key_xor']} matches ledger entry base_sid="
+            f"{prior['base_sid']} — treating as a resume/replay of that batch"
+            " (already-built segments will be skipped)",
+            stacklevel=3,
+        )
+        base_sid = int(prior["base_sid"])
+    else:
+        base_sid = max((max(existing) + 1) if existing else 0, manifest.num_segments_expected)
+        entry = {**fp, "base_sid": base_sid}
+        if batch_id is not None:
+            entry["batch_id"] = int(batch_id)
+        manifest.appends.append(entry)
+    id_offset = base_sid * docs_per_segment
+
+    offsets = {b: off + id_offset for b, off in _bucket_offsets(counts).items()}
+    manifest.num_segments_expected = max(
+        manifest.num_segments_expected,
+        base_sid + ((n_new + docs_per_segment - 1) // docs_per_segment),
+    )
+    save_manifest(index_dir, manifest)
+
+    _write_segments(
+        docs, index_dir, manifest, bexpr, counts, offsets,
+        _done_segments(index_dir, existing),
+        content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
+        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
+    )
+    return _commit(spark, index_dir, manifest, seg_store.load_manifest_parts(index_dir))
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
@@ -1227,10 +1193,12 @@ def upsert_index(
 
     Spark/Lucene shape: tombstone any existing docs holding the incoming
     keys (delete_by_keys), then append the batch as fresh segments with new
-    docIDs (append_index) — documents are immutable, updates are
-    delete+reinsert, exactly Lucene's model.  The key resolution is one
-    docmap join (key-pruned columns only); the append reuses the resumable
-    ledger machinery.
+    docIDs (the ``append_index`` path) — documents are immutable, updates
+    are delete+reinsert, exactly Lucene's model.  The key resolution is one
+    docmap join (key-pruned columns only); the batch is planned ONCE by
+    ``_rank_plan``, whose first job also folds the ledger fingerprint with
+    ``content_xor``, and that one plan serves both the replay check and the
+    append.
 
     Replay-safe: the delete step consults the append ledger FIRST.  On an
     at-least-once redelivery (or a resume after a mid-append crash that
@@ -1238,72 +1206,29 @@ def upsert_index(
     attempt are ALREADY in the docmap — an unconditional delete_by_keys
     would tombstone them, and the subsequent ledger-matched append would
     skip rebuilding their segments, silently losing the whole batch to the
-    next ``merge_segments(apply_deletes=True)``.  A batch whose fingerprint
-    matches a prior ledger entry therefore skips the delete entirely (the
-    first attempt already tombstoned the superseded docs; tombstoning is
+    next ``merge_segments(apply_deletes=True)``.  A batch that matches a
+    prior ledger entry therefore skips the delete entirely (the first
+    attempt already tombstoned the superseded docs; tombstoning is
     idempotent, so crash-between-delete-and-ledger replays simply re-delete).
 
     Replay vs re-upsert: keys alone cannot distinguish a REDELIVERY of a
     batch from a legitimate second upsert that updates the SAME key set
     with NEW content — treating the latter as a replay would silently drop
-    the update.  Disambiguation (see ``append_index``): pass ``batch_id``
-    when the caller has an external batch identity (``stream_upsert`` passes
-    the foreachBatch micro-batch id, which Spark reuses on redelivery);
-    without one, a content fingerprint (order-insensitive
-    ``bit_xor(xxhash64(*key_cols, content))``) is folded into the same
-    fingerprint scan and ledger entry, so same-keys-new-content classifies
-    as a new batch: the delete runs and fresh segments are built.
+    the update.  The one ledger rule of ``append_index`` decides, with key
+    reuse allowed: pass ``batch_id`` when the caller has an external batch
+    identity (``stream_upsert`` passes the foreachBatch micro-batch id,
+    which Spark reuses on redelivery) — when the matching ledger entry also
+    carries one, the id alone decides, so the same id is a replay even if
+    the content changed.  Otherwise the content fingerprint (order-
+    insensitive ``bit_xor(xxhash64(*key_cols, content))``, recorded in every
+    ledger entry) decides, so same-keys-new-content classifies as a new
+    batch: the delete runs and fresh segments are built.
     """
-    manifest = load_manifest(index_dir)
-    content_xor: int | None = None
-    if manifest is not None:
-        ks = _key_struct(key_cols)
-        # content identity rides the same scan even when batch_id is given:
-        # a later ad-hoc upsert (no batch_id) can then still compare against
-        # this entry instead of falling back to key-only legacy matching
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(ks).alias("kmin"),
-            F.max(ks).alias("kmax"),
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in key_cols])).alias("kxor"),
-            F.bit_xor(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.col(content_col))
-            ).alias("cxor"),
-        ).collect()[0]
-        fp = {
-            "n_docs": int(row["n"]),
-            "min_key": None if row["kmin"] is None else list(row["kmin"]),
-            "max_key": None if row["kmax"] is None else list(row["kmax"]),
-            "key_xor": None if row["kxor"] is None else int(row["kxor"]),
-        }
-        content_xor = None if row["cxor"] is None else int(row["cxor"])
-
-        def _is_replay(e: dict) -> bool:
-            if not all(e[k] == fp[k] for k in ("n_docs", "min_key", "max_key")):
-                return False
-            if e.get("key_xor") is not None and e["key_xor"] != fp["key_xor"]:
-                return False  # different interior keys ⇒ different batch
-            if batch_id is not None and e.get("batch_id") is not None:
-                return e["batch_id"] == batch_id
-            if content_xor is not None and e.get("content_xor") is not None:
-                return e["content_xor"] == content_xor
-            return True  # legacy entry: key identity is all we have
-
-        replay = fp["n_docs"] > 0 and any(_is_replay(e) for e in manifest.appends)
-        if fp["n_docs"] > 0 and not replay:
-            delete_by_keys(spark, index_dir, docs.select(*key_cols), key_cols)
-    return append_index(
-        spark,
-        docs,
-        index_dir,
-        content_col=content_col,
-        key_cols=key_cols,
-        docmap_cols=docmap_cols,
-        num_partitions=num_partitions,
-        pack_before_shuffle=pack_before_shuffle,
-        batch_id=batch_id,
-        content_xor=content_xor,
-        allow_key_reuse=True,
+    return _ingest(
+        spark, docs, index_dir,
+        content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
+        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
+        batch_id=batch_id, upsert=True,
     )
 
 

@@ -95,6 +95,16 @@ def _validate_slop(slop: int) -> None:
         )
 
 
+def _coalesce_to_rows(df: DataFrame, rows_est: int) -> DataFrame:
+    """Size a posting-decode stage from its known decoded row count (Σ df):
+    ~48 B per decoded row, ~64 MB per partition, and coalesce only when that
+    target is below the current partition count (narrow, no shuffle)."""
+    target = max(1, -(-(rows_est * 48) // (64 << 20)))  # ceil
+    if target < df.rdd.getNumPartitions():
+        return df.coalesce(target)
+    return df
+
+
 def _decode_postings_fn(lucene_norms: bool):
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -309,10 +319,9 @@ class InvertedIndex:
                 rows_est = int(r)
         else:
             rows_est = sum(self.df_of(sorted(set(terms))).values())
-        target = max(1, -(-(rows_est * 48) // (64 << 20)))  # ceil, ~48 B/row
-        if target < pruned.rdd.getNumPartitions():
-            pruned = pruned.coalesce(target)
-        decoded = pruned.mapInPandas(_decode_postings_fn(False), DECODED_SCHEMA)
+        decoded = _coalesce_to_rows(pruned, rows_est).mapInPandas(
+            _decode_postings_fn(False), DECODED_SCHEMA
+        )
         self._decoded_cache = decoded.persist(StorageLevel.MEMORY_AND_DISK)
         self._decoded_cache_terms = None if terms is None else frozenset(terms)
         self._decoded_cache.count()  # materialize eagerly: pay decode ONCE
@@ -380,10 +389,7 @@ class InvertedIndex:
             # no job), so a few-term query runs one decode task instead of
             # one per segment file.  Hot terms at corpus scale keep their
             # parallelism (the estimate scales the partition count back up).
-            rows_est = sum(self.df_of(sorted(set(terms))).values())
-            target = max(1, -(-(rows_est * 48) // (64 << 20)))
-            if target < pruned.rdd.getNumPartitions():
-                pruned = pruned.coalesce(target)
+            pruned = _coalesce_to_rows(pruned, sum(self.df_of(sorted(set(terms))).values()))
         return pruned.mapInPandas(_decode_postings_fn(lucene_norms), DECODED_SCHEMA)
 
     def term_position_rows(

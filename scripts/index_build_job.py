@@ -87,7 +87,6 @@ def main() -> None:
             key_cols=("rep", "orig_id"),
             docs_per_segment=args.docs_per_segment,
             resume=False,
-            n_docs_hint=n_docs,
             num_partitions=args.num_partitions,
             pack_before_shuffle=args.pack,
             index_options=args.index_options,

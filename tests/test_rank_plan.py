@@ -44,9 +44,16 @@ def test_negative_int_key_falls_back(spark):
     _ranks_ok(spark, rows, "k long", ("k",))
 
 
+def test_double_key_falls_back(spark):
+    # "10.5" sorts before "2.0" as text: a fractional key must not be
+    # bucketed by its string encoding
+    rows = [(i * 1.5 - 30.0,) for i in range(240)]
+    _ranks_ok(spark, rows, "k double", ("k",))
+
+
 def test_empty_input(spark):
     df = spark.createDataFrame([], "k string")
-    bexpr, counts, n = _rank_plan(df, ("k",), 4)
+    bexpr, counts, n, _ = _rank_plan(df, ("k",), 4)
     assert n == 0 and counts == {}
 
 
@@ -77,7 +84,7 @@ def test_pack_fine_counts_skewed_bucket():
 def test_rank_plan_counts_match_exactly(spark):
     rows = [(f"key{i:04d}",) for i in range(257)]
     df = spark.createDataFrame(rows, "k string")
-    bexpr, counts, n = _rank_plan(df, ("k",), 4)
+    bexpr, counts, n, _ = _rank_plan(df, ("k",), 4)
     assert n == 257
     assert sum(counts.values()) == 257
     # bucket expression agrees with the counts the driver derived
