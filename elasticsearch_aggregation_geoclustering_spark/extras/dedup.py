@@ -2,11 +2,15 @@
 
 These extend the engine beyond the reference plugin's surface (SURVEY.md §2.3
 notes the reference has none of these) with the dedup family a 100 TB corpus
-pipeline needs: exact, MinHash+LSH, SimHash, and n-gram Jaccard.  Everything
-stays JVM-side (built-in ``pyspark.sql.functions`` column expressions, no
-Python UDFs) so the hot path is whole-stage-codegen'd; every op is a pure
-DataFrame transform whose only shuffles are the keyed groupBys/joins noted in
-each docstring.
+pipeline needs: exact, MinHash+LSH, SimHash, and n-gram Jaccard.  Every op
+is a pure DataFrame transform whose only shuffles are the keyed
+groupBys/joins noted in each docstring.  The per-document fingerprints
+(MinHash signatures, SimHash) are computed in Python, one numpy/hashlib pass
+per Arrow batch (``mapInPandas``): Spark evaluates the higher-order-function
+lambdas an expression twin would need interpreted, outside whole-stage
+codegen, and the batched pass beats them.  Everything after the fingerprint
+— banding, bucket caps, in-bucket pair expansion, hamming and Jaccard — is
+JVM SQL.
 
 Determinism: all hashes derive from ``md5`` of the value (identical across
 Spark, DuckDB and Python), and the MinHash permutations are fixed integer
@@ -18,13 +22,12 @@ Scale notes (1000-executor / 100 TB framing):
 * exact dedup: one shuffle keyed by a 128-bit content hash — uniformly
   distributed by construction, no skew possible.
 * MinHash signatures: per-row map work only (no shuffle); the LSH
-  candidate-pair join shuffles on ``(band, band_key)`` — band keys are md5s,
-  uniform unless true duplicate clusters exist, which is exactly the data
-  reduction we want.  Giant duplicate clusters are capped by
+  candidate-pair groupBy shuffles on ``(band, band_key)`` — band keys are
+  md5s, uniform unless true duplicate clusters exist, which is exactly the
+  data reduction we want.  Giant duplicate clusters are capped by
   ``max_bucket_size`` to avoid quadratic pair blow-up on degenerate buckets.
-* SimHash: per-row map + one groupBy(doc) — the 60 per-bit counters are
-  computed as 60 aggregate expressions in ONE HashAggregate pass, not a
-  60-way row explosion.
+* SimHash: per-row map only — the 60 per-bit votes are summed per document
+  inside the Arrow batch, so the fingerprint needs no shuffle.
 """
 
 from __future__ import annotations
@@ -53,6 +56,11 @@ DEFAULT_SHINGLE_K = 3
 #: (the corpus-scale shape, where sets cannot broadcast).
 SET_LOOKUP_MAX_BYTES = 256 << 20
 
+#: min-label propagation rounds connected_components runs before it falls
+#: back to star contraction: near-duplicate graphs are near-cliques of
+#: diameter 2-3, so a graph still changing after this many is chain-like
+_PROPAGATION_ROUNDS = 8
+
 
 def minhash_coefficients(num_hashes: int = DEFAULT_NUM_HASHES, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal hash family.
@@ -63,16 +71,6 @@ def minhash_coefficients(num_hashes: int = DEFAULT_NUM_HASHES, seed: int = 42) -
     a = rng.integers(1, MINHASH_PRIME, size=num_hashes, dtype=np.int64)
     b = rng.integers(0, MINHASH_PRIME, size=num_hashes, dtype=np.int64)
     return list(zip(a.tolist(), b.tolist()))
-
-
-def md5_long(col: Column) -> Column:
-    """First 60 bits of md5(value) as a non-negative long (JVM-side).
-
-    15 hex chars → < 2^60, so arithmetic on it never overflows int64 after a
-    ``% MINHASH_PRIME`` reduction.  Identical to DuckDB's
-    ``('0x' || substr(md5(x), 1, 15))::BIGINT``.
-    """
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
 def word_shingles(tokens: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
@@ -119,15 +117,6 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.col("keeper_id").alias(id_col)
     )
     return df.join(keepers, on=id_col, how="left_semi")
-
-
-def _shingle_hashes(df: DataFrame, text_col: str, id_col: str, shingle_k: int) -> DataFrame:
-    toks = tokenize_column(F.col(text_col))
-    shingles = word_shingles(toks, shingle_k)
-    hashes = F.transform(shingles, lambda s: md5_long(s))
-    return df.select(F.col(id_col).alias("doc_id"), hashes.alias("hashes")).where(
-        F.size("hashes") > 0
-    )
 
 
 def _minhash_arrow_fn(
@@ -223,49 +212,20 @@ def minhash_signatures(
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle_k: int = DEFAULT_SHINGLE_K,
     seed: int = 42,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-document MinHash signature: ``(doc_id, sig: array<long>)``.
 
-    Pure map work, zero shuffles; docs with no shingle (fewer than
-    ``shingle_k`` tokens) are dropped, matching the oracle.  Two engines
-    produce IDENTICAL signatures (pinned by tests/test_skew_salting.py):
-
-    * ``arrow`` (default): numpy/hashlib inside mapInPandas — distinct
-      shingles hashed once per batch, mins via one reduceat.  ~3x faster
-      than the expression path because Spark evaluates higher-order-function
-      lambdas interpreted, outside whole-stage codegen.
-    * ``jvm``: built-in column expressions only (split/zip_with/aggregate
-      fold) — no Python workers at all; the right choice when executor
-      Python is unavailable or the corpus is trivially small.
+    Pure map work, zero shuffles: numpy/hashlib inside mapInPandas —
+    distinct shingles hashed once per batch, mins via one reduceat.  Docs
+    with no shingle (fewer than ``shingle_k`` tokens) are dropped, matching
+    the DuckDB oracle (``oracles_sql.minhash_signature_sql``), which
+    tests/test_skew_salting.py pins bit for bit.
     """
     coeffs = minhash_coefficients(num_hashes, seed)
-    if engine == "arrow":
-        return df.select(id_col, text_col).mapInPandas(
-            _minhash_arrow_fn(coeffs, text_col, id_col, shingle_k),
-            "doc_id long, sig array<long>",
-        )
-    if engine != "jvm":
-        raise ValueError(f"unknown engine: {engine!r} (want 'arrow' or 'jvm')")
-    base = _shingle_hashes(df, text_col, id_col, shingle_k)
-
-    # One fold over the hash array computing all num_hashes mins at once:
-    # the expensive ``hashes`` expression is referenced exactly once (16
-    # separate array_min(transform(hashes, ...)) calls would re-evaluate the
-    # whole tokenize→shingle→md5 chain per signature row).
-    p = F.lit(MINHASH_PRIME)
-
-    def _perms(h: Column) -> Column:
-        hm = h % p
-        return F.array(*[(F.lit(a) * hm + F.lit(b)) % p for a, b in coeffs])
-
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("long") for _ in coeffs])
-    sig = F.aggregate(
-        F.col("hashes"),
-        init,
-        lambda acc, h: F.zip_with(acc, _perms(h), lambda x, y: F.least(x, y)),
+    return df.select(id_col, text_col).mapInPandas(
+        _minhash_arrow_fn(coeffs, text_col, id_col, shingle_k),
+        "doc_id long, sig array<long>",
     )
-    return base.select("doc_id", sig.alias("sig"))
 
 
 def lsh_bands(
@@ -301,24 +261,18 @@ def minhash_lsh_pairs(
     shingle_k: int = DEFAULT_SHINGLE_K,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Candidate near-duplicate pairs ``(doc_a, doc_b)``, doc_a < doc_b.
 
-    Plan: signature map → band explode → self-equi-join on (band, band_key)
-    → distinct.  The join shuffles on uniform md5 band keys; buckets larger
-    than ``max_bucket_size`` (degenerate mass-duplicate clusters) are dropped
-    to bound the quadratic pair expansion — at 100 TB a single 1M-copy
-    boilerplate file must not produce 10^12 pairs.
+    Plan: signature map → band explode → groupBy (band, band_key) with
+    in-bucket pair expansion → distinct.  The groupBy shuffles on uniform
+    md5 band keys; buckets larger than ``max_bucket_size`` (degenerate
+    mass-duplicate clusters) are dropped to bound the quadratic pair
+    expansion — at 100 TB a single 1M-copy boilerplate file must not produce
+    10^12 pairs.
     """
     sigs = minhash_signatures(
-        df,
-        text_col,
-        id_col,
-        num_hashes=num_hashes,
-        shingle_k=shingle_k,
-        seed=seed,
-        engine=engine,
+        df, text_col, id_col, num_hashes=num_hashes, shingle_k=shingle_k, seed=seed
     )
     buckets = lsh_bands(sigs, bands=bands, num_hashes=num_hashes)
     return _bucket_pairs(buckets, ["band", "band_key"], max_bucket_size)
@@ -340,10 +294,7 @@ def dropped_bucket_stats(
 
 
 def _bucket_pairs(
-    buckets: DataFrame,
-    bucket_cols: list[str],
-    max_bucket_size: int | None,
-    cap_method: str = "window",
+    buckets: DataFrame, bucket_cols: list[str], max_bucket_size: int | None
 ) -> DataFrame:
     """Distinct ``(doc_a, doc_b)`` pairs co-bucketed by ``bucket_cols``.
 
@@ -354,36 +305,12 @@ def _bucket_pairs(
     only reuses exchanges for physically identical subplans).  The cap is
     applied BEFORE collect_list, so a degenerate mass-duplicate bucket never
     materializes an unbounded in-memory array.  The in-bucket expansion is
-    O(k²) array work per bucket, bounded by the cap.
-
-    Two cap implementations with identical results (pinned by
-    tests/test_scale_plans.py):
-
-    - ``cap_method="window"``: a window count sharing the groupBy's hash
-      partitioning — ONE shuffle total, robust at ANY key cardinality, but
-      each window partition buffers a whole bucket: with only a handful of
-      distinct keys (narrow LSH bands) the partitions themselves are the
-      skew.
-    - ``cap_method="anti_join"``: pre-aggregate bucket sizes (map-side
-      partial agg → the shuffle carries one row per DISTINCT key), keep the
-      oversized keys (≤ N/max_bucket_size rows by construction, tiny in any
-      non-degenerate corpus) and broadcast anti-join them away — no window
-      buffering, no skewed partitions.  Costs a second pass over the bucket
-      rows' lineage, so persist upstream when that lineage is expensive.
+    O(k²) array work per bucket, bounded by the cap.  The cap itself is
+    ``_cap_buckets``' window count, which shares the groupBy's hash
+    partitioning: one shuffle in all.
     """
     if max_bucket_size is not None:
-        if cap_method == "anti_join":
-            big = (
-                buckets.groupBy(*bucket_cols)
-                .agg(F.expr("count(1) AS _n"))
-                .where(f"_n > {int(max_bucket_size)}")
-                .select(*bucket_cols)
-            )
-            buckets = buckets.join(F.broadcast(big), on=bucket_cols, how="left_anti")
-        elif cap_method == "window":
-            buckets = _cap_buckets(buckets, bucket_cols, max_bucket_size)
-        else:
-            raise ValueError(f"cap_method must be window|anti_join: {cap_method}")
+        buckets = _cap_buckets(buckets, bucket_cols, max_bucket_size)
     groups = (
         buckets.groupBy(*bucket_cols)
         .agg(F.expr("array_sort(collect_list(doc_id)) AS ids"))
@@ -396,7 +323,14 @@ def _bucket_pairs(
 
 def _cap_buckets(rows: DataFrame, bucket_cols: list[str], max_bucket_size: int) -> DataFrame:
     """Drop the rows of buckets with more than ``max_bucket_size`` members
-    (a window count sharing the downstream groupBy's hash partitioning)."""
+    (a window count sharing the downstream groupBy's hash partitioning).
+
+    Memory: the window buffers one bucket at a time, and spills to disk
+    once a bucket passes Spark's window spill threshold
+    (``spark.sql.windowExec.buffer.spill.threshold``).  Under narrow LSH
+    bands — few distinct keys, so each bucket holds ~N/2^width rows — that
+    one bucket is the largest buffer the operator holds, and it spills
+    rather than exhausting the executor."""
     keys = ", ".join(f"`{c}`" for c in bucket_cols)
     return (
         rows.withColumn("_n", F.expr(f"count(1) OVER (PARTITION BY {keys})"))
@@ -468,41 +402,17 @@ def _simhash_arrow_fn(text_col: str, id_col: str):
     return run
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, *, engine: str = "arrow") -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """60-bit SimHash per document: ``(doc_id, simhash: long)``.
 
     Token hash = md5-derived 60-bit int over DISTINCT tokens; bit b of the
     fingerprint is 1 iff more token hashes have bit b set than clear.
-    Engines produce IDENTICAL fingerprints (pinned by test):
-
-    * ``arrow`` (default): map-only numpy/hashlib batch — no shuffle, no
-      interpreted expressions.
-    * ``jvm``: 60 independent agg expressions over exploded (doc, hash)
-      rows — one shuffle keyed by doc_id, zero Python workers.
+    Map-only numpy/hashlib batch — no shuffle, no interpreted expressions;
+    the ``dedup_simhash`` entry query pins it to the DuckDB oracle.
     """
-    if engine == "arrow":
-        return df.select(id_col, text_col).mapInPandas(
-            _simhash_arrow_fn(text_col, id_col), "doc_id long, simhash long"
-        )
-    if engine != "jvm":
-        raise ValueError(f"unknown engine: {engine!r} (want 'arrow' or 'jvm')")
-    toks = tokenize_column(F.col(text_col))
-    hashed = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(toks)).alias("tok"),
-    ).select("doc_id", md5_long(F.col("tok")).alias("hv"))
-    bit_sums = [
-        F.sum(
-            (F.shiftright(F.col("hv"), b).bitwiseAND(F.lit(1)) * F.lit(2) - F.lit(1))
-        ).alias(f"b{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    agg = hashed.groupBy("doc_id").agg(*bit_sums)
-    fingerprint = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return agg.select("doc_id", fingerprint.alias("simhash"))
+    return df.select(id_col, text_col).mapInPandas(
+        _simhash_arrow_fn(text_col, id_col), "doc_id long, simhash long"
+    )
 
 
 def simhash_near_pairs(
@@ -512,7 +422,6 @@ def simhash_near_pairs(
     *,
     max_hamming: int = 3,
     bands: int = 5,
-    engine: str = "arrow",
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: ``(doc_a, doc_b, hamming)``.
@@ -533,7 +442,7 @@ def simhash_near_pairs(
     """
     width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
-    sh = simhash(df, text_col, id_col, engine=engine)
+    sh = simhash(df, text_col, id_col)
     chunk_rows = ", ".join(
         f"named_struct('chunk', {i}, 'val', shiftright(simhash, {i * width}) & {mask}L)"
         for i in range(bands)
@@ -780,8 +689,6 @@ def connected_components(
     b_col: str = "doc_b",
     *,
     max_iterations: int = 50,
-    method: str = "auto",
-    switch_after: int = 8,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into clusters: ``(doc_id, component)``.
 
@@ -790,22 +697,18 @@ def connected_components(
     ``pairs`` are returned (every other doc is its own singleton; callers
     that need full coverage coalesce with the id).
 
-    Algorithm (``method``):
-
-    - ``"propagation"``: iterative min-label propagation as pure DataFrame
-      ops — each round every node takes the min of its own label and its
-      neighbors' labels (one join keyed by edge source + one groupBy keyed
-      by node, both uniform unless one cluster IS the corpus), until a
-      fixpoint.  Rounds needed = graph diameter — ideal for near-duplicate
-      graphs (dup clusters are near-cliques: most pair generators emit a
-      quadratic candidate set within a bucket, so diameter ≈ 2-3).
-    - ``"star"``: the O(log²) alternating large-star/small-star contraction
-      (``_cc_star``) — the shape a 10⁸-node CHAIN graph needs (propagation
-      would take 10⁸ rounds there).
-    - ``"auto"`` (default): propagation for up to ``switch_after`` rounds
-      (the near-clique fast path, identical labels to before), then falls
-      back to star contraction from the original edges if the diameter
-      outran the budget.
+    Algorithm: iterative min-label propagation as pure DataFrame ops — each
+    round every node takes the min of its own label and its neighbors'
+    labels (one join keyed by edge source + one groupBy keyed by node, both
+    uniform unless one cluster IS the corpus), until a fixpoint.  Rounds
+    needed = graph diameter — ideal for near-duplicate graphs (dup clusters
+    are near-cliques: most pair generators emit a quadratic candidate set
+    within a bucket, so diameter ≈ 2-3).  When the diameter outruns
+    :data:`_PROPAGATION_ROUNDS` (or ``max_iterations``, if smaller) it falls
+    back to the O(log²) alternating large-star/small-star contraction
+    (``_cc_star``) from the original edges — the shape a 10⁸-node CHAIN
+    graph needs, where propagation would take 10⁸ rounds.  Both give the
+    same labels; ``max_iterations`` also bounds the star rounds.
 
     Each round is localCheckpoint'ed: the lineage would otherwise grow by
     two shuffles per round and recompute from scratch on every action.
@@ -813,8 +716,6 @@ def connected_components(
     decrease, so an unchanged sum means an unchanged labeling — which costs
     one scalar agg per round instead of a self-join diff.
     """
-    if method not in ("auto", "propagation", "star"):
-        raise ValueError(f"method must be auto|propagation|star: {method}")
     fwd = pairs.select(
         F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
     )
@@ -834,14 +735,8 @@ def connected_components(
     if prev_sum is None:  # no pairs at all
         edges.unpersist()
         return labels.select(F.col("id").alias("doc_id"), "component")
-    if method == "star":
-        prop_budget = 0
-    elif method == "auto":
-        prop_budget = min(switch_after, max_iterations)
-    else:
-        prop_budget = max_iterations
     converged = False
-    for _ in range(prop_budget):
+    for _ in range(min(_PROPAGATION_ROUNDS, max_iterations)):
         msgs = edges.join(labels, edges["src"] == labels["id"]).select(
             F.col("dst").alias("id"), "component"
         )
@@ -856,13 +751,6 @@ def connected_components(
             converged = True
             break
         prev_sum = s
-    if not converged and method == "propagation":
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
-            " (graph diameter exceeds the cap — raise max_iterations or use"
-            " method='star'/'auto')"
-        )
     if not converged:
         canon = (
             edges.where(F.col("src") > F.col("dst"))

@@ -89,7 +89,7 @@ def enc12_order_key_sql(lon_expr: str = "lon", lat_expr: str = "lat") -> str:
     return f"xor({packed}, 9223372036854775808::UBIGINT)"
 
 
-# --- md5-derived 60-bit hash (extras/dedup.py::md5_long) --------------------
+# --- md5-derived 60-bit hash (the Arrow fingerprints in extras/dedup.py) ---
 
 
 def md5_long_sql(expr: str) -> str:

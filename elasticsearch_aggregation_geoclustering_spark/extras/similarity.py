@@ -197,36 +197,37 @@ def rp_band_near_pairs(
     bands: int = 8,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    cap_method: str = "auto",
 ) -> DataFrame:
     """Embedding near-duplicate pairs via banded RP-LSH blocking.
 
-    Candidate pairs are those agreeing exactly on ≥1 signature band (an
-    equi-join on ``(band, band_bits)`` — never a cross join); candidates are
-    then scored with the exact cosine and filtered by ``threshold``.
+    Candidate pairs are those agreeing exactly on ≥1 signature band (one
+    groupBy on ``(band, bits)`` with in-bucket pair expansion — never a
+    cross join); candidates are then scored with the exact cosine and
+    filtered by ``threshold``.
 
-    Scale contract (what actually bounds the blow-up — the band equi-join
+    Scale contract (what actually bounds the blow-up — the band grouping
     alone does NOT): per-band buckets are capped at ``max_bucket_size``
-    members (window count BEFORE the pair explosion, like
-    ``dedup.minhash_lsh_pairs``), so a degenerate bucket — a mass-duplicate
-    embedding cluster, or band keys too narrow for the corpus — is dropped
-    rather than exploded quadratically.  The defaults (128 planes × 8 bands =
-    16-bit band keys, 65 536 values/band) keep uncorrelated buckets ~N/65 536;
-    narrow test parameterizations (e.g. 16 planes × 4 bands = 16 values/band)
-    are recall-complete at small N but rely ENTIRELY on the cap at scale —
-    never ship them uncapped.  Recall is tunable via bands/planes (more bands
-    → higher recall, more candidates); dropped-bucket members simply produce
-    no candidates, the standard LSH candidate-then-verify contract.
+    members (``dedup._cap_buckets``' window count BEFORE the pair explosion,
+    like ``dedup.minhash_lsh_pairs``), so a degenerate bucket — a
+    mass-duplicate embedding cluster, or band keys too narrow for the
+    corpus — is dropped rather than exploded quadratically.  The defaults
+    (128 planes × 8 bands = 16-bit band keys, 65 536 values/band) keep
+    uncorrelated buckets ~N/65 536; narrow test parameterizations (e.g. 16
+    planes × 4 bands = 16 values/band) are recall-complete at small N but
+    rely ENTIRELY on the cap at scale — never ship them uncapped.  Recall is
+    tunable via bands/planes (more bands → higher recall, more candidates);
+    dropped-bucket members simply produce no candidates, the standard LSH
+    candidate-then-verify contract.
+
+    Memory under narrow bands: the window count buffers one bucket at a
+    time — ~N/2^width rows when the band keys are few — and spills to disk
+    past Spark's window spill threshold
+    (``spark.sql.windowExec.buffer.spill.threshold``), so a narrow
+    parameterization costs spill, not executor memory.  The signature UDF
+    runs once per vector: the band rows are read by one shuffle only.
 
     Signature bits use a FIXED plane set per (dim, n_planes, seed), so the
     DuckDB oracle reproduces the exact candidate set from the same constants.
-
-    ``cap_method`` picks the bucket-cap implementation (see
-    ``dedup._bucket_pairs``): "auto" uses the broadcast anti-join when the
-    band-key space is narrow (≤ 2^16 values/band — a window over so few
-    keys IS the skew: ~N/2^width rows buffered per partition) and the
-    window count otherwise; the anti-join's second pass reads a persisted
-    (id, band, bits) frame, never the signature UDF twice.
     """
     if n_planes % bands:
         raise ValueError("n_planes must divide evenly into bands")
@@ -240,8 +241,8 @@ def rp_band_near_pairs(
         )
     dim = len(first[0])
     planes = rp_planes(dim, n_planes, seed)
-    # band rows carry ONLY (vid, band, bits): the candidate join never
-    # shuffles a vector; vectors rejoin by uniform id after pair dedup.
+    # band rows carry ONLY (vid, band, bits): the candidate shuffle never
+    # carries a vector; vectors rejoin by uniform id after pair dedup.
     from .dedup import _bucket_pairs
 
     sigrows = df.select(
@@ -250,33 +251,11 @@ def rp_band_near_pairs(
             "band", "bits"
         ),
     )
-    if cap_method == "auto":
-        cap_method = "anti_join" if width <= 16 else "window"
-    persisted = max_bucket_size is not None and cap_method == "anti_join"
-    if persisted:
-        # the anti-join cap reads the bucket rows twice (size pre-agg +
-        # main groupBy); persist so the plane UDF runs once per vector
-        from pyspark import StorageLevel
-
-        sigrows = sigrows.persist(StorageLevel.MEMORY_AND_DISK)
     # groupBy + in-bucket explosion: the signature UDF lineage runs once (a
     # self-join would recompute it per join side)
-    cand = _bucket_pairs(sigrows, ["band", "bits"], max_bucket_size, cap_method).select(
+    cand = _bucket_pairs(sigrows, ["band", "bits"], max_bucket_size).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
-    candidate_plan: str | None = None
-    if persisted:
-        # candidate id-pairs are tiny (bucket-capped) next to the vectors:
-        # materialize them eagerly so the cached sigrows can be released
-        # HERE instead of leaking until the executor store evicts it (the
-        # returned frame's lineage is truncated, so unpersist is safe and
-        # callers never need a blanket spark.catalog.clearCache()).  The
-        # truncation hides the candidate subplan from downstream .explain,
-        # so it is captured first and attached to the result for plan
-        # audits (tests/test_scale_plans.py reads it).
-        candidate_plan = cand._jdf.queryExecution().executedPlan().toString()
-        cand = cand.localCheckpoint(eager=True)
-        sigrows.unpersist()
     # verify: candidate pairs carry only IDS when the vector table fits an
     # executor broadcast — the per-pair join shape ships BOTH vectors per
     # candidate through Arrow (2 · |cand| · dim · 4 B; measured 240 MB for
@@ -285,9 +264,7 @@ def rp_band_near_pairs(
     # once).  Same einsum over the same float64 rows → identical doubles.
     # Oversized corpora keep the join: broadcast side scales with the
     # corpus, candidates with the (bucket-capped) pair count.
-    n_vec = df.count()
-    first_dim = len(first[0])
-    if n_vec * first_dim * 8 <= BROADCAST_VERIFY_MAX_BYTES:
+    if df.count() * dim * 8 <= BROADCAST_VERIFY_MAX_BYTES:
         id_vec = df.select(F.col(id_col).cast("long"), vec_col).collect()
         order = np.argsort(np.array([r[0] for r in id_vec], dtype=np.int64))
         ids_sorted = np.array([id_vec[i][0] for i in order], dtype=np.int64)
@@ -308,24 +285,21 @@ def rp_band_near_pairs(
             # same expression shape as cosine_pairs_column: dots / (na * nb)
             return pd.Series(dots / (nn[ia] * nn[ib]))
 
-        out = cand.select(
+        return cand.select(
             "id_a", "id_b", _cos_lookup(F.col("id_a"), F.col("id_b")).alias("cosine")
         ).where(F.col("cosine") >= threshold)
-    else:
-        vecs = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        pairs = (
-            cand.join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a")), on="id_a")
-            .join(vecs.select(F.col("vid").alias("id_b"), F.col("vec").alias("vec_b")), on="id_b")
-        )
-        # Arrow-batched verify: one einsum per batch beats the interpreted
-        # per-dim HOF fold ~10x
-        cos = cosine_pairs_column(F.col("vec_a"), F.col("vec_b"))
-        out = pairs.select("id_a", "id_b", cos.alias("cosine")).where(
-            F.col("cosine") >= threshold
-        )
-    if candidate_plan is not None:
-        out._eagc_candidate_plan = candidate_plan
-    return out
+
+    vecs = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    pairs = (
+        cand.join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a")), on="id_a")
+        .join(vecs.select(F.col("vid").alias("id_b"), F.col("vec").alias("vec_b")), on="id_b")
+    )
+    # Arrow-batched verify: one einsum per batch beats the interpreted
+    # per-dim HOF fold ~10x
+    cos = cosine_pairs_column(F.col("vec_a"), F.col("vec_b"))
+    return pairs.select("id_a", "id_b", cos.alias("cosine")).where(
+        F.col("cosine") >= threshold
+    )
 
 
 def rp_lsh_topk(

@@ -1151,15 +1151,33 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> None:
     compacts them away (``merge_segments(apply_deletes=True)``).  Deleting an
     id twice is harmless (the query-side anti-join is idempotent).
 
+    Deleting nothing writes nothing: Spark's writer leaves a zero-row part
+    file for an empty frame, which is removed again by its parquet footer
+    (read on the driver, no Spark job), together with a ``deletes/``
+    directory the write created.  So an upsert of only new keys leaves the
+    reader without tombstones and its queries without the anti-join.
+
     ``doc_ids``: a DataFrame with a ``doc_id`` column, or an iterable of ints.
     """
+    import shutil
+
+    import pyarrow.parquet as pq
+
     if not isinstance(doc_ids, DataFrame):
         doc_ids = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id long")
-    (
-        doc_ids.select(F.col("doc_id").cast("long"))
-        .write.mode("append")
-        .parquet(os.path.join(index_dir, "deletes"))
-    )
+    ddir = os.path.join(index_dir, "deletes")
+    before = set(os.listdir(ddir)) if os.path.isdir(ddir) else None
+    doc_ids.select(F.col("doc_id").cast("long")).write.mode("append").parquet(ddir)
+    added = [f for f in os.listdir(ddir) if f.endswith(".parquet") and f not in (before or ())]
+    empty = [f for f in added if pq.read_metadata(os.path.join(ddir, f)).num_rows == 0]
+    if before is None and len(empty) == len(added):
+        shutil.rmtree(ddir)  # created by this write, which wrote no row
+        return
+    for f in empty:
+        for name in (f, f".{f}.crc"):  # the local filesystem's checksum too
+            path = os.path.join(ddir, name)
+            if os.path.exists(path):
+                os.remove(path)
 
 
 def delete_by_keys(

@@ -125,10 +125,17 @@ def _union_find_labels(pairs):
     return {x: find(x) for x in parent}
 
 
+#: propagation budgets that pin each path of connected_components: star
+#: contraction only, min-label propagation only (it converges well inside
+#: 50 rounds here), and the default propagation-then-star fallback
+_CC_BUDGETS = {"star": 0, "propagation": 50, "auto": dedup._PROPAGATION_ROUNDS}
+
+
 @pytest.mark.parametrize("method", ["propagation", "star", "auto"])
-def test_cc_methods_match_union_find(spark, method):
+def test_cc_methods_match_union_find(spark, monkeypatch, method):
     import random
 
+    monkeypatch.setattr(dedup, "_PROPAGATION_ROUNDS", _CC_BUDGETS[method])
     rng = random.Random(5)
     pairs = set()
     # mixed shapes: cliques, chains, stars, random edges
@@ -142,7 +149,7 @@ def test_cc_methods_match_union_find(spark, method):
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
         r["doc_id"]: r["component"]
-        for r in dedup.connected_components(df, method=method).collect()
+        for r in dedup.connected_components(df).collect()
     }
     assert got == _union_find_labels(pairs)
 
@@ -151,9 +158,8 @@ def test_star_contraction_chain_1k_few_jobs(spark):
     """A 1024-node chain (diameter 1023): min-label propagation would need
     ~1023 rounds; star contraction must land it in < 20 Spark jobs."""
     n = 1024
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
+    # canonical edges (u > v), as connected_components hands them over
+    edges = spark.createDataFrame([(i + 1, i) for i in range(n - 1)], "u long, v long")
     sc = spark.sparkContext
     # AQE splits each shuffle materialization into its own job id, inflating
     # the COUNT (not the work) ~5x; measure the engine's round structure
@@ -161,25 +167,34 @@ def test_star_contraction_chain_1k_few_jobs(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("cc_chain_star", "star contraction 1k chain")
     try:
-        got = dedup.connected_components(df, method="star").collect()
+        stars, _rounds = dedup._cc_star(edges, 50)
+        got = stars.collect()
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     jobs = sc.statusTracker().getJobIdsForGroup("cc_chain_star")
     assert len(jobs) < 20, f"{len(jobs)} jobs"
-    assert len(got) == n
-    assert all(r["component"] == 0 for r in got)
+    # every node but the root hangs off the root: a star centered on 0
+    assert sorted(r["u"] for r in got) == list(range(1, n))
+    assert all(r["v"] == 0 for r in got)
 
 
-def test_auto_switches_to_star_on_deep_chain(spark):
-    """auto with a tiny propagation budget must still resolve a chain whose
-    diameter exceeds it (the silent-fallback path)."""
+def test_auto_switches_to_star_on_deep_chain(spark, monkeypatch):
+    """A chain whose diameter exceeds the propagation budget must still
+    resolve, through the star-contraction fallback."""
     n = 200
     df = spark.createDataFrame(
         [(i + 1000, i + 1001) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    got = dedup.connected_components(df, method="auto", switch_after=3).collect()
+    calls = []
+    star = dedup._cc_star
+
+    def counting_star(edges, max_iterations):
+        calls.append(max_iterations)
+        return star(edges, max_iterations)
+
+    monkeypatch.setattr(dedup, "_PROPAGATION_ROUNDS", 3)
+    monkeypatch.setattr(dedup, "_cc_star", counting_star)
+    got = dedup.connected_components(df).collect()
     assert len(got) == n and all(r["component"] == 1000 for r in got)
-    # propagation alone with the same budget fails loudly instead
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(df, method="propagation", max_iterations=3)
+    assert calls == [50]  # the fallback ran, once, under max_iterations

@@ -15,8 +15,6 @@ import gc
 import threading
 from itertools import combinations
 
-import pytest
-
 from elasticsearch_aggregation_geoclustering_spark import testing
 from elasticsearch_aggregation_geoclustering_spark.extras import dedup
 from elasticsearch_aggregation_geoclustering_spark.operators.clustering import (
@@ -96,13 +94,12 @@ def test_bucket_pairs_match_combinations(spark):
         if len(docs) <= cap
         for pair in combinations(sorted(docs), 2)
     }
-    for method in ("window", "anti_join"):
-        got = [
-            (r["doc_a"], r["doc_b"])
-            for r in dedup._bucket_pairs(df, ["band", "band_key"], cap, method).collect()
-        ]
-        assert len(got) == len(set(got))  # distinct across bands
-        assert set(got) == want, method
+    got = [
+        (r["doc_a"], r["doc_b"])
+        for r in dedup._bucket_pairs(df, ["band", "band_key"], cap).collect()
+    ]
+    assert len(got) == len(set(got))  # distinct across bands
+    assert set(got) == want
     uncapped = {
         (r["doc_a"], r["doc_b"])
         for r in dedup._bucket_pairs(df, ["band", "band_key"], None).collect()
@@ -110,8 +107,7 @@ def test_bucket_pairs_match_combinations(spark):
     assert uncapped == want | set(combinations(buckets[(0, "over")], 2))
 
 
-@pytest.mark.parametrize("engine", ["arrow", "jvm"])
-def test_simhash_hamming_matches_python_popcount(spark, engine):
+def test_simhash_hamming_matches_python_popcount(spark):
     """Every co-chunked pair with its hamming distance equal to a Python
     popcount of the xor of the two fingerprints (max_hamming = 60 keeps all
     candidates), and the max_hamming filter applied to the same values."""
@@ -119,7 +115,7 @@ def test_simhash_hamming_matches_python_popcount(spark, engine):
     texts = [base, base + " nu", base.replace("gamma", "omega"), "one two three four", base + " xi omicron"]
     texts += [f"unrelated words number {i} here" for i in range(6)]
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "text", "doc_id", engine=engine).collect()}
+    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "text", "doc_id").collect()}
     bands, width = 5, dedup.SIMHASH_BITS // 5
     chunk = {d: {(i, (h >> (i * width)) & ((1 << width) - 1)) for i in range(bands)} for d, h in fp.items()}
     candidates = {(a, b) for a, b in combinations(sorted(fp), 2) if chunk[a] & chunk[b]}
@@ -129,7 +125,7 @@ def test_simhash_hamming_matches_python_popcount(spark, engine):
         got = [
             tuple(r)
             for r in dedup.simhash_near_pairs(
-                docs, "text", "doc_id", max_hamming=max_hamming, bands=bands, engine=engine
+                docs, "text", "doc_id", max_hamming=max_hamming, bands=bands
             ).collect()
         ]
         assert len(got) == len(set(got))

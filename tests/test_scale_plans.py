@@ -48,26 +48,41 @@ def test_ngram_jaccard_minhash_no_cartesian(spark):
 
 
 def test_rp_band_near_pairs_no_cartesian(spark):
-    df = similarity.rp_band_near_pairs(
-        _emb_df(spark), "vec_id", "embedding", threshold=0.2, n_planes=16, bands=4
-    )
-    # the anti_join cap path checkpoints its candidate pairs (so the cached
-    # band rows can be unpersisted eagerly), truncating the visible lineage
-    # — the candidate subplan is captured pre-checkpoint for exactly this
-    # audit
-    plan = _plan(df) + getattr(df, "_eagc_candidate_plan", "")
-    for bad in BAD_NODES:
-        assert bad not in plan, f"quadratic join in plan:\n{plan}"
-    assert "bits" in plan  # candidates keyed by the signature band bits
-    # the window-cap variant keeps full lineage; audit it end-to-end too
-    dfw = similarity.rp_band_near_pairs(
-        _emb_df(spark), "vec_id", "embedding", threshold=0.2, n_planes=16,
-        bands=4, cap_method="window",
-    )
-    planw = _plan(dfw)
-    for bad in BAD_NODES:
-        assert bad not in planw, f"quadratic join in plan:\n{planw}"
-    assert "bits" in planw
+    # narrow bands (16 planes x 4 bands) and the wide defaults: the full
+    # plan, window cap included, is visible to the audit
+    for kw in (dict(n_planes=16, bands=4), {}):
+        df = similarity.rp_band_near_pairs(
+            _emb_df(spark), "vec_id", "embedding", threshold=0.2, **kw
+        )
+        plan = _plan(df)
+        for bad in BAD_NODES:
+            assert bad not in plan, f"quadratic join in plan:\n{plan}"
+        assert "bits" in plan  # candidates keyed by the signature band bits
+        assert "Window" in plan  # the bucket cap's window count
+
+
+#: Spark jobs of one rp_band_near_pairs call (first(), count(), the verify
+#: vector collect, the candidate stages) on the test session's settings.
+#: The anti-join bucket cap it replaced, with its persisted band rows and
+#: eager candidate checkpoint, took 12 on the same input.
+BAND_PAIRS_MAX_JOBS = 7
+
+
+def test_rp_band_near_pairs_job_budget(spark):
+    """A persist or checkpoint pass re-added to the operator fails here:
+    the job count of one call is pinned, and no cached relation is read."""
+    sc = spark.sparkContext
+    sc.setJobGroup("rp_band_jobs", "rp_band_near_pairs job budget")
+    try:
+        df = similarity.rp_band_near_pairs(
+            _emb_df(spark), "vec_id", "embedding", threshold=0.2, n_planes=16, bands=4
+        )
+        df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("rp_band_jobs")
+    assert len(jobs) <= BAND_PAIRS_MAX_JOBS, f"{len(jobs)} jobs"
+    assert "InMemoryTableScan" not in _plan(df)
 
 
 def test_simhash_near_pairs_no_cartesian(spark):
@@ -98,9 +113,10 @@ def test_rp_band_near_pairs_matches_bruteforce_when_recall_complete(spark):
         assert abs(cos - brute[pair]) < 1e-9
 
 
-def test_cap_methods_identical_pairs(spark):
-    """window and anti_join bucket caps must produce the SAME pair set —
-    including when the cap actually drops an oversized bucket."""
+def test_bucket_cap_drops_oversized_cluster(spark):
+    """The window bucket cap drops an oversized bucket's pairs and keeps
+    everything else: a 12-member near-duplicate cluster pairs up under
+    max_bucket_size=1000 and loses those pairs under max_bucket_size=8."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -114,27 +130,14 @@ def test_cap_methods_identical_pairs(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    def pairs(method, cap):
+    def pairs(cap):
         df = similarity.rp_band_near_pairs(
             emb, "vec_id", "embedding", threshold=0.2,
-            n_planes=16, bands=4, max_bucket_size=cap, cap_method=method,
+            n_planes=16, bands=4, max_bucket_size=cap,
         )
         return {(r["id_a"], r["id_b"]) for r in df.collect()}
 
-    for cap in (8, 1000):  # 8 < the 12-member cluster → drops its buckets
-        assert pairs("window", cap) == pairs("anti_join", cap)
-    # the cap=8 run must really have dropped the degenerate cluster's pairs
-    assert pairs("window", 8) != pairs("window", 1000)
-
-
-def test_anti_join_cap_no_window_exchange_skew(spark):
-    """The anti_join cap's plan must not contain a Window node (the skewed
-    buffer the narrow-band parameterization suffered from)."""
-    df = similarity.rp_band_near_pairs(
-        _emb_df(spark), "vec_id", "embedding", threshold=0.2,
-        n_planes=16, bands=4, max_bucket_size=1000, cap_method="anti_join",
-    )
-    plan = _plan(df)
-    assert "Window" not in plan
-    for bad in BAD_NODES:
-        assert bad not in plan
+    cluster = {(100 + a, 100 + b) for a in range(12) for b in range(a + 1, 12)}
+    kept, capped = pairs(1000), pairs(8)
+    assert cluster <= kept
+    assert not cluster & capped

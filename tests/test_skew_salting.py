@@ -80,44 +80,30 @@ def test_bm25_with_hot_term(hot_index):
     assert docmap[top_doc] == "f0042.py"
 
 
-def test_minhash_engines_identical(spark):
-    """The arrow (numpy/hashlib) and jvm (expression-fold) signature engines
-    must produce bit-identical signatures — the LSH bands, the oracle, and
-    the gate all assume one MinHash definition."""
-    from pyspark.sql import functions as F
+def test_minhash_signatures_match_duckdb_oracle(spark):
+    """``minhash_signatures`` equals the DuckDB oracle's signature, bit for
+    bit, for the default shingles and for the jaccard query's shingle_k=1 —
+    the LSH bands, the entry oracles and the perfbench gate all assume this
+    one MinHash definition."""
+    import duckdb
 
     from elasticsearch_aggregation_geoclustering_spark.extras import dedup
+    from elasticsearch_aggregation_geoclustering_spark.extras import oracles_sql as osql
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in dedup.minhash_signatures(docs, "text", "doc_id", engine="arrow").collect()
-    }
-    b = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in dedup.minhash_signatures(docs, "text", "doc_id", engine="jvm").collect()
-    }
-    assert a == b
-    # shingle_k=1 path too (the jaccard query's configuration)
-    a1 = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in dedup.minhash_signatures(
-            docs, "text", "doc_id", shingle_k=1, engine="arrow"
-        ).collect()
-    }
-    b1 = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in dedup.minhash_signatures(
-            docs, "text", "doc_id", shingle_k=1, engine="jvm"
-        ).collect()
-    }
-    assert a1 == b1
-
-
-def test_simhash_engines_identical(spark):
-    from elasticsearch_aggregation_geoclustering_spark.extras import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "text", "doc_id", engine="arrow").collect()}
-    b = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "text", "doc_id", engine="jvm").collect()}
-    assert a == b
+    path = "/root/testdata/sf0.001/documents.parquet"
+    docs = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from read_parquet('{path}')")
+    for k in (dedup.DEFAULT_SHINGLE_K, 1):
+        got = {
+            r["doc_id"]: tuple(r["sig"])
+            for r in dedup.minhash_signatures(docs, "text", "doc_id", shingle_k=k).collect()
+        }
+        want = {
+            d: tuple(sig)
+            for d, sig in con.execute(
+                f"select doc_id, {osql.minhash_signature_sql(shingle_k=k)} as sig"
+                f" from ({osql.minhash_hashes_cte(shingle_k=k)}) where len(hashes) > 0"
+            ).fetchall()
+        }
+        assert got and got == want, k

@@ -132,6 +132,32 @@ def test_upsert_replaces_by_key(spark, index_dir):
     assert gen == 2
 
 
+def test_upsert_of_new_keys_writes_no_tombstone(spark, index_dir):
+    """Nothing matched, nothing written: an upsert of only new keys leaves
+    no deletes/ directory, so the reader has no tombstones to anti-join.
+    An upsert of an existing key still tombstones its old doc, and a
+    further no-match delete adds no file beside that tombstone."""
+    deletes = os.path.join(index_dir, "deletes")
+    fresh = spark.createDataFrame([(10, "iota kappa"), (11, "kappa lambda")], "orig_id long, text string")
+    upsert_index(spark, fresh, index_dir, content_col="text", key_cols=("orig_id",))
+    assert not os.path.exists(deletes)
+    idx = InvertedIndex.open(spark, index_dir)
+    assert idx.deleted_ids() is None
+    assert _orig_ids(idx, idx.search(["kappa"], k=10)) == [10, 11]
+
+    old_id = _internal_ids(spark, index_dir, [1])
+    update = spark.createDataFrame([(1, "mu nu")], "orig_id long, text string")
+    upsert_index(spark, update, index_dir, content_col="text", key_cols=("orig_id",))
+    idx = InvertedIndex.open(spark, index_dir)
+    assert sorted(r["doc_id"] for r in idx.deleted_ids().collect()) == old_id
+    assert _orig_ids(idx, idx.search(["mu"], k=10)) == [1]
+    assert idx.match_count(["delta"]) == 2  # old doc 1 no longer matches
+
+    files = sorted(os.listdir(deletes))
+    delete_docs(spark, index_dir, [])
+    assert sorted(os.listdir(deletes)) == files
+
+
 def test_upsert_after_plain_append_same_keys_updates(spark, index_dir):
     """A batch appended WITHOUT batch_id/content_xor must still be
     distinguishable from a later upsert of the exact same key set with new
