@@ -28,11 +28,13 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -95,11 +97,17 @@ def _validate_slop(slop: int) -> None:
         )
 
 
+def _partitions_for_rows(rows_est: int) -> int:
+    """Partition count for a decoded posting stream of known row count
+    (Σ df): ~48 B per decoded row, ~64 MB per partition."""
+    return max(1, -(-(rows_est * 48) // (64 << 20)))  # ceil
+
+
 def _coalesce_to_rows(df: DataFrame, rows_est: int) -> DataFrame:
-    """Size a posting-decode stage from its known decoded row count (Σ df):
-    ~48 B per decoded row, ~64 MB per partition, and coalesce only when that
-    target is below the current partition count (narrow, no shuffle)."""
-    target = max(1, -(-(rows_est * 48) // (64 << 20)))  # ceil
+    """Size a posting-decode stage from its known decoded row count (Σ df),
+    coalescing only when the target is below the current partition count
+    (narrow, no shuffle)."""
+    target = _partitions_for_rows(rows_est)
     if target < df.rdd.getNumPartitions():
         return df.coalesce(target)
     return df
@@ -201,6 +209,17 @@ def _sorted_term_score_sum(terms_sorted: list[str]) -> Column:
     )
 
 
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet directory from its file footers, read on the
+    driver with no Spark job (the files Spark's reader lists: ``_``- and
+    ``.``-prefixed names are skipped)."""
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
 #: dictionaries up to this many terms are collected to the driver once and
 #: answer every subsequent df lookup without a Spark job (a few MB); larger
 #: dictionaries (the 10^8-term source-code case) keep the per-query pruned
@@ -236,6 +255,8 @@ class InvertedIndex:
     _docmap_df: DataFrame | None = None
     _decoded_cache: DataFrame | None = None
     _decoded_cache_terms: frozenset | None = None
+    _docmap_cache: DataFrame | None = None
+    _pins: tuple[DataFrame, ...] = ()
     _gram_checked: bool = False
     _gram_df: DataFrame | None = None
     _gram_n: int = 0
@@ -266,66 +287,90 @@ class InvertedIndex:
         self._deleted = None
         self._postings_df = None
         self._docmap_df = None
-        if self._decoded_cache is not None:
-            self._decoded_cache.unpersist()
-        self._decoded_cache = None
-        self._decoded_cache_terms = None
+        self._unpin()
         self._gram_checked = False
         self._gram_df = None
         self._gram_n = 0
         return self
 
     def cache_postings(self, terms: list[str] | None = None) -> "InvertedIndex":
-        """Pin the DECODED posting stream in executor storage (ES analog:
-        Lucene leaves postings to the OS page cache, so a warmed node
-        serves term queries from RAM; Spark's explicit equivalent is a
-        persisted DataFrame).  Subsequent ``search``/``match_count``/
-        ``explain``/``search_batch`` calls filter the cached (term, doc_id,
-        tf, dl) rows instead of re-running the parquet scan + Arrow varbyte
-        decode per query — the per-query plan becomes pure JVM.
+        """Pin the DECODED posting stream and the docmap in executor storage,
+        both hash-partitioned by ``doc_id`` into the same partition count
+        (ES analog: a shard's postings and its doc values hold the same
+        documents, so a warmed node reads each hit's field data locally).
+        Subsequent ``search``/``match_count``/``explain``/``search_batch``
+        calls filter the cached (term, doc_id, tf, dl) rows instead of
+        re-running the parquet scan + Arrow varbyte decode per query, and
+        ``score_matches(terms).join(docmap())`` plans with no exchange and no
+        broadcast: the BM25 fold and the docmap join run partition-local.
 
-        Memory contract: Σ df rows over the cached terms (~32 B/row,
-        spillable MEMORY_AND_DISK).  Whole-index caching (``terms=None``)
-        is for indexes whose decoded postings fit the cluster's storage
-        memory — at source-code scale pass the HOT term subset instead,
-        exactly the set a real cache would retain.  Results are
-        bit-identical to the uncached path (same decoded values; pinned by
-        tests).  The cache obeys snapshot semantics: ``refresh()`` drops
-        it.  Positional queries are unaffected (positions stay on disk).
+        Memory contract: Σ df rows over the cached terms (~32 B/row) plus
+        the WHOLE docmap (one row per document, with its ``docmap_cols``),
+        both spillable MEMORY_AND_DISK.  The partition count comes from the
+        Σ df sizing (:func:`_partitions_for_rows`).  Whole-index caching
+        (``terms=None``) is for indexes whose decoded postings fit the
+        cluster's storage memory — at source-code scale pass the HOT term
+        subset instead, exactly the set a real cache would retain.  Results
+        are bit-identical to the uncached path (same decoded values; pinned
+        by tests).  The cache obeys snapshot semantics: ``refresh()`` or a
+        repeated ``cache_postings()`` drops both relations, and while they
+        are pinned :meth:`docmap` returns the pinned docmap with a
+        sort-merge join hint, so the planner does not broadcast a relation
+        that is already co-located.  Positional queries are unaffected
+        (positions stay on disk).
         """
         from pyspark import StorageLevel
 
-        if self._decoded_cache is not None:
-            self._decoded_cache.unpersist()
+        self._unpin()
         pruned = self.postings(terms).select(
             "term", "doc_ids_vb", "tfs_vb", "dls_vb"
         )
-        # size the cached relation from the KNOWN decoded row count (Σ df
-        # over the cached terms, read from term stats — no data job): every
-        # per-query scan launches one task per cached partition, so a cache
-        # whose partition count came from the segment-file split (tiny
-        # files ⇒ many near-empty partitions) pays pure scheduling overhead
-        # per query.  ~64 MB of decoded rows per partition keeps task count
-        # proportional to data at every scale (guide §2.2: fewer, larger
-        # partitions); coalesce is a narrow dependency — no shuffle, and
-        # the Arrow decode also runs on the merged (larger) batches.
-        if terms is None:
-            if self._df_cache is not None:
-                rows_est = sum(self._df_cache.values())
-            else:
-                r = self.term_stats().agg(
-                    F.coalesce(F.sum("df"), F.lit(0))
-                ).collect()[0][0]
-                rows_est = int(r)
-        else:
-            rows_est = sum(self.df_of(sorted(set(terms))).values())
+        # size the cached relations from the KNOWN decoded row count (Σ df
+        # over the cached terms, read from the driver's df dictionary — no
+        # data job): every per-query scan launches one task per cached
+        # partition, so a cache whose partition count came from the
+        # segment-file split (tiny files ⇒ many near-empty partitions) pays
+        # pure scheduling overhead per query.  ~64 MB of decoded rows per
+        # partition keeps task count proportional to data at every scale
+        # (guide §2.2: fewer, larger partitions); coalesce is a narrow
+        # dependency, so the Arrow decode also runs on the merged batches.
+        dfs = self._df_dict() if terms is None else self.df_of(sorted(set(terms)))
+        if dfs is not None:
+            rows_est = sum(dfs.values())
+        else:  # a dictionary too large for the driver
+            rows_est = int(
+                self.term_stats().agg(F.coalesce(F.sum("df"), F.lit(0))).collect()[0][0]
+            )
+        n = _partitions_for_rows(rows_est)
         decoded = _coalesce_to_rows(pruned, rows_est).mapInPandas(
             _decode_postings_fn(False), DECODED_SCHEMA
         )
-        self._decoded_cache = decoded.persist(StorageLevel.MEMORY_AND_DISK)
+        # Spark's CacheManager shares one entry between equal plans, so two
+        # readers over one index would pin ONE relation and either reader's
+        # unpersist would drop the other's cache; a reader-unique literal
+        # column keeps each reader's entries its own (constant, so the
+        # columnar cache stores it run-length encoded)
+        pin = F.lit(uuid.uuid4().int >> 65).alias("_pin")
+        self._pins = tuple(
+            rel.repartition(n, "doc_id").select("*", pin).persist(StorageLevel.MEMORY_AND_DISK)
+            for rel in (decoded, self.docmap())
+        )
+        # materialize both eagerly in ONE action: pay decode ONCE
+        postings, docmap = self._pins
+        postings.select("_pin").unionAll(docmap.select("_pin")).count()
+        self._decoded_cache = postings.drop("_pin")
         self._decoded_cache_terms = None if terms is None else frozenset(terms)
-        self._decoded_cache.count()  # materialize eagerly: pay decode ONCE
+        self._docmap_cache = docmap.drop("_pin").hint("merge")
         return self
+
+    def _unpin(self) -> None:
+        """Drop the relations :meth:`cache_postings` pinned."""
+        for rel in self._pins:
+            rel.unpersist()
+        self._pins = ()
+        self._decoded_cache = None
+        self._decoded_cache_terms = None
+        self._docmap_cache = None
 
     # --- raw layers -----------------------------------------------------
 
@@ -354,7 +399,11 @@ class InvertedIndex:
     def docmap(self) -> DataFrame:
         """The docmap relation, pinned per reader like :meth:`postings`: one
         directory listing per point-in-time view, and docmap parts that a
-        later ``append_index`` adds stay invisible until :meth:`refresh`."""
+        later ``append_index`` adds stay invisible until :meth:`refresh`.
+        After :meth:`cache_postings` it is the cached docmap, co-partitioned
+        with the cached postings and hinted to join by sort-merge."""
+        if self._docmap_cache is not None:
+            return self._docmap_cache
         if self._docmap_df is None:
             self._docmap_df = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
         return self._docmap_df
@@ -452,15 +501,25 @@ class InvertedIndex:
         pays ONE stats job instead of one per query; big dictionaries fall
         back to a term-pruned parquet lookup (sorted row-group stats).
         """
-        if not self._df_cache_checked:
-            self._df_cache_checked = True
-            stats = self.term_stats()
-            if stats.count() <= DF_CACHE_MAX_TERMS:
-                self._df_cache = {r["term"]: r["df"] for r in stats.collect()}
-        if self._df_cache is not None:
-            return {t: self._df_cache[t] for t in set(terms) if t in self._df_cache}
+        df_all = self._df_dict()
+        if df_all is not None:
+            return {t: df_all[t] for t in set(terms) if t in df_all}
         rows = self.term_stats().where(F.col("term").isin(sorted(set(terms)))).collect()
         return {r["term"]: r["df"] for r in rows}
+
+    def _df_dict(self) -> dict[str, int] | None:
+        """The whole df dictionary when it holds at most
+        :data:`DF_CACHE_MAX_TERMS` terms, else None.  Loaded once per
+        point-in-time view on the driver with no Spark job: the term count
+        comes from the term_stats parquet footers, then the (term, df)
+        columns are read with Arrow."""
+        if not self._df_cache_checked:
+            self._df_cache_checked = True
+            path = os.path.join(self.index_dir, "term_stats")
+            if _parquet_rows(path) <= DF_CACHE_MAX_TERMS:
+                t = pq.read_table(path, columns=["term", "df"])
+                self._df_cache = dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+        return self._df_cache
 
     # --- queries ----------------------------------------------------------
 

@@ -6,7 +6,9 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
+from elasticsearch_aggregation_geoclustering_spark.plans import aggs, query
 from elasticsearch_aggregation_geoclustering_spark.plans.index_build import (
     build_index,
     delete_docs,
@@ -263,14 +265,57 @@ def test_batch_salted_pretruncation_bit_identical(spark, index, salt):
     assert index.search_batch(QUERIES, k=3, salt_partitions=1)  # no-op salt ok
 
 
-def test_cache_postings_bit_identical(spark, index):
-    """cache_postings pins the decoded stream; every query path over it
-    must return exactly the uncached results, the cached plan must be free
-    of Python stages, and a terms-subset cache only serves covered
-    queries."""
+def _plan_nodes(df) -> list[str]:
+    """Node names of ``df``'s executed plan, through AQE wrappers but not
+    into a cached relation's stored lineage (an InMemoryTableScan is a
+    leaf: a cache hit never re-executes what sits under it)."""
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        names = [node.nodeName()]
+        it = node.children().iterator()
+        while it.hasNext():
+            names += walk(it.next())
+        return names
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _hits(idx, terms):
+    return idx.score_matches(terms).join(idx.docmap(), on="doc_id")
+
+
+def _answers(idx, terms):
+    """Every cached-reader answer shape, as plain rows for bitwise
+    comparison: the ranked page, all hits joined to the docmap and the
+    three aggregations over them."""
+    hits = _hits(idx, terms).withColumn("parity", F.col("orig_id") % 2)
+    return (
+        [tuple(r) for r in idx.search(terms, k=5).collect()],
+        sorted(tuple(r) for r in hits.select("doc_id", "score", "orig_id").collect()),
+        [tuple(r) for r in aggs.extended_stats(hits, "orig_id", round_to=4).collect()],
+        sorted(tuple(r) for r in aggs.histogram(hits, "score", 0.25).collect()),
+        sorted(
+            tuple(r)
+            for r in aggs.top_hits(hits, "parity", [F.desc("score"), F.asc("doc_id")], 2)
+            .select("parity", "doc_id", "score")
+            .collect()
+        ),
+    )
+
+
+def test_cache_postings_bit_identical(spark, index, monkeypatch):
+    """cache_postings pins the decoded stream and the docmap co-partitioned
+    by doc_id; every query path over them must return exactly the uncached
+    results, the cached plan must be free of Python stages, and a
+    terms-subset cache only serves covered queries.  The pins are forced
+    to 3 partitions, so the partition-local fold and docmap join are
+    checked where rows are spread over several partitions."""
     import shutil as _shutil
     import tempfile as _tempfile
 
+    monkeypatch.setattr(query, "_partitions_for_rows", lambda rows_est: 3)
     d = _tempfile.mkdtemp(prefix="cacheidx_")
     try:
         docs = spark.createDataFrame(DOCS, "orig_id long, text string")
@@ -286,7 +331,12 @@ def test_cache_postings_bit_identical(spark, index):
 
         want_prefix = idx.prefix_match_count("s")
         want_wild = idx.wildcard_match_count("*dow")
+        want_answers = _answers(idx, terms)
         idx.cache_postings()
+        assert idx.docmap().rdd.getNumPartitions() == 3
+        assert _answers(idx, terms) == want_answers
+        nodes = _plan_nodes(_hits(idx, terms))
+        assert "Exchange" not in nodes and "BroadcastExchange" not in nodes, nodes
         assert [(r["doc_id"], r["score"]) for r in idx.search(terms, k=5).collect()] == want_search
         assert idx.match_count(terms, "OR") == want_count
         # multi-term counts route through the whole-index cache too
@@ -321,11 +371,62 @@ def test_cache_postings_bit_identical(spark, index):
         delete_docs(spark, d, victim)
         idx4 = InvertedIndex.open(spark, d).cache_postings()
         assert all(r["doc_id"] not in victim for r in idx4.search(["spark"], k=10).collect())
-        # refresh drops the cache
+        assert all(r["doc_id"] not in victim for r in _hits(idx4, ["spark"]).collect())
+        assert _answers(idx4, terms) == _answers(InvertedIndex.open(spark, d), terms)
+        # refresh drops both pins; the docmap is the plain relation again
         idx4.refresh()
-        assert idx4._decoded_cache is None
+        assert idx4._decoded_cache is None and idx4._pins == ()
+        assert "InMemoryTableScan" not in _plan_nodes(idx4.docmap())
     finally:
         _shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def cached(spark, index):
+    """A second reader over the module index with its postings cached."""
+    reader = InvertedIndex.open(spark, index.index_dir).cache_postings()
+    yield reader
+    reader.refresh()
+
+
+def test_cached_hits_plan_has_no_exchange(spark, cached):
+    """At one pinned partition the cached BM25 fold and the docmap join
+    are partition-local: no shuffle and no broadcast in the hits plan."""
+    assert cached.docmap().rdd.getNumPartitions() == 1
+    nodes = _plan_nodes(_hits(cached, ["spark", "window", "merge"]))
+    assert "InMemoryTableScan" in nodes
+    assert "Exchange" not in nodes and "BroadcastExchange" not in nodes, nodes
+
+
+def test_cached_hits_collect_one_job(spark, index, cached):
+    """Collecting the cached hits joined to the docmap runs ONE Spark job
+    (a broadcast of the docmap or an exchange before the fold would each
+    add jobs) and returns the uncached reader's rows bit for bit."""
+    terms = ["spark", "window", "merge"]
+    want = sorted(map(tuple, _hits(index, terms).collect()))
+    sc = spark.sparkContext
+    sc.setJobGroup("cached_hits_jobs", "cached hits collect")
+    try:
+        got = sorted(map(tuple, _hits(cached, terms).collect()))
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == want
+    jobs = sc.statusTracker().getJobIdsForGroup("cached_hits_jobs")
+    assert len(jobs) == 1, f"{len(jobs)} jobs"
+
+
+def test_refresh_keeps_other_readers_cache(spark, index):
+    """Two readers over one index cache the same relations; one reader's
+    refresh must not drop the other's cache (Spark shares one cache entry
+    between equal plans unless each reader's pins differ)."""
+    a = InvertedIndex.open(spark, index.index_dir).cache_postings()
+    b = InvertedIndex.open(spark, index.index_dir).cache_postings()
+    try:
+        b.refresh()
+        assert "InMemoryTableScan" in _plan_nodes(a.term_doc_rows(["spark"]))
+        assert "InMemoryTableScan" in _plan_nodes(a.docmap())
+    finally:
+        a.refresh()
 
 
 def test_fuzzy_gram_index_identical_to_sweep(spark, tmp_path):
