@@ -15,8 +15,8 @@ The expressions are written as SQL text and parsed JVM-side: building the
 same tree from ``pyspark.sql.functions`` calls costs one py4j round trip
 per node (several hundred per key expression, ~0.1 ms each), a fixed
 per-request cost that dwarfed the codegen'd evaluation on small inputs.
-Double constants are spelled ``repr(x) + "D"``, which parses back to the
-identical double, so the keys stay bit-identical.
+Double constants are spelled by ``functions.sql_text.dbl``, which parses
+back to the identical double, so the keys stay bit-identical.
 
 Java's long shifts/or/and/xor are bit-identical to the numpy uint64 ops for
 these masked values — pinned against the numpy implementation on edge and
@@ -29,6 +29,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.sql_text import dbl, name
 from .geohash import LATITUDE_DECODE, LONGITUDE_DECODE
 
 _SPREAD_STEPS = (
@@ -44,18 +45,9 @@ _LAT_MAX = float(np.nextafter(90.0, -np.inf))
 _LON_MAX = float(np.nextafter(180.0, -np.inf))
 
 
-def _dbl(x: float) -> str:
-    """A double literal that parses back to exactly ``x``."""
-    return repr(float(x)) + "D"
-
-
-def _name(col: str) -> str:
-    return "`" + col.replace("`", "``") + "`"
-
-
 def _axis_sql(deg: str, decode_step: float, edge_max: float) -> str:
     """Lucene encodeLatitude/encodeLongitude, sign-flipped to unsigned order."""
-    q = f"FLOOR(LEAST({deg}, {_dbl(edge_max)}) / {_dbl(decode_step)})"
+    q = f"FLOOR(LEAST({deg}, {dbl(edge_max)}) / {dbl(decode_step)})"
     return f"(({q} ^ 2147483648L) & 4294967295L)"
 
 
@@ -125,8 +117,8 @@ def cell_expr(lon_col: str, lat_col: str, precision: int) -> Column:
     twice (2^5-fold); prefer :func:`with_cell_column` on hot paths.
     """
     _check_precision(precision)
-    lon = f"CAST({_name(lon_col)} AS DOUBLE)"
-    lat = f"CAST({_name(lat_col)} AS DOUBLE)"
+    lon = f"CAST({name(lon_col)} AS DOUBLE)"
+    lat = f"CAST({name(lat_col)} AS DOUBLE)"
     lat_bits = _axis_sql(lat, LATITUDE_DECODE, _LAT_MAX)
     lon_bits = _axis_sql(lon, LONGITUDE_DECODE, _LON_MAX)
     for shift, mask in _SPREAD_STEPS:
@@ -155,10 +147,10 @@ def with_cell_column(
     variables anyway.
     """
     _check_precision(precision)
-    lon = f"CAST({_name(lon_col)} AS DOUBLE)"
-    lat = f"CAST({_name(lat_col)} AS DOUBLE)"
+    lon = f"CAST({name(lon_col)} AS DOUBLE)"
+    lat = f"CAST({name(lat_col)} AS DOUBLE)"
     temps = [(f"_gh_{out_col}_lat{i}", f"_gh_{out_col}_lon{i}") for i in range(len(_SPREAD_STEPS) + 1)]
-    tlat, tlon = (_name(c) for c in temps[0])
+    tlat, tlon = (name(c) for c in temps[0])
     df = df.selectExpr(
         "*",
         f"{_axis_sql(lat, LATITUDE_DECODE, _LAT_MAX)} AS {tlat}",
@@ -167,9 +159,9 @@ def with_cell_column(
     for (shift, mask), (nlat, nlon) in zip(_SPREAD_STEPS, temps[1:]):
         df = df.selectExpr(
             "*",
-            f"{_spread_sql(tlat, shift, mask)} AS {_name(nlat)}",
-            f"{_spread_sql(tlon, shift, mask)} AS {_name(nlon)}",
+            f"{_spread_sql(tlat, shift, mask)} AS {name(nlat)}",
+            f"{_spread_sql(tlon, shift, mask)} AS {name(nlon)}",
         )
-        tlat, tlon = _name(nlat), _name(nlon)
+        tlat, tlon = name(nlat), name(nlon)
     key = f"{_key_sql(tlat, tlon, precision)} + ({_validator_sql(lon, lat)})"
     return df.withColumn(out_col, F.expr(key)).drop(*[c for pair in temps for c in pair])

@@ -21,12 +21,20 @@ cardinality) reduce to O(buckets) rows.  Exact percentiles sort within
 groups — at 100 TB use ``approximate=True`` (t-digest-style
 ``percentile_approx``, mergeable fixed-size state) exactly like ES does
 (ES percentiles IS t-digest and documents the same exactness caveat).
+
+``stats``, ``extended_stats``, ``histogram`` and ``top_hits``' rank filter
+are SQL text parsed in the JVM with one py4j call each (a functions-API tree
+costs round trips per expression node, paid on the driver before the job);
+``top_hits`` keeps its window over the caller's ``order_by`` Columns.  Their
+column names are top-level (back-quoted, never nested fields).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import sql_text as sql
 
 __all__ = [
     "histogram",
@@ -48,6 +56,13 @@ __all__ = [
     "percentile_ranks",
     "adjacency_matrix",
 ]
+
+
+def _rounder(round_to: int | None):
+    """``round(e, round_to)`` over SQL text ``e``, or ``e`` as it is."""
+    if round_to is None:
+        return lambda e: e
+    return lambda e: f"round({e}, {int(round_to)})"
 
 
 def histogram(
@@ -74,17 +89,15 @@ def histogram(
         raise ValueError(f"interval must be > 0: {interval}")
     if min_doc_count < 1:
         raise ValueError("min_doc_count=0 (empty buckets) is not supported")
-    key = (F.floor(F.col(col) / F.lit(float(interval))) * F.lit(float(interval))).alias(
-        key_name
-    )
+    c, iv, key, count = sql.name(col), sql.dbl(interval), sql.name(key_name), sql.name(count_name)
     out = (
-        hits.where(F.col(col).isNotNull())
-        .groupBy(key)
-        .agg(F.count(F.lit(1)).alias(count_name))
+        hits.where(f"{c} IS NOT NULL")
+        .groupBy(F.expr(f"(FLOOR({c} / {iv}) * {iv}) AS {key}"))
+        .agg(F.expr(f"count(1) AS {count}"))
     )
     if min_doc_count > 1:
-        out = out.where(F.col(count_name) >= min_doc_count)
-    return out.orderBy(F.asc(key_name))
+        out = out.where(f"{count} >= {int(min_doc_count)}")
+    return out.orderBy(F.expr(key))
 
 
 def date_histogram(
@@ -126,14 +139,13 @@ def stats(hits: DataFrame, col: str, *, round_to: int | None = None) -> DataFram
     (no extra scan per metric).  ``round_to`` rounds the float columns for
     cross-engine comparison (fp sum order differs between engines).
     """
-    c = F.col(col)
-    rnd = (lambda e: F.round(e, round_to)) if round_to is not None else (lambda e: e)
-    return hits.agg(
-        F.count(c).alias("count"),
-        F.min(c).alias("min"),
-        F.max(c).alias("max"),
-        rnd(F.sum(c).cast("double")).alias("sum"),
-        rnd(F.avg(c)).alias("avg"),
+    c, rnd = sql.name(col), _rounder(round_to)
+    return hits.selectExpr(
+        f"count({c}) AS count",
+        f"min({c}) AS min",
+        f"max({c}) AS max",
+        f"{rnd(f'CAST(sum({c}) AS DOUBLE)')} AS sum",
+        f"{rnd(f'avg({c})')} AS avg",
     )
 
 
@@ -142,19 +154,19 @@ def extended_stats(
 ) -> DataFrame:
     """ES ``extended_stats``: stats + sum_of_squares, variance (population,
     like ES), std_deviation and the ±sigma std-deviation bounds."""
-    c = F.col(col).cast("double")
-    rnd = (lambda e: F.round(e, round_to)) if round_to is not None else (lambda e: e)
-    return hits.agg(
-        F.count(c).alias("count"),
-        F.min(c).alias("min"),
-        F.max(c).alias("max"),
-        rnd(F.sum(c)).alias("sum"),
-        rnd(F.avg(c)).alias("avg"),
-        rnd(F.sum(c * c)).alias("sum_of_squares"),
-        rnd(F.var_pop(c)).alias("variance"),
-        rnd(F.stddev_pop(c)).alias("std_deviation"),
-        rnd(F.avg(c) + F.lit(sigma) * F.stddev_pop(c)).alias("std_upper"),
-        rnd(F.avg(c) - F.lit(sigma) * F.stddev_pop(c)).alias("std_lower"),
+    c, rnd = f"CAST({sql.name(col)} AS DOUBLE)", _rounder(round_to)
+    spread = f"({sql.dbl(sigma)} * stddev_pop({c}))"
+    return hits.selectExpr(
+        f"count({c}) AS count",
+        f"min({c}) AS min",
+        f"max({c}) AS max",
+        f"{rnd(f'sum({c})')} AS sum",
+        f"{rnd(f'avg({c})')} AS avg",
+        f"{rnd(f'sum(({c} * {c}))')} AS sum_of_squares",
+        f"{rnd(f'var_pop({c})')} AS variance",
+        f"{rnd(f'stddev_pop({c})')} AS std_deviation",
+        f"{rnd(f'(avg({c}) + {spread})')} AS std_upper",
+        f"{rnd(f'(avg({c}) - {spread})')} AS std_lower",
     )
 
 
@@ -225,7 +237,7 @@ def top_hits(
     w = Window.partitionBy(bucket_col).orderBy(*order_by)
     return (
         hits.withColumn("_rank", F.row_number().over(w))
-        .where(F.col("_rank") <= size)
+        .where(f"_rank <= {int(size)}")
         .drop("_rank")
     )
 
@@ -414,7 +426,7 @@ def range_agg(
             .alias(f"_r{i}")
         )
     one = hits.agg(*aggs)
-    stack = ", ".join(f"'{k}', _r{i}" for i, (k, _, _) in enumerate(ranges))
+    stack = ", ".join(f"{sql.string(str(k))}, _r{i}" for i, (k, _, _) in enumerate(ranges))
     return one.selectExpr(
         f"stack({len(ranges)}, {stack}) as ({key_name}, {count_name})"
     )
@@ -445,7 +457,7 @@ def filters_agg(
             for i, n in enumerate(names)
         ]
     )
-    stack = ", ".join(f"'{n}', _f{i}" for i, n in enumerate(names))
+    stack = ", ".join(f"{sql.string(n)}, _f{i}" for i, n in enumerate(names))
     return one.selectExpr(
         f"stack({len(names)}, {stack}) as ({key_name}, {count_name})"
     )
@@ -621,9 +633,7 @@ def percentile_ranks(
     one = hits.agg(*aggs_)
     pct = lambda i: F.col(f"_le{i}").cast("double") / F.col("_n") * 100.0  # noqa: E731
     rnd = (lambda e: F.round(e, round_to)) if round_to is not None else (lambda e: e)
-    stacked = ", ".join(
-        f"{v!r}D, _p{i}" for i, v in enumerate(vals)
-    )
+    stacked = ", ".join(f"{sql.dbl(v)}, _p{i}" for i, v in enumerate(vals))
     proj = one.select(
         "*", *[rnd(pct(i)).alias(f"_p{i}") for i in range(len(vals))]
     )
@@ -671,9 +681,7 @@ def adjacency_matrix(
             for i, (_, cond, _) in enumerate(cells)
         ]
     )
-    stack = ", ".join(
-        f"'{k}', _c{i}" for i, (k, _, _) in enumerate(cells)
-    )
+    stack = ", ".join(f"{sql.string(k)}, _c{i}" for i, (k, _, _) in enumerate(cells))
     out = one.selectExpr(
         f"stack({len(cells)}, {stack}) as ({key_name}, {count_name})"
     )

@@ -22,10 +22,17 @@ AND = docs whose distinct-term count equals the query's distinct-term count
 
 The reference surfaces these engine behaviors rather than implementing them
 (SURVEY.md §2.2); formulas follow functions/bm25.py.
+
+Plans are SQL text parsed in the JVM with one py4j call each, values spliced
+in by ``functions.sql_text``: a ``pyspark.sql.functions`` tree costs round
+trips per expression node (a cached 3-term ``search`` took ~550, now ~50).
+:func:`_bm25_sql` is the one BM25 expression every scorer shares, in the
+numpy oracle's association order, so the doubles stay bit-identical.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import uuid
@@ -35,10 +42,11 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bm25, codec
+from ..functions import sql_text as sql
 from ..sources import segments as seg_store
 from ..sources.segments import load_stats
 
@@ -104,13 +112,10 @@ def _partitions_for_rows(rows_est: int) -> int:
 
 
 def _coalesce_to_rows(df: DataFrame, rows_est: int) -> DataFrame:
-    """Size a posting-decode stage from its known decoded row count (Σ df),
-    coalescing only when the target is below the current partition count
-    (narrow, no shuffle)."""
-    target = _partitions_for_rows(rows_est)
-    if target < df.rdd.getNumPartitions():
-        return df.coalesce(target)
-    return df
+    """Size a posting-decode stage from its known decoded row count (Σ df)
+    with a narrow coalesce (no shuffle): a target above the scan's partition
+    count leaves that count as it is."""
+    return df.coalesce(_partitions_for_rows(rows_est))
 
 
 def _decode_postings_fn(lucene_norms: bool):
@@ -178,11 +183,11 @@ def _decode_positions_fn(lucene_norms: bool):
     return decode
 
 
-def _sorted_term_score_sum(terms_sorted: list[str]) -> Column:
-    """Aggregate expression: per-group score sum folded in ascending-term
-    order, bit-identical to ``aggregate(array_sort(collect_list(struct(term,
-    score))), 0.0, acc + score)`` for groups holding at most one row per
-    term (the posting-stream invariant).
+def _sorted_term_score_sum(terms_sorted: list[str]) -> str:
+    """Aggregate expression (SQL text): per-group score sum folded in
+    ascending-term order, bit-identical to ``aggregate(array_sort(
+    collect_list(struct(term, score))), 0.0, acc + score)`` for groups
+    holding at most one row per term (the posting-stream invariant).
 
     For ≤ :data:`PIVOT_MAX_TERMS` terms it compiles to one conditional
     ``sum`` per term chained with ``+`` — a codegen'd HashAggregate with no
@@ -192,32 +197,100 @@ def _sorted_term_score_sum(terms_sorted: list[str]) -> Column:
     and inserting ``+ 0.0`` between the present terms' partial sums leaves
     every intermediate double unchanged (IEEE: x + 0.0 == x; BM25 scores
     are strictly positive so no -0.0 case exists).  Beyond the cap the
-    original sort+fold runs (the create_map literals grow with terms too).
+    original sort+fold runs (the idf map literals grow with terms too).
     """
     if len(terms_sorted) <= PIVOT_MAX_TERMS:
-        total: Column = F.lit(0.0)
+        total = "0.0D"
         for t in terms_sorted:
-            total = total + F.coalesce(
-                F.sum(F.when(F.col("term") == F.lit(t), F.col("score"))),
-                F.lit(0.0),
+            total = (
+                f"({total} + coalesce(sum(CASE WHEN term = {sql.string(t)}"
+                " THEN score END), 0.0D))"
             )
         return total
-    return F.aggregate(
-        F.array_sort(F.collect_list(F.struct("term", "score"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x["score"],
+    return "aggregate(array_sort(collect_list(struct(term, score))), 0.0D, (acc, x) -> acc + x.score)"
+
+
+def _idf_sql(idfs: dict[str, float]) -> str:
+    """Each row's idf (SQL text): a literal map looked up by ``term``."""
+    pairs = ", ".join(f"{sql.string(t)}, {sql.dbl(v)}" for t, v in idfs.items())
+    return f"element_at(map({pairs}), term)"
+
+
+def _bm25_sql(idf: str, tf: str, params: bm25.Bm25Params, avgdl: float) -> str:
+    """``idf · tf / (tf + k1·(1 − b + b·dl/avgdl))`` as SQL text over the
+    DOUBLE expressions ``idf`` and ``tf`` and the ``dl`` column: the one BM25
+    expression every scorer here shares.  It keeps the numpy oracle's
+    association order, so the scores are bit-identical to it."""
+    k1, b = sql.dbl(params.k1), sql.dbl(params.b)
+    dl = "CAST(dl AS DOUBLE)"
+    denom = f"({tf} + ({k1} * ((1.0D - {b}) + (({b} * {dl}) / {sql.dbl(avgdl)}))))"
+    return f"({idf} * ({tf} / {denom}))"
+
+
+def _min_should_match(terms: list[str], mode: str, msm: int | None) -> int:
+    """The distinct-term count a doc must match: ES bool ``minimum_should_match``
+    (AND ≡ every term, OR ≡ 1)."""
+    if msm is None:
+        msm = len(terms) if mode.upper() == "AND" else 1
+    if not 1 <= msm <= len(terms):
+        raise ValueError(f"minimum_should_match must be in 1..{len(terms)}: {msm}")
+    return msm
+
+
+def _term_ints_sql(pairs: list[tuple[str, int]]) -> str:
+    """Each row's list of the ints paired with its ``term`` in ``pairs``
+    (SQL text: a literal ``map(term, array(int…))`` looked up by ``term``).
+    Exploding it fans a row out once per pair, as an inner join with the
+    pairs as a table would, with no table, no join and no broadcast."""
+    grouped: dict[str, list[int]] = {}
+    for t, i in pairs:
+        grouped.setdefault(t, []).append(int(i))
+    body = ", ".join(
+        f"{sql.string(t)}, array({', '.join(map(str, ints))})" for t, ints in grouped.items()
     )
+    return f"element_at(map({body}), term)"
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count of a parquet directory from its file footers, read on the
-    driver with no Spark job (the files Spark's reader lists: ``_``- and
-    ``.``-prefixed names are skipped)."""
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
+def _where_terms(df: DataFrame, terms: list[str] | None) -> DataFrame:
+    """``df`` filtered to the rows of ``terms`` (all rows for None): one
+    ``term IN (…)`` predicate, pushed into a parquet scan below it."""
+    if terms is None:
+        return df
+    if not terms:
+        return df.where("false")
+    return df.where(f"term IN ({', '.join(map(sql.string, sorted(set(terms))))})")
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files Spark's reader lists in a parquet directory (``_``-
+    and ``.``-prefixed names are skipped), sorted."""
+    return sorted(
+        os.path.join(path, f)
         for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema of one file footer read
+    on the driver (Spark's inference runs a job): the Spark schema a Spark
+    writer stored, else the Arrow schema.  No file, or a type with no Arrow
+    mapping, falls back to inference."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    files = _parquet_files(path)
+    if not files:
+        return spark.read.parquet(path)
+    footer = pq.read_schema(files[0])
+    stored = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored:
+        return spark.read.schema(StructType.fromJson(json.loads(stored))).parquet(path)
+    try:
+        schema = from_arrow_schema(footer, prefer_timestamp_ntz=True)
+    except TypeError:  # an Arrow type with no Spark mapping
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 #: dictionaries up to this many terms are collected to the driver once and
@@ -322,9 +395,7 @@ class InvertedIndex:
         from pyspark import StorageLevel
 
         self._unpin()
-        pruned = self.postings(terms).select(
-            "term", "doc_ids_vb", "tfs_vb", "dls_vb"
-        )
+        pruned = self.postings(terms).selectExpr("term", "doc_ids_vb", "tfs_vb", "dls_vb")
         # size the cached relations from the KNOWN decoded row count (Σ df
         # over the cached terms, read from the driver's df dictionary — no
         # data job): every per-query scan launches one task per cached
@@ -338,9 +409,7 @@ class InvertedIndex:
         if dfs is not None:
             rows_est = sum(dfs.values())
         else:  # a dictionary too large for the driver
-            rows_est = int(
-                self.term_stats().agg(F.coalesce(F.sum("df"), F.lit(0))).collect()[0][0]
-            )
+            rows_est = int(self.term_stats().selectExpr("coalesce(sum(df), 0)").collect()[0][0])
         n = _partitions_for_rows(rows_est)
         decoded = _coalesce_to_rows(pruned, rows_est).mapInPandas(
             _decode_postings_fn(False), DECODED_SCHEMA
@@ -350,9 +419,9 @@ class InvertedIndex:
         # unpersist would drop the other's cache; a reader-unique literal
         # column keeps each reader's entries its own (constant, so the
         # columnar cache stores it run-length encoded)
-        pin = F.lit(uuid.uuid4().int >> 65).alias("_pin")
+        pin = f"{uuid.uuid4().int >> 65}L AS _pin"
         self._pins = tuple(
-            rel.repartition(n, "doc_id").select("*", pin).persist(StorageLevel.MEMORY_AND_DISK)
+            rel.repartition(n, "doc_id").selectExpr("*", pin).persist(StorageLevel.MEMORY_AND_DISK)
             for rel in (decoded, self.docmap())
         )
         # materialize both eagerly in ONE action: pay decode ONCE
@@ -382,19 +451,20 @@ class InvertedIndex:
         directory and re-read every parquet footer — with hundreds of
         segments that directory walk dominates small-query latency.  Term
         filters still push into each query's scan (the cached relation is
-        pre-filter).
+        pre-filter).  The schema is the index format's, so opening the
+        reader runs no schema-inference job.
         """
         if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(
+            schema = seg_store.POSTINGS_SPARK_SCHEMA
+            if self.index_options != "positions":
+                schema = schema.removesuffix(", pos_vb binary")
+            self._postings_df = self.spark.read.schema(schema).parquet(
                 seg_store.segments_glob(self.index_dir)
             )
-        df = self._postings_df
-        if terms is not None:
-            df = df.where(F.col("term").isin(sorted(set(terms))))
-        return df
+        return _where_terms(self._postings_df, terms)
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+        return _read_parquet(self.spark, os.path.join(self.index_dir, "term_stats"))
 
     def docmap(self) -> DataFrame:
         """The docmap relation, pinned per reader like :meth:`postings`: one
@@ -405,7 +475,7 @@ class InvertedIndex:
         if self._docmap_cache is not None:
             return self._docmap_cache
         if self._docmap_df is None:
-            self._docmap_df = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+            self._docmap_df = _read_parquet(self.spark, os.path.join(self.index_dir, "docmap"))
         return self._docmap_df
 
     def term_doc_rows(self, terms: list[str] | None = None, lucene_norms: bool = False) -> DataFrame:
@@ -426,11 +496,8 @@ class InvertedIndex:
                 or (terms is not None and set(terms) <= self._decoded_cache_terms)
             )
         ):
-            cached = self._decoded_cache
-            if terms is not None:
-                cached = cached.where(F.col("term").isin(sorted(set(terms))))
-            return cached
-        pruned = self.postings(terms).select("term", "doc_ids_vb", "tfs_vb", "dls_vb")
+            return _where_terms(self._decoded_cache, terms)
+        pruned = self.postings(terms).selectExpr("term", "doc_ids_vb", "tfs_vb", "dls_vb")
         if terms is not None:
             # the term-pruned scan keeps the SEGMENT-FILE split (one task per
             # file group) even when the query's posting rows are tiny; size
@@ -460,7 +527,7 @@ class InvertedIndex:
                 f"{self.index_options!r}; positional queries need "
                 "build_index(index_options='positions')"
             )
-        pruned = self.postings(terms).select(
+        pruned = self.postings(terms).selectExpr(
             "term", "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"
         )
         return pruned.mapInPandas(
@@ -479,7 +546,7 @@ class InvertedIndex:
             self._deletes_checked = True
             ddir = os.path.join(self.index_dir, "deletes")
             if os.path.isdir(ddir):
-                self._deleted = self.spark.read.parquet(ddir).select("doc_id").distinct()
+                self._deleted = _read_parquet(self.spark, ddir).selectExpr("doc_id").distinct()
         return self._deleted
 
     def _live(self, rows: DataFrame) -> DataFrame:
@@ -504,7 +571,7 @@ class InvertedIndex:
         df_all = self._df_dict()
         if df_all is not None:
             return {t: df_all[t] for t in set(terms) if t in df_all}
-        rows = self.term_stats().where(F.col("term").isin(sorted(set(terms)))).collect()
+        rows = _where_terms(self.term_stats(), terms).collect()
         return {r["term"]: r["df"] for r in rows}
 
     def _df_dict(self) -> dict[str, int] | None:
@@ -516,7 +583,7 @@ class InvertedIndex:
         if not self._df_cache_checked:
             self._df_cache_checked = True
             path = os.path.join(self.index_dir, "term_stats")
-            if _parquet_rows(path) <= DF_CACHE_MAX_TERMS:
+            if sum(pq.read_metadata(f).num_rows for f in _parquet_files(path)) <= DF_CACHE_MAX_TERMS:
                 t = pq.read_table(path, columns=["term", "df"])
                 self._df_cache = dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
         return self._df_cache
@@ -538,13 +605,7 @@ class InvertedIndex:
         terms = sorted(set(terms))
         if not terms:
             return 0
-        msm = minimum_should_match
-        if msm is None:
-            msm = len(terms) if mode.upper() == "AND" else 1
-        if not 1 <= msm <= len(terms):
-            raise ValueError(
-                f"minimum_should_match must be in 1..{len(terms)}: {msm}"
-            )
+        msm = _min_should_match(terms, mode, minimum_should_match)
         if len(terms) == 1 and self.deleted_ids() is None:
             # fast path: df is precomputed (df counts tombstoned docs, so it
             # only answers hit counts while the index has no soft deletes)
@@ -553,11 +614,11 @@ class InvertedIndex:
         if msm > 1:
             return (
                 rows.groupBy("doc_id")
-                .agg(F.count_distinct("term").alias("nt"))
-                .where(F.col("nt") >= msm)
+                .agg(F.expr("count(DISTINCT term) AS nt"))
+                .where(f"nt >= {msm}")
                 .count()
             )
-        return rows.select("doc_id").distinct().count()
+        return rows.selectExpr("doc_id").distinct().count()
 
     def score_matches(
         self,
@@ -595,38 +656,27 @@ class InvertedIndex:
         )
         if doc_id_filter is not None:
             rows = rows.join(
-                doc_id_filter.select("doc_id").distinct(), on="doc_id", how="left_semi"
+                doc_id_filter.selectExpr("doc_id").distinct(), on="doc_id", how="left_semi"
             )
         if not df_map:
-            return rows.select("doc_id", F.lit(0.0).alias("score")).limit(0)
+            return rows.selectExpr("doc_id", "0.0D AS score").limit(0)
 
-        idf_expr: Column = F.element_at(
-            F.create_map(*[F.lit(x) for t in idfs for x in (t, idfs[t])]), F.col("term")
-        )
         # same expression tree as the numpy oracle => bit-identical doubles
-        tf_d = F.col("tf").cast("double")
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(self.avgdl)
-        )
-        scored = rows.select("doc_id", "term", (idf_expr * (tf_d / denom)).alias("score"))
+        score = _bm25_sql(_idf_sql(idfs), "CAST(tf AS DOUBLE)", params, self.avgdl)
+        scored = rows.selectExpr("doc_id", "term", f"{score} AS score")
 
         # deterministic fold order (sorted by term) — matches the oracle even
         # for >2-term queries where fp addition is association-sensitive
-        agg = scored.groupBy("doc_id").agg(
-            _sorted_term_score_sum(sorted(idfs)).alias("score"),
-            F.count(F.lit(1)).alias("_nterms"),
+        fold = F.expr(f"{_sorted_term_score_sum(sorted(idfs))} AS score")
+        msm = _min_should_match(terms, mode, minimum_should_match)
+        if msm == 1:
+            return scored.groupBy("doc_id").agg(fold)
+        return (
+            scored.groupBy("doc_id")
+            .agg(fold, F.expr("count(1) AS _nterms"))
+            .where(f"_nterms >= {msm}")
+            .drop("_nterms")
         )
-        msm = minimum_should_match
-        if msm is None:
-            msm = len(terms) if mode.upper() == "AND" else 1
-        if not 1 <= msm <= len(terms):
-            raise ValueError(
-                f"minimum_should_match must be in 1..{len(terms)}: {msm}"
-            )
-        if msm > 1:
-            agg = agg.where(F.col("_nterms") >= msm)
-        return agg.select("doc_id", "score")
 
     def search(
         self,
@@ -658,11 +708,8 @@ class InvertedIndex:
             doc_id_filter=doc_id_filter,
         )
         if search_after is not None:
-            s0, d0 = float(search_after[0]), int(search_after[1])
-            agg = agg.where(
-                (F.col("score") < F.lit(s0))
-                | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > F.lit(d0)))
-            )
+            s0, d0 = sql.dbl(search_after[0]), int(search_after[1])
+            agg = agg.where(f"score < {s0} OR (score = {s0} AND doc_id > {d0})")
         return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_batch(
@@ -678,8 +725,8 @@ class InvertedIndex:
 
         Per-query ``search()`` pays a full Spark job per query — the p95
         driver for a query workload.  Here the posting scan prunes to the
-        UNION of all queries' terms, a broadcast (term, query_id) membership
-        join fans each decoded row into the queries that use it, and scores
+        UNION of all queries' terms, a literal term → query ids map explodes
+        each decoded row into the queries that use it, and scores
         fold per (query, doc) in sorted-term order — bit-identical to
         ``search()`` for every query (pinned by tests).  The final per-query
         top-k is a window ``row_number`` over (query_id): its sort is
@@ -710,57 +757,36 @@ class InvertedIndex:
         if not live_terms:
             return empty
         rows = self._live(self.term_doc_rows(live_terms, params.lucene_norms))
-        membership = spark.createDataFrame(
-            [(qid, t) for qid, q in enumerate(norm_qs) for t in q if t in df_map],
-            "query_id int, term string",
+        # each decoded row fans out into the queries that use its term
+        membership = _term_ints_sql(
+            [(t, qid) for qid, q in enumerate(norm_qs) for t in q if t in df_map]
         )
-        joined = rows.join(F.broadcast(membership), on="term")
-
-        idf_expr: Column = F.element_at(
-            F.create_map(*[F.lit(x) for t in idfs for x in (t, idfs[t])]), F.col("term")
-        )
-        tf_d = F.col("tf").cast("double")
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(self.avgdl)
-        )
-        scored = joined.select(
-            "query_id", "doc_id", "term", (idf_expr * (tf_d / denom)).alias("score")
+        score = _bm25_sql(_idf_sql(idfs), "CAST(tf AS DOUBLE)", params, self.avgdl)
+        scored = rows.selectExpr(
+            "doc_id", "term", f"{score} AS score", f"explode({membership}) AS query_id"
         )
         agg = scored.groupBy("query_id", "doc_id").agg(
-            _sorted_term_score_sum(live_terms).alias("score"),
-            F.count(F.lit(1)).alias("_nterms"),
+            F.expr(f"{_sorted_term_score_sum(live_terms)} AS score"),
+            F.expr("count(1) AS _nterms"),
         )
         if mode.upper() == "AND":
             # per-query required term count (queries whose terms are partly
             # unindexed can never satisfy AND; matching search(), which
             # compares against the FULL term count)
-            qlen = F.element_at(
-                F.create_map(
-                    *[F.lit(x) for qid, q in enumerate(norm_qs) for x in (qid, len(q))]
-                ),
-                F.col("query_id"),
-            )
-            agg = agg.where(F.col("_nterms") == qlen)
-        from pyspark.sql import Window
-
+            qlen = ", ".join(f"{qid}, {len(q)}" for qid, q in enumerate(norm_qs))
+            agg = agg.where(f"_nterms = element_at(map({qlen}), query_id)")
+        rank = "row_number() OVER (PARTITION BY query_id{} ORDER BY score DESC, doc_id)"
         if salt_partitions is not None and salt_partitions > 1:
-            ws = Window.partitionBy("query_id", "_salt").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
             agg = (
-                agg.withColumn(
-                    "_salt", (F.col("doc_id") % F.lit(salt_partitions)).cast("int")
-                )
-                .withColumn("_srn", F.row_number().over(ws))
-                .where(F.col("_srn") <= k)
+                agg.selectExpr("*", f"CAST(doc_id % {int(salt_partitions)} AS INT) AS _salt")
+                .selectExpr("*", f"{rank.format(', _salt')} AS _srn")
+                .where(f"_srn <= {int(k)}")
                 .drop("_salt", "_srn")
             )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
-            agg.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select("query_id", "doc_id", "score")
+            agg.selectExpr("query_id", "doc_id", "score", f"{rank.format('')} AS _rn")
+            .where(f"_rn <= {int(k)}")
+            .drop("_rn")
         )
 
     def _phrase_occurrences(
@@ -770,14 +796,16 @@ class InvertedIndex:
         term is absent from the dictionary (an ES match_phrase matches
         nothing when a position is unfillable).
 
-        Plan: term-pruned positional decode → join the tiny (term, offset)
-        table (broadcast; one row per phrase POSITION, so repeated terms get
-        every offset they must fill) → normalize each occurrence to its
-        candidate start ``pos - offset`` → a phrase starts at p iff all
-        len(phrase) offsets are present: ONE groupBy (doc, start) counting
-        distinct offsets, then ONE groupBy (doc) counting starts.  Both
-        shuffles are keyed by doc-dominated keys — uniform, no hot keys
-        beyond true mass-duplicate docs.
+        Plan: term-pruned positional decode → ONE exchange on doc_id →
+        explode each occurrence into the offsets its term fills (a literal
+        term → offsets map; one offset per phrase POSITION, so repeated
+        terms get every offset they must fill) → normalize each occurrence
+        to its candidate start ``pos - offset`` → a phrase starts at p iff
+        all len(phrase) offsets are present: a groupBy (doc, start) counting
+        distinct offsets, then a groupBy (doc) counting starts, both inside
+        the doc_id partitions (their keys start with doc_id, so neither
+        shuffles again).  Doc keys are uniform — no hot keys beyond true
+        mass-duplicate docs.
         """
         offset_rows = [(t, i) for i, t in enumerate(phrase)]
         return self._phrase_occurrences_from_offsets(
@@ -807,21 +835,20 @@ class InvertedIndex:
             return spark.createDataFrame([], "doc_id long, ptf long, dl long")
         live_terms = [t for t in uniq if t in df_map]
         rows = self._live(self.term_position_rows(live_terms, lucene_norms))
-        offsets = spark.createDataFrame(
-            [(t, o) for t, o in offset_rows if t in df_map], "term string, off int"
-        )
-        hits = rows.join(F.broadcast(offsets), on="term").select(
-            "doc_id", "dl", (F.col("pos") - F.col("off")).alias("start"), "off"
+        offsets = _term_ints_sql([(t, o) for t, o in offset_rows if t in df_map])
+        # one exchange on doc_id serves every aggregation below: each one's
+        # grouping keys start with doc_id
+        hits = rows.repartition("doc_id").selectExpr(
+            "doc_id", "dl", "pos", f"explode({offsets}) AS off"
         )
         starts = (
-            hits.where(F.col("start") >= 0)
+            hits.selectExpr("doc_id", "dl", "pos - off AS start", "off")
+            .where("start >= 0")
             .groupBy("doc_id", "start")
-            .agg(F.count_distinct("off").alias("_n"), F.max("dl").alias("dl"))
-            .where(F.col("_n") == n_positions)
+            .agg(F.expr("count(DISTINCT off) AS _n"), F.expr("max(dl) AS dl"))
+            .where(f"_n = {n_positions}")
         )
-        return starts.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("ptf"), F.max("dl").alias("dl")
-        )
+        return starts.groupBy("doc_id").agg(F.expr("count(1) AS ptf"), F.expr("max(dl) AS dl"))
 
     def _sloppy_phrase_occurrences(
         self, phrase: list[str], slop: int, lucene_norms: bool = False
@@ -851,10 +878,11 @@ class InvertedIndex:
         free, which is what lets the DuckDB oracle hash-match the scores
         bit for bit (a float sum would depend on row order on both engines).
 
-        Plan shape: term-pruned positional decode → broadcast (term, offset)
-        join → explode each occurrence into its ≤ slop+1 candidate starts →
-        TWO groupBys keyed by (doc, start[, term]) — doc-dominated uniform
-        keys, the same scale contract as the exact phrase path.
+        Plan shape: term-pruned positional decode → ONE exchange on doc_id →
+        explode each occurrence into its (term → offsets) offsets, then into
+        its ≤ slop+1 candidate starts → groupBys keyed by (doc, start[,
+        term]) and (doc) inside those partitions — the same scale contract
+        as the exact phrase path.
         """
         _validate_slop(slop)
         spark = self.spark
@@ -866,62 +894,42 @@ class InvertedIndex:
             )
         k = len(phrase)
         rows = self._live(self.term_position_rows(uniq, lucene_norms))
-        offsets = spark.createDataFrame(
-            [(t, i) for i, t in enumerate(phrase)], "term string, off int"
-        )
-        from collections import Counter
-
-        mult = spark.createDataFrame(
-            [(t, m) for t, m in Counter(phrase).items()], "term string, mult long"
-        )
+        offsets = _term_ints_sql([(t, i) for i, t in enumerate(phrase)])
         # adjusted positions may be NEGATIVE (Lucene: "beta alpha" matches
         # phrase "alpha beta" at slop 2 through beta's adj = 0 − 1 = −1), so
         # neither the hits nor the candidate starts are clamped at zero
-        hits = rows.join(F.broadcast(offsets), on="term").select(
-            "doc_id", "dl", "term", "pos", "off",
-            (F.col("pos") - F.col("off")).alias("adj"),
+        hits = rows.repartition("doc_id").selectExpr(
+            "doc_id", "dl", "term", "pos", f"explode({offsets}) AS off"
         )
-        cand = hits.select(
-            "doc_id", "dl", "term", "pos", "off", "adj",
-            F.explode(F.sequence(F.col("adj") - slop, F.col("adj"))).alias("start"),
+        cand = hits.selectExpr(
+            "doc_id", "dl", "term", "pos", "off", "pos - off AS adj",
+            f"explode(sequence(pos - off - {slop}, pos - off)) AS start",
         )
-        per_term = (
-            cand.groupBy("doc_id", "start", "term")
-            .agg(
-                F.count_distinct("pos").alias("npos"),
-                F.count_distinct("off").alias("noff"),
-                F.min("adj").alias("tmin"),
-                F.max("dl").alias("dl"),
-            )
-            .join(F.broadcast(mult), on="term")
+        per_term = cand.groupBy("doc_id", "start", "term").agg(
+            F.expr("count(DISTINCT pos) AS npos"),
+            F.expr("count(DISTINCT off) AS noff"),
+            F.expr("min(adj) AS tmin"),
+            F.expr("max(dl) AS dl"),
         )
         L = math.lcm(*range(1, slop + 2))
         starts = (
             per_term.groupBy("doc_id", "start")
             .agg(
-                F.sum("noff").alias("_noff"),
-                F.min(F.col("npos") - F.col("mult")).alias("_mslack"),
-                F.min("tmin").alias("_minadj"),
-                F.max("tmin").alias("_end"),
-                F.max("dl").alias("dl"),
+                F.expr("sum(noff) AS _noff"),
+                # a term's multiplicity in the phrase: its offset count
+                F.expr(f"min(npos - size({offsets})) AS _mslack"),
+                F.expr("min(tmin) AS _minadj"),
+                F.expr("max(tmin) AS _end"),
+                F.expr("max(dl) AS dl"),
             )
-            .where(
-                (F.col("_noff") == k)
-                & (F.col("_mslack") >= 0)
-                & (F.col("_minadj") == F.col("start"))
-            )
-            .select(
-                "doc_id", "dl",
-                # integer weight L/(1+matchLength): exact, order-free
-                (F.lit(L) / (F.lit(1) + F.col("_end") - F.col("start")))
-                .cast("long")
-                .alias("w"),
-            )
+            .where(f"_noff = {k} AND _mslack >= 0 AND _minadj = start")
+            # integer weight L/(1+matchLength): exact, order-free
+            .selectExpr("doc_id", "dl", f"CAST({L} / ((1 + _end) - start) AS BIGINT) AS w")
         )
         return starts.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("ptf"),
-            F.sum("w").alias("sfreq_scaled"),
-            F.max("dl").alias("dl"),
+            F.expr("count(1) AS ptf"),
+            F.expr("sum(w) AS sfreq_scaled"),
+            F.expr("max(dl) AS dl"),
         )
 
     def phrase_match_count(self, phrase: list[str], slop: int = 0) -> int:
@@ -994,12 +1002,9 @@ class InvertedIndex:
         from — one TermStatistics per fixed position plus one per EXPANDED
         term (MultiPhraseQuery.MultiPhraseWeight collects allTermStats
         across every position's term array)."""
-        spark = self.spark
-        if not phrase:
-            return spark.createDataFrame([], "doc_id long, score double")
-        offset_rows = self._phrase_prefix_offsets(phrase, max_expansions)
+        offset_rows = self._phrase_prefix_offsets(phrase, max_expansions) if phrase else None
         if offset_rows is None:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return self.spark.createDataFrame([], "doc_id long, score double")
         occ = self._phrase_occurrences_from_offsets(
             offset_rows, len(phrase), params.lucene_norms
         )
@@ -1008,12 +1013,8 @@ class InvertedIndex:
         # one idf per (term, offset) row: fixed positions count once each,
         # the last position contributes every expanded term's idf
         idf_sum = sum(idfs.get(t, 0.0) for t, _ in offset_rows)
-        tf_d = F.col("ptf").cast("double")
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(self.avgdl)
-        )
-        scored = occ.select("doc_id", (F.lit(idf_sum) * (tf_d / denom)).alias("score"))
+        score = _bm25_sql(sql.dbl(idf_sum), "CAST(ptf AS DOUBLE)", params, self.avgdl)
+        scored = occ.selectExpr("doc_id", f"{score} AS score")
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def phrase_search(
@@ -1052,19 +1053,16 @@ class InvertedIndex:
             return spark.createDataFrame([], "doc_id long, score double")
         if slop == 0:
             occ = self._phrase_occurrences(phrase, params.lucene_norms)
-            tf_d = F.col("ptf").cast("double")
+            tf = "CAST(ptf AS DOUBLE)"
         else:
             occ = self._sloppy_phrase_occurrences(phrase, slop, params.lucene_norms)
             L = math.lcm(*range(1, slop + 2))
-            tf_d = F.col("sfreq_scaled").cast("double") / F.lit(float(L))
+            tf = f"(CAST(sfreq_scaled AS DOUBLE) / {sql.dbl(L)})"
         df_map = self.df_of(sorted(set(phrase)))
         idfs = bm25.idf_map(self.n_docs, df_map)
         idf_sum = sum(idfs.get(t, 0.0) for t in phrase)  # per position, dups counted
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(self.avgdl)
-        )
-        return occ.select("doc_id", (F.lit(idf_sum) * (tf_d / denom)).alias("score"))
+        score = _bm25_sql(sql.dbl(idf_sum), tf, params, self.avgdl)
+        return occ.selectExpr("doc_id", f"{score} AS score")
 
     def rescore_phrase(
         self,
@@ -1098,12 +1096,13 @@ class InvertedIndex:
         ph = self.phrase_score_matches(phrase, params, slop).withColumnRenamed(
             "score", "rescore"
         )
-        joined = window.join(ph, on="doc_id", how="left")
-        combined = F.lit(query_weight) * F.col("score") + F.lit(
-            rescore_weight
-        ) * F.coalesce(F.col("rescore"), F.lit(0.0))
+        combined = (
+            f"(({sql.dbl(query_weight)} * score)"
+            f" + ({sql.dbl(rescore_weight)} * coalesce(rescore, 0.0D))) AS score"
+        )
         return (
-            joined.select("doc_id", combined.alias("score"))
+            window.join(ph, on="doc_id", how="left")
+            .selectExpr("doc_id", combined)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
@@ -1131,25 +1130,17 @@ class InvertedIndex:
         if not 0.0 <= negative_boost <= 1.0:
             raise ValueError(f"negative_boost must be in [0, 1]: {negative_boost}")
         pos = self.score_matches(positive, mode, params)
-        neg_terms = sorted(set(negative))
-        neg = (
-            self._live(self.term_doc_rows(neg_terms))
-            .select("doc_id")
-            .distinct()
-            .withColumn("_neg", F.lit(True))
-        )
-        joined = pos.join(neg, on="doc_id", how="left")
-        demoted = F.when(
-            F.col("_neg").isNotNull(), F.col("score") * F.lit(negative_boost)
-        ).otherwise(F.col("score"))
+        neg = self._live(self.term_doc_rows(sorted(set(negative))))
+        demoted = f"CASE WHEN _neg IS NOT NULL THEN score * {sql.dbl(negative_boost)} ELSE score END"
         return (
-            joined.select("doc_id", demoted.alias("score"))
+            pos.join(neg.selectExpr("doc_id", "true AS _neg").distinct(), on="doc_id", how="left")
+            .selectExpr("doc_id", f"{demoted} AS score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
 
     def _expand_terms(
-        self, cond: Column, max_expansions: int | None
+        self, cond: Column, max_expansions: int | None, dictionary: DataFrame | None = None
     ) -> list[str]:
         """Shared term-dictionary expansion with ES's ``top_terms_N``
         rewrite: when capped, keep the ``max_expansions`` HIGHEST-df terms
@@ -1157,8 +1148,9 @@ class InvertedIndex:
         deterministic and the DuckDB oracle reproduces it exactly).  The
         capped path is a TakeOrderedAndProject over the pruned term_stats
         scan — the driver never receives more than the cap, no matter how
-        many dictionary terms match (the round-4 unbounded-collect fix)."""
-        q = self.term_stats().where(cond).select("term", "df")
+        many dictionary terms match (the round-4 unbounded-collect fix).
+        ``dictionary``: the (term, df) frame to expand, term_stats if None."""
+        q = (self.term_stats() if dictionary is None else dictionary).where(cond).select("term", "df")
         if max_expansions is not None:
             if max_expansions < 1:
                 raise ValueError(f"max_expansions must be >= 1: {max_expansions}")
@@ -1191,8 +1183,6 @@ class InvertedIndex:
             meta_path = os.path.join(self.index_dir, "term_grams_meta.json")
             gdir = os.path.join(self.index_dir, "term_grams")
             if os.path.exists(meta_path) and os.path.isdir(gdir):
-                import json
-
                 with open(meta_path) as fh:
                     meta = json.load(fh)
                 self._gram_n = int(meta["n"])
@@ -1240,22 +1230,8 @@ class InvertedIndex:
                         F.first("df").alias("df"),
                     )
                     .where(F.col("_shared") >= need)
-                    .where(cond)
-                    .select("term", "df")
                 )
-                if max_expansions is not None:
-                    if max_expansions < 1:
-                        raise ValueError(
-                            f"max_expansions must be >= 1: {max_expansions}"
-                        )
-                    rows = (
-                        cand.orderBy(F.desc("df"), F.asc("term"))
-                        .limit(max_expansions)
-                        .collect()
-                    )
-                else:
-                    rows = cand.collect()
-                return sorted(r["term"] for r in rows)
+                return self._expand_terms(cond, max_expansions, cand)
         return self._expand_terms(cond, max_expansions)
 
     def expand_wildcard(
@@ -1287,7 +1263,7 @@ class InvertedIndex:
             pruned = (
                 self.postings()
                 .where(cond)
-                .select("term", "doc_ids_vb", "tfs_vb", "dls_vb")
+                .selectExpr("term", "doc_ids_vb", "tfs_vb", "dls_vb")
             )
             rows = pruned.mapInPandas(_decode_postings_fn(False), DECODED_SCHEMA)
         return self._live(rows.select("doc_id")).distinct().count()
@@ -1357,26 +1333,16 @@ class InvertedIndex:
             raise ValueError(f"size must be >= 1: {size}")
         if suggest_mode not in ("missing", "always"):
             raise ValueError(f"suggest_mode must be missing|always: {suggest_mode}")
-        stats = self.term_stats().select("term", "df")
-        if suggest_mode == "missing":
-            if stats.where(F.col("term") == F.lit(term)).limit(1).count() > 0:
-                return stats.select(
-                    F.col("term").alias("candidate"),
-                    F.lit(0).cast("int").alias("distance"),
-                    F.col("df"),
-                ).limit(0)
-        length_window = (
-            F.length(F.col("term")) >= F.lit(len(term) - max_edits)
-        ) & (F.length(F.col("term")) <= F.lit(len(term) + max_edits))
-        dist = F.levenshtein(F.col("term"), F.lit(term))
+        q, stats = sql.string(term), self.term_stats()
+        cols = ("term AS candidate", f"CAST(levenshtein(term, {q}) AS INT) AS distance", "df")
+        if suggest_mode == "missing" and stats.where(f"term = {q}").limit(1).count() > 0:
+            return stats.selectExpr(*cols).limit(0)
         return (
-            stats.where(length_window)
-            .select(
-                F.col("term").alias("candidate"),
-                dist.cast("int").alias("distance"),
-                F.col("df"),
+            stats.where(
+                f"length(term) >= {len(term) - max_edits} AND length(term) <= {len(term) + max_edits}"
             )
-            .where((F.col("distance") <= max_edits) & (F.col("distance") > 0))
+            .selectExpr(*cols)
+            .where(f"distance <= {int(max_edits)} AND distance > 0")
             .orderBy(F.asc("distance"), F.desc("df"), F.asc("candidate"))
             .limit(size)
         )
@@ -1487,7 +1453,7 @@ class InvertedIndex:
             return self.spark.createDataFrame([], "doc_id long, score double")
         agg = self.score_matches(terms, "OR", params)
         if exclude_doc_ids:
-            agg = agg.where(~F.col("doc_id").isin([int(d) for d in exclude_doc_ids]))
+            agg = agg.where(f"doc_id NOT IN ({', '.join(str(int(d)) for d in exclude_doc_ids)})")
         return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def explain(
@@ -1506,25 +1472,17 @@ class InvertedIndex:
         terms = sorted(set(terms))
         df_map = self.df_of(terms)
         idfs = bm25.idf_map(self.n_docs, df_map)
-        rows = self._live(
-            self.term_doc_rows([t for t in terms if t in df_map], params.lucene_norms)
-        ).where(F.col("doc_id") == doc_id)
         if not df_map:
             return self.spark.createDataFrame(
                 [], "term string, tf long, dl long, idf double, contribution double"
             )
-        idf_expr: Column = F.element_at(
-            F.create_map(*[F.lit(x) for t in idfs for x in (t, idfs[t])]), F.col("term")
-        )
-        tf_d = F.col("tf").cast("double")
-        dl_d = F.col("dl").cast("double")
-        denom = tf_d + F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(self.avgdl)
-        )
-        return rows.select(
-            "term", "tf", "dl",
-            idf_expr.alias("idf"),
-            (idf_expr * (tf_d / denom)).alias("contribution"),
+        rows = self._live(
+            self.term_doc_rows([t for t in terms if t in df_map], params.lucene_norms)
+        ).where(f"doc_id = {int(doc_id)}")
+        idf = _idf_sql(idfs)
+        return rows.selectExpr(
+            "term", "tf", "dl", f"{idf} AS idf",
+            f"{_bm25_sql(idf, 'CAST(tf AS DOUBLE)', params, self.avgdl)} AS contribution",
         )
 
     def search_with_docs(self, terms: list[str], k: int = 10, mode: str = "OR", **kw) -> DataFrame:
@@ -1587,20 +1545,17 @@ def bm25_search_docs(
     # count("term") skips the explode_outer null, so empty docs get dl=0 but
     # still count toward N (BM25's N is ALL docs, not docs-with-tokens)
     per_doc = toks.groupBy("doc_id").agg(
-        F.count("term").alias("dl"),
+        F.expr("count(term) AS dl"),
         *[
-            F.count(F.when(F.col("term") == F.lit(t), True)).alias(f"_tf{i}")
+            F.expr(f"count(CASE WHEN term = {sql.string(t)} THEN true END) AS _tf{i}")
             for i, t in enumerate(terms)
         ],
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        stats = per_doc.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("total"),
-            *[
-                F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"_df{i}")
-                for i in range(len(terms))
-            ],
+        stats = per_doc.selectExpr(
+            "count(1) AS n",
+            "coalesce(sum(dl), 0) AS total",
+            *[f"sum(CAST(_tf{i} > 0 AS BIGINT)) AS _df{i}" for i in range(len(terms))],
         ).collect()[0]
         n_docs = int(stats["n"])
         if n_docs == 0:
@@ -1611,21 +1566,15 @@ def bm25_search_docs(
             for i in range(len(terms))
         ]
 
-        dl_d = F.col("dl").cast("double")
-        norm = F.lit(params.k1) * (
-            F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(avgdl)
-        )
-        score = F.lit(0.0)
-        nterms = F.lit(0)
-        for i in range(len(terms)):  # terms sorted => deterministic fold order
-            tf_d = F.col(f"_tf{i}").cast("double")
-            score = score + F.lit(idfs[i]) * (tf_d / (tf_d + norm))
-            nterms = nterms + (F.col(f"_tf{i}") > 0).cast("int")
-        scored = per_doc.select("doc_id", score.alias("score"), nterms.alias("_nt"))
+        score, nterms = "0.0D", "0"
+        for i, idf in enumerate(idfs):  # terms sorted => deterministic fold order
+            tf = f"CAST(_tf{i} AS DOUBLE)"
+            score = f"({score} + {_bm25_sql(sql.dbl(idf), tf, params, avgdl)})"
+            nterms = f"({nterms} + CAST(_tf{i} > 0 AS INT))"
         need = len(terms) if mode.upper() == "AND" else 1
         rows = (
-            scored.where(F.col("_nt") >= need)
-            .select("doc_id", "score")
+            per_doc.where(f"{nterms} >= {need}")
+            .selectExpr("doc_id", f"{score} AS score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
             .collect()
@@ -1635,6 +1584,17 @@ def bm25_search_docs(
     return spark.createDataFrame(
         [(r["doc_id"], r["score"]) for r in rows], result_schema
     )
+
+
+#: field_value_factor's modifiers and boost modes over SQL text ``{}``
+_FV_MODIFIERS = {
+    "none": "{}",
+    "ln1p": "ln((1.0D + {}))",
+    "log1p": "log10((1.0D + {}))",
+    "sqrt": "sqrt({})",
+    "square": "({0} * {0})",
+}
+_BOOST_MODES = {"multiply": "(score * {})", "sum": "(score + {})", "replace": "{}"}
 
 
 def field_value_factor(
@@ -1660,30 +1620,14 @@ def field_value_factor(
     (pushed column pruning: only ``field`` is read) and a codegen'd
     arithmetic combine — no extra shuffle beyond the join.
     """
-    fv: Column = F.lit(float(factor)) * F.col(field).cast("double")
-    if modifier == "none":
-        pass
-    elif modifier == "ln1p":
-        fv = F.log(F.lit(1.0) + fv)
-    elif modifier == "log1p":
-        fv = F.log10(F.lit(1.0) + fv)
-    elif modifier == "sqrt":
-        fv = F.sqrt(fv)
-    elif modifier == "square":
-        fv = fv * fv
-    else:
+    if modifier not in _FV_MODIFIERS:
         raise ValueError(f"unknown modifier: {modifier}")
-    if boost_mode == "multiply":
-        combined = F.col("score") * fv
-    elif boost_mode == "sum":
-        combined = F.col("score") + fv
-    elif boost_mode == "replace":
-        combined = fv
-    else:
+    if boost_mode not in _BOOST_MODES:
         raise ValueError(f"unknown boost_mode: {boost_mode}")
+    fv = _FV_MODIFIERS[modifier].format(f"({sql.dbl(factor)} * CAST({sql.name(field)} AS DOUBLE))")
     out = scored.join(
         meta.select(F.col(id_col).alias("doc_id"), field), on="doc_id"
-    ).select("doc_id", combined.alias("score"))
+    ).selectExpr("doc_id", f"{_BOOST_MODES[boost_mode].format(fv)} AS score")
     if k is not None:
         out = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     return out
@@ -1716,12 +1660,11 @@ def collapse_top_hits(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    w = Window.partitionBy(collapse_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
+    group, score, id_ = sql.name(collapse_col), sql.name(score_col), sql.name(id_col)
+    rank = f"row_number() OVER (PARTITION BY {group} ORDER BY {score} DESC, {id_}) AS _grk"
     return (
-        scored.withColumn("_grk", F.row_number().over(w))
-        .where(F.col("_grk") == 1)
+        scored.selectExpr("*", rank)
+        .where("_grk = 1")
         .drop("_grk")
         .orderBy(F.desc(score_col), F.asc(id_col))
         .limit(k)

@@ -5,26 +5,47 @@ Round trips are counted by wrapping the gateway client's ``send_command``;
 every command is one synchronous driver → JVM round trip.  The bounds sit
 just above the counts of the SQL-text plan builders, so a regression to
 functions-API trees (one round trip per expression node, ~1,500 per
-clustering call and ~1,000 per ``minhash_lsh_pairs`` plan) fails here.
+clustering call, ~1,000 per ``minhash_lsh_pairs`` plan, ~550 per cached
+``search``, ~1,000 for the hits ⋈ docmap plan with three aggregations and
+~600 per uncached ``search`` or ``phrase_search``) fails here.
 """
 
 from __future__ import annotations
 
 import contextlib
 import gc
+import shutil
+import tempfile
 import threading
 from itertools import combinations
+
+import pytest
+from pyspark.sql import functions as F
 
 from elasticsearch_aggregation_geoclustering_spark import testing
 from elasticsearch_aggregation_geoclustering_spark.extras import dedup
 from elasticsearch_aggregation_geoclustering_spark.operators.clustering import (
     geo_point_clustering,
 )
+from elasticsearch_aggregation_geoclustering_spark.plans import aggs, query
+from elasticsearch_aggregation_geoclustering_spark.plans.index_build import build_index
+from elasticsearch_aggregation_geoclustering_spark.plans.query import InvertedIndex
 
 #: round trips of one geo_point_clustering call (plan, collect, merge)
 CLUSTER_CALL_MAX_ROUND_TRIPS = 170
 #: round trips of building one minhash_lsh_pairs plan (no action)
 MINHASH_PLAN_MAX_ROUND_TRIPS = 125
+#: round trips of one cached 3-term search, plan and collect
+CACHED_SEARCH_MAX_ROUND_TRIPS = 55
+#: the hits ⋈ docmap plan and its extended_stats, histogram and top_hits
+HITS_AGGS_MAX_ROUND_TRIPS = 150
+#: one uncached search on a refreshed reader, plan and collect
+UNCACHED_SEARCH_MAX_ROUND_TRIPS = 115
+#: one 4-term phrase_search on a refreshed reader, plan and collect
+PHRASE_SEARCH_MAX_ROUND_TRIPS = 175
+
+SEARCH_TERMS = ["return", "id_3", "uniq_7"]
+PHRASE = ["for", "i", "in", "range"]
 
 
 @contextlib.contextmanager
@@ -130,3 +151,70 @@ def test_simhash_hamming_matches_python_popcount(spark):
         ]
         assert len(got) == len(set(got))
         assert set(got) == {p for p in want if p[2] <= max_hamming}, max_hamming
+
+
+@pytest.fixture(scope="module")
+def readers(spark):
+    """A cached and an uncached reader over one 40-document index."""
+    d = tempfile.mkdtemp(prefix="floor_")
+    docs = spark.createDataFrame(testing.synth_documents(40, 1))
+    build_index(spark, docs, d, docmap_cols=("lon", "lat"), docs_per_segment=10)
+    cached = InvertedIndex.open(spark, d).cache_postings()
+    yield cached, InvertedIndex.open(spark, d)
+    cached.refresh()
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _budget(spark, request, limit):
+    """Round trips of ``request()`` after one first-use call."""
+    request()
+    with _round_trips(spark) as n:
+        request()
+    assert n[0] <= limit, n[0]
+
+
+def test_cached_search_round_trip_budget(spark, readers):
+    cached, _ = readers
+    _budget(spark, lambda: cached.search(SEARCH_TERMS, k=10).collect(), CACHED_SEARCH_MAX_ROUND_TRIPS)
+
+
+def test_hits_aggregations_round_trip_budget(spark, readers):
+    cached, _ = readers
+
+    def request():
+        hits = cached.score_matches(SEARCH_TERMS).join(cached.docmap(), on="doc_id")
+        aggs.extended_stats(hits, "lon", round_to=4).collect()
+        aggs.histogram(hits, "score", 0.5).collect()
+        aggs.top_hits(hits, "repo", [F.desc("score"), F.asc("doc_id")], 2).collect()
+
+    _budget(spark, request, HITS_AGGS_MAX_ROUND_TRIPS)
+
+
+def test_uncached_search_round_trip_budget(spark, readers):
+    _, live = readers
+    _budget(
+        spark,
+        lambda: live.refresh().search(SEARCH_TERMS, k=10).collect(),
+        UNCACHED_SEARCH_MAX_ROUND_TRIPS,
+    )
+
+
+def test_phrase_search_round_trip_budget(spark, readers):
+    _, live = readers
+    _budget(
+        spark,
+        lambda: live.refresh().phrase_search(PHRASE, k=10).collect(),
+        PHRASE_SEARCH_MAX_ROUND_TRIPS,
+    )
+
+
+@pytest.mark.parametrize("target", [1, 2, 1000])
+def test_decode_partitions_follow_row_sizing(readers, monkeypatch, target):
+    """The uncached decode stage coalesces to the Σ df target without asking
+    for the scan's partition count: a target below the segment-file split
+    narrows it, a target above it leaves the split as it is."""
+    _, live = readers
+    files = live.refresh().postings(SEARCH_TERMS).rdd.getNumPartitions()
+    assert files >= 3
+    monkeypatch.setattr(query, "_partitions_for_rows", lambda rows_est: target)
+    assert live.term_doc_rows(SEARCH_TERMS).rdd.getNumPartitions() == min(target, files)
