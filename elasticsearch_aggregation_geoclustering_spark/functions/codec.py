@@ -155,94 +155,3 @@ def encode_posting_ids(sorted_doc_ids: np.ndarray) -> bytes:
 def decode_posting_ids(buf: bytes) -> np.ndarray:
     """Inverse of encode_posting_ids."""
     return delta_decode(varbyte_decode(buf))
-
-
-# ---------------------------------------------------------------------------
-# Per-segment fixed-width bitpacking (FOR-style) for the shuffle wire format.
-#
-# The pack-before-shuffle payload ships, per doc, the sequence of LOCAL term
-# codes in position order (code = rank of the term among the doc's sorted
-# distinct terms).  Each doc needs only ceil(log2(n_terms)) bits per token —
-# typically 3-4 — instead of the ~1 byte/token a varbyte position delta
-# costs, and the term-frequency column becomes redundant (tf is the
-# histogram of the codes).  Measured on the sf0.1 documents table this
-# halves the post-lz4 shuffle payload: position deltas are the one
-# near-incompressible packed column (~64% of compressed payload), while the
-# code stream is both 2x smaller raw and still partly compressible.
-# ---------------------------------------------------------------------------
-
-_POW2 = (np.uint64(1) << np.arange(63, dtype=np.uint64)).astype(np.int64)
-
-
-def code_width(n_terms: np.ndarray) -> np.ndarray:
-    """Bits per code for docs with ``n_terms`` distinct terms.
-
-    ``bit_length(n_terms - 1)`` computed exactly (binary search over powers
-    of two — no float log2 fuzz at exact powers): 0 for n_terms <= 1 (a
-    single distinct term packs to zero bytes; the decoder rebuilds the
-    all-zeros code sequence from ``dl`` alone).
-    """
-    nt = np.asarray(n_terms, dtype=np.int64)
-    w = np.zeros(nt.shape, dtype=np.int64)
-    m = nt > 1
-    w[m] = np.searchsorted(_POW2, nt[m] - 1, side="right")
-    return w
-
-
-def bitpack_segments(
-    values: np.ndarray, seg_lens: np.ndarray, widths: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pack concatenated per-segment value runs at per-segment bit widths.
-
-    ``values`` holds all segments' codes concatenated segment-major; segment
-    ``i`` has ``seg_lens[i]`` values, each < 2**widths[i].  Each segment's
-    bitstream is little-endian (value j occupies bits [j*w, (j+1)*w), LSB
-    first) and starts byte-aligned so segments slice apart cleanly.
-
-    Returns ``(buf_u8, byte_ends)``: segment i's bytes are
-    ``buf[byte_ends[i-1]:byte_ends[i]]``.  Fully vectorized — the only loop
-    is over bit planes (max width, <= ~20 for any real vocabulary).
-    """
-    v = np.asarray(values, dtype=np.uint64)
-    L = np.asarray(seg_lens, dtype=np.int64)
-    w = np.asarray(widths, dtype=np.int64)
-    nbytes = (L * w + 7) // 8
-    byte_ends = np.cumsum(nbytes)
-    total_bytes = int(byte_ends[-1]) if len(nbytes) else 0
-    if total_bytes == 0:
-        return np.empty(0, dtype=np.uint8), byte_ends
-    w_occ = np.repeat(w, L)
-    seg_off = np.cumsum(L) - L
-    within = np.arange(v.size, dtype=np.int64) - np.repeat(seg_off, L)
-    bitbase = np.repeat((byte_ends - nbytes) * 8, L) + within * w_occ
-    bits = np.zeros(total_bytes * 8, dtype=np.uint8)
-    for k in range(int(w.max()) if w.size else 0):
-        on = (w_occ > k) & (((v >> np.uint64(k)) & np.uint64(1)) != 0)
-        bits[bitbase[on] + k] = 1
-    return np.packbits(bits, bitorder="little"), byte_ends
-
-
-def bitunpack_segments(
-    buf: np.ndarray, seg_lens: np.ndarray, widths: np.ndarray
-) -> np.ndarray:
-    """Inverse of bitpack_segments: decode all segments' values at once."""
-    L = np.asarray(seg_lens, dtype=np.int64)
-    w = np.asarray(widths, dtype=np.int64)
-    total = int(L.sum())
-    out = np.zeros(total, dtype=np.uint64)
-    if total == 0:
-        return out
-    raw = np.asarray(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return out  # every segment packed at width 0 (all codes are 0)
-    bits = np.unpackbits(raw, bitorder="little").astype(np.uint64)
-    nbytes = (L * w + 7) // 8
-    byte_ends = np.cumsum(nbytes)
-    w_occ = np.repeat(w, L)
-    seg_off = np.cumsum(L) - L
-    within = np.arange(total, dtype=np.int64) - np.repeat(seg_off, L)
-    bitbase = np.repeat((byte_ends - nbytes) * 8, L) + within * w_occ
-    for k in range(int(w.max()) if w.size else 0):
-        sel = w_occ > k
-        out[sel] |= bits[bitbase[sel] + k] << np.uint64(k)
-    return out

@@ -121,151 +121,6 @@ def doc_term_positions(texts: pd.Series) -> tuple[pd.DataFrame, np.ndarray]:
     return frame, pos[order]
 
 
-def pack_term_frequencies(
-    texts: pd.Series, with_positions: bool = True
-) -> pd.DataFrame:
-    """Per-doc packed term frequencies in shuffle-friendly FLAT form.
-
-    Returns a DataFrame with one row per input text.  With positions (the
-    Lucene text-field default)::
-
-        terms_blob : str    space-joined sorted-unique tokens ("" if none)
-        codes_pk   : bytes  bitpacked sequence of LOCAL term codes in
-                            position order — code = rank of the token among
-                            the doc's sorted distinct terms, packed at
-                            ceil(log2(n_terms)) bits per token, LSB-first
-        n_terms    : int64  number of distinct terms
-        dl         : int64  doc length in tokens (= len of the code seq)
-
-    The code sequence is a lossless joint encoding of BOTH term frequencies
-    (tf = histogram of the codes) and per-term position lists (positions of
-    term t = indices where code == t, recovered by one stable argsort), so
-    the former ``tfs_vb`` + ``pos_vb`` columns collapse into one column at
-    ~3-4 bits/token instead of ~1.5 bytes/token.  Position varbyte deltas
-    were the one near-incompressible packed column (~64% of the post-lz4
-    shuffle payload on the sf0.1 documents table); the code stream halves
-    the wire bytes a positional build shuffles.
-
-    Without positions (ES ``index_options: freqs``)::
-
-        terms_blob : str    as above
-        tfs_vb     : bytes  LEB128 varbyte of the aligned tf counts
-        n_terms    : int64  number of distinct terms
-
-    This is what the index build ships through its shuffle instead of raw
-    content: repeated tokens collapse before any wire, and the flat encoding
-    avoids per-token Python objects on both the Arrow serialize and
-    deserialize sides (a list<string> column would materialize every token
-    as a Python object twice).  Tokens match ``[a-z0-9_]+`` so a single
-    space is an unambiguous separator.
-    """
-    from . import codec
-
-    if with_positions:
-        tf, pos_flat = doc_term_positions(texts)
-    else:
-        tf = doc_term_frequencies(texts)
-    n = len(texts)
-    nt = np.zeros(n, dtype=np.int64)
-    if tf.empty:
-        if with_positions:
-            return pd.DataFrame(
-                {"terms_blob": [""] * n, "codes_pk": [b""] * n, "n_terms": nt,
-                 "dl": np.zeros(n, dtype=np.int64)}
-            )
-        return pd.DataFrame({"terms_blob": [""] * n, "tfs_vb": [b""] * n, "n_terms": nt})
-    rows = tf["row"].to_numpy(np.int64)
-    tf_vals = tf["tf"].to_numpy(np.int64)
-    nt = np.bincount(rows, minlength=n).astype(np.int64)
-    bounds = np.cumsum(nt)[:-1]
-    chunks = np.split(tf["term"].to_numpy(), bounds)
-    blobs = [" ".join(c) for c in chunks]  # one join per doc, not per token
-
-    if with_positions:
-        # scatter each occurrence's local term code to its position slot:
-        # runs arrive row-major / term-asc, pos_flat run-aligned, and each
-        # doc's positions cover [0, dl) exactly once
-        dl = np.bincount(rows, weights=tf_vals, minlength=n).astype(np.int64)
-        run_row_starts = np.cumsum(nt) - nt
-        local = np.arange(len(rows), dtype=np.int64) - np.repeat(run_row_starts, nt)
-        rows_occ = np.repeat(rows, tf_vals)
-        local_occ = np.repeat(local, tf_vals)
-        doc_seq_off = np.cumsum(dl) - dl
-        code_seq = np.empty(int(dl.sum()), dtype=np.uint64)
-        code_seq[doc_seq_off[rows_occ] + pos_flat] = local_occ.astype(np.uint64)
-        buf, byte_ends = codec.bitpack_segments(code_seq, dl, codec.code_width(nt))
-        starts = np.concatenate(([0], byte_ends[:-1]))
-        codes_pk = [buf[s:e].tobytes() for s, e in zip(starts, byte_ends)]
-        return pd.DataFrame(
-            {"terms_blob": blobs, "codes_pk": codes_pk, "n_terms": nt, "dl": dl}
-        )
-
-    def _slice_per_doc(buf: np.ndarray, ends: np.ndarray, counts: np.ndarray) -> list[bytes]:
-        """Slice one encoded stream into per-doc bytes by value counts."""
-        cum = np.cumsum(counts)
-        byte_ends = np.where(cum > 0, ends[np.maximum(cum - 1, 0)], 0)
-        byte_starts = np.concatenate(([0], byte_ends[:-1]))
-        return [buf[s:e].tobytes() for s, e in zip(byte_starts, byte_ends)]
-
-    buf, ends = codec.varbyte_encode_all(tf_vals.astype(np.uint64))
-    tfs_vb = _slice_per_doc(buf, ends, nt)
-    return pd.DataFrame({"terms_blob": blobs, "tfs_vb": tfs_vb, "n_terms": nt})
-
-
-def packed_term_frequencies(
-    blobs: pd.Series,
-    n_terms: pd.Series,
-    tfs_vb: pd.Series | None = None,
-    codes_pk: pd.Series | None = None,
-    dl: pd.Series | None = None,
-) -> pd.DataFrame | tuple[pd.DataFrame, np.ndarray]:
-    """Rebuild the (row, term, tf) frame from the flat packed columns.
-
-    Inverse of ``pack_term_frequencies`` — same output shape and ordering as
-    ``doc_term_frequencies`` (row asc, term asc within row), so the segment
-    builder is agnostic to whether it got raw text or packed rows.  One
-    string split and one bit-unpack (or varbyte decode) per batch — no
-    per-token Python.
-
-    Pass ``tfs_vb`` for the freqs layout (returns the frame), or
-    ``codes_pk`` + ``dl`` for the positional layout (returns
-    ``(frame, pos_flat)`` with the absolute flat positions array aligned
-    exactly like ``doc_term_positions``): tf is the per-doc histogram of
-    the code sequence and the run-major position list is its stable
-    argsort — stability keeps positions ascending inside each run.
-    """
-    from . import codec
-
-    nt = n_terms.to_numpy(np.int64)
-    total = int(nt.sum())
-    positional = codes_pk is not None
-    if total == 0:
-        empty = pd.DataFrame(
-            {"row": np.empty(0, np.int64), "term": [], "tf": np.empty(0, np.int64)}
-        )
-        return (empty, np.empty(0, np.int64)) if positional else empty
-    nonempty = nt > 0
-    joined = " ".join(blobs.to_numpy()[nonempty])
-    term_flat = np.array(joined.split(" "), dtype=object)
-    rows = np.repeat(np.arange(len(nt), dtype=np.int64), nt)
-    if not positional:
-        tf_flat = codec.varbyte_decode(b"".join(tfs_vb)).astype(np.int64)
-        return pd.DataFrame({"row": rows, "term": term_flat, "tf": tf_flat})
-    dlv = dl.to_numpy(np.int64)
-    buf = np.frombuffer(b"".join(codes_pk), dtype=np.uint8)
-    codes = codec.bitunpack_segments(buf, dlv, codec.code_width(nt)).astype(np.int64)
-    run_row_starts = np.cumsum(nt) - nt
-    # flat run id of each occurrence = doc's first-run offset + local code
-    key = np.repeat(run_row_starts, dlv) + codes
-    tf_flat = np.bincount(key, minlength=total).astype(np.int64)
-    frame = pd.DataFrame({"row": rows, "term": term_flat, "tf": tf_flat})
-    within = np.arange(codes.size, dtype=np.int64) - np.repeat(
-        np.cumsum(dlv) - dlv, dlv
-    )
-    pos_flat = within[np.argsort(key, kind="stable")]
-    return frame, pos_flat
-
-
 def tokenize_python(text: str) -> list[str]:
     """Scalar tokenizer for oracles and tests."""
     return _TOKEN_RE.findall(text.lower())

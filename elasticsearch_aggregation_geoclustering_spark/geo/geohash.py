@@ -41,11 +41,12 @@ def _encode_axis(deg: np.ndarray, decode_step: float, limit: float) -> np.ndarra
     """Lucene GeoEncodingUtils.encodeLatitude/encodeLongitude, vectorized.
 
     Returns signed 32-bit quantized values as int64 (to keep numpy happy).
+    A NaN or out-of-range coordinate raises.
     """
     deg = np.asarray(deg, dtype=np.float64)
-    if np.any((deg < -limit) | (deg > limit)):
-        bad = deg[(deg < -limit) | (deg > limit)]
-        raise ValueError(f"coordinate out of range [±{limit}]: {bad[:3]}")
+    bad = ~((deg >= -limit) & (deg <= limit))  # NaN fails both comparisons
+    if np.any(bad):
+        raise ValueError(f"coordinate out of range [±{limit}]: {deg[bad][:3]}")
     # the maximum value cannot be encoded without overflow: step down one ulp
     deg = np.where(deg == limit, np.nextafter(limit, -np.inf), deg)
     return np.floor(deg / decode_step).astype(np.int64)

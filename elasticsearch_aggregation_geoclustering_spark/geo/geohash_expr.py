@@ -3,13 +3,15 @@
 Same bit algorithm as geo/geohash.py's numpy version (Lucene axis
 quantization → sign-flip → morton interleave → keep top 5·level bits → pack
 level low), expressed with Spark's long bit ops so the clustering hot path
-stays inside whole-stage codegen — the Arrow UDF round-trip disappears
-entirely from geo_cell_aggregate's plan.
+stays inside whole-stage codegen — no Arrow UDF appears in
+geo_cell_aggregate's plan at any zoom.
 
-Valid for precision 1..11: at level 12 the packed key uses bit 63 and the
-signed-long shifts would need extra care, so that (rare, max-zoom) case
-stays on the Arrow/numpy path.  Out-of-range and NaN coordinates raise at
-execution time, as the numpy path does; NULL coordinates yield a NULL key.
+Valid for every precision 1..12.  At level 12 the packed key keeps bit 63,
+so it is a negative long — the same bits numpy's uint64 key has when viewed
+as int64.  Out-of-range and NaN coordinates raise at execution time, as the
+numpy path does; NULL coordinates yield a NULL key.  The same Lucene axis
+quantization, decoded back to degrees, is :func:`quantize_sql` (the
+doc_values / wire grid the clustering parity modes round-trip through).
 
 The expressions are written as SQL text and parsed JVM-side: building the
 same tree from ``pyspark.sql.functions`` calls costs one py4j round trip
@@ -30,7 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.sql_text import dbl, name
-from .geohash import LATITUDE_DECODE, LONGITUDE_DECODE
+from .geohash import LATITUDE_DECODE, LONGITUDE_DECODE, MAX_PRECISION
 
 _SPREAD_STEPS = (
     (16, 0x0000FFFF0000FFFF),
@@ -59,8 +61,9 @@ def _spread_sql(x: str, shift: int, mask: int) -> str:
 def _key_sql(lat_bits: str, lon_bits: str, precision: int) -> str:
     """Morton-interleave spread lat (even bits) and lon (odd bits), keep the
     top 5·precision bits and pack the level low.  lon<<1 may set bit 63
-    (negative long, correct bit pattern); the unsigned shift right restores
-    a non-negative key for precision <= 11 (shift >= 9)."""
+    (negative long, correct bit pattern); the unsigned shift right clears it
+    for precision <= 11 (shift >= 9), and at precision 12 (shift 4) the
+    shift back left restores it — numpy's uint64 key viewed as int64."""
     morton = f"({lat_bits} | shiftleft({lon_bits}, 1))"
     shift = 4 + 5 * (12 - precision)
     return f"CAST((shiftleft(shiftrightunsigned({morton}, {shift}), 4) | {precision}) AS BIGINT)"
@@ -94,19 +97,42 @@ def _validator_sql(lon: str, lat: str) -> str:
 
 
 def _check_precision(precision: int) -> None:
-    if not 1 <= precision <= 11:
-        raise ValueError(f"JVM cell keys support precision 1..11: {precision}")
+    if not 1 <= precision <= MAX_PRECISION:
+        raise ValueError(f"cell keys support precision 1..{MAX_PRECISION}: {precision}")
+
+
+def quantize_sql(deg: str, decode_step: float, limit: float) -> str:
+    """Round-trip the degrees expression ``deg`` through the Lucene 32-bit
+    grid: ``floor(deg / step) · step``, the +edge stepped down one ulp
+    (GeoEncodingUtils encode/decode; InternalGeoPointClustering.java:173-185).
+
+    Equal to ``geohash._encode_axis(deg, step, limit) * step``.  NULL stays
+    NULL and a NaN or out-of-range value raises, where ``least`` alone would
+    put either on the edge cell (Spark's ``least`` skips NULLs and orders
+    NaN above every number).
+    """
+    edge = float(np.nextafter(limit, -np.inf))
+    grid = (
+        f"CAST(FLOOR(LEAST({deg}, {dbl(edge)}) / {dbl(decode_step)}) AS DOUBLE)"
+        f" * {dbl(decode_step)}"
+    )
+    err = f"raise_error(concat('geo coordinate out of range: ', CAST({deg} AS STRING)))"
+    return (
+        f"CASE WHEN {deg} IS NULL THEN CAST(NULL AS DOUBLE)"
+        f" WHEN isnan({deg}) OR {deg} < {dbl(-limit)} OR {deg} > {dbl(limit)}"
+        f" THEN CAST({err} AS DOUBLE) ELSE {grid} END"
+    )
 
 
 def cell_expr(lon_col: str, lat_col: str, precision: int) -> Column:
     """``Geohash.longEncode(lon, lat, precision)`` as a codegen-able Column
     over the named coordinate columns.
 
-    Bit-identical to geo.geohash.long_encode for precision 1..11.
+    Bit-identical to geo.geohash.long_encode for precision 1..12.
 
     An out-of-range or NaN coordinate raises at execution time instead of
-    silently producing an undefined cell key — the same failure mode as the
-    Arrow/numpy path at precision 12, and the loud analog of the range check
+    silently producing an undefined cell key — the same failure mode as
+    geo.geohash.long_encode, and the loud analog of the range check
     ES's geo_point mapper applies at index time.  A NULL coordinate yields a
     NULL key (an absent value, not an invalid one — the reference skips docs
     with no value, and the raw expression would otherwise silently encode

@@ -3,7 +3,7 @@
 Maps the reference pipeline (SURVEY.md §3.1) onto one declarative plan:
 
     df.where(<query>)                        # P5: Catalyst pushes to the scan
-      .select(cell_udf(lon, lat), lat, lon)  # P7: Arrow-vectorized geohash
+      .select(cell(lon, lat), lat, lon)      # P7: codegen'd JVM geohash
       .groupBy("cell")                       # P8/P9/P12: partial+final
       .agg(count, sum(lat), sum(lon), ...)   #   HashAggregate, one shuffle
       .orderBy(desc("cell")).limit(size)     # P13: TakeOrderedAndProject
@@ -84,23 +84,12 @@ def _normalize_metrics(metrics: dict | None) -> dict[str, MetricSpec]:
 def cell_column(lon_col: str, lat_col: str, precision: int) -> Column:
     """Geohash long-key column over the named coordinate columns (P7).
 
-    Precision 1..11 (every zoom the planner produces below max) compiles to a
-    pure JVM bit-arithmetic expression — the whole cell aggregation stays in
-    whole-stage codegen with zero Python workers.  Precision 12 packs bit 63
-    and uses the Arrow-batched numpy encoder instead; both produce identical
-    keys (tests/test_geohash.py pins JVM == numpy on edge + random points).
+    Every precision 1..12 compiles to a pure JVM bit-arithmetic expression —
+    the whole cell aggregation stays in whole-stage codegen with zero Python
+    workers, with keys identical to the numpy encoder (tests/test_geohash.py
+    pins JVM == numpy on edge + random points).
     """
-    if precision <= 11:
-        return geohash_expr.cell_expr(lon_col, lat_col, precision)
-
-    @F.pandas_udf(LongType())
-    def _encode(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        keys = geohash.long_encode(
-            lon_s.to_numpy(dtype=np.float64), lat_s.to_numpy(dtype=np.float64), precision
-        )
-        return pd.Series(keys)
-
-    return _encode(lon_col, lat_col)
+    return geohash_expr.cell_expr(lon_col, lat_col, precision)
 
 
 def geohash_string_column(cells: Column) -> Column:
@@ -113,27 +102,15 @@ def geohash_string_column(cells: Column) -> Column:
     return _render(cells)
 
 
-def _quantize_centroid(lat: Column, lon: Column) -> tuple[Column, Column]:
-    """Round-trip a centroid through the Lucene 32-bit wire grid (P11).
-
-    encodeLatLon/decodeLatitude/decodeLongitude in
-    InternalGeoPointClustering.java:173-185: encode = floor(deg/step) (with
-    the +edge stepped down), decode = encoded * step.
-    """
-
-    @F.pandas_udf(DoubleType())
-    def _qlat(s: pd.Series) -> pd.Series:
-        v = s.to_numpy(dtype=np.float64)
-        enc = geohash._encode_axis(v, geohash.LATITUDE_DECODE, 90.0)
-        return pd.Series(enc * geohash.LATITUDE_DECODE)
-
-    @F.pandas_udf(DoubleType())
-    def _qlon(s: pd.Series) -> pd.Series:
-        v = s.to_numpy(dtype=np.float64)
-        enc = geohash._encode_axis(v, geohash.LONGITUDE_DECODE, 180.0)
-        return pd.Series(enc * geohash.LONGITUDE_DECODE)
-
-    return _qlat(lat), _qlon(lon)
+def _quantized(lat: str, lon: str) -> tuple[Column, Column]:
+    """Round-trip a (lat, lon) pair of SQL expressions through the Lucene
+    32-bit grid (P11): the doc_values grid and the wire grid of
+    encodeLatLon/decodeLatitude/decodeLongitude
+    (InternalGeoPointClustering.java:173-185) are the same quantization."""
+    return (
+        F.expr(geohash_expr.quantize_sql(lat, geohash.LATITUDE_DECODE, 90.0)),
+        F.expr(geohash_expr.quantize_sql(lon, geohash.LONGITUDE_DECODE, 180.0)),
+    )
 
 
 def explode_multi_points(
@@ -167,9 +144,10 @@ def explode_multi_points(
         F.col(f"_pt.{lat_field}").cast("double").alias("lat"),
     )
     # full-precision (level 12) encoding = Lucene doc_values sort key
-    enc = cell_column("lon", "lat", MAX_PRECISION_LEVEL).alias("_enc")
-    cell = cell_column("lon", "lat", precision).alias("_cell")
-    with_keys = base.select("_doc", "lon", "lat", enc, cell)
+    with_keys = geohash_expr.with_cell_column(
+        geohash_expr.with_cell_column(base, "lon", "lat", MAX_PRECISION_LEVEL, "_enc"),
+        "lon", "lat", precision, "_cell",
+    )
     # ordering key carries (lon, lat) tiebreakers: two DISTINCT raw points can
     # share a level-12 encoding (~3.7 cm cells), and a bare min_by would then
     # pick either one nondeterministically across retries/engines
@@ -235,15 +213,10 @@ def _cell_aggregate(
         *([F.expr(f"`{shard_col}` AS _shard")] if shard_col else []),
         *[spec.expr.alias(f"_m_{name}") for name, spec in specs.items()],
     )
-    if plan.precision <= 11:
-        # staged projections: identical bits to cell_column, but the codegen
-        # source stays linear instead of 2^5-expanded — saves ~2 s of janino
-        # compile on the first query at each distinct precision
-        base = geohash_expr.with_cell_column(base, "_lon", "_lat", plan.precision, "cell")
-    else:
-        base = base.withColumn(
-            "cell", cell_column("_lon", "_lat", plan.precision)
-        )
+    # staged projections: identical bits to cell_column, but the codegen
+    # source stays linear instead of 2^5-expanded — saves ~2 s of janino
+    # compile on the first query at each distinct precision
+    base = geohash_expr.with_cell_column(base, "_lon", "_lat", plan.precision, "cell")
     # NULL coords = absent values: skipped, as the reference's doc_values
     # iterator does for docs without the field.  The filter tests the RAW
     # inputs, not the computed cell (cell is NULL iff an input is NULL —
@@ -298,7 +271,7 @@ def _cell_aggregate(
             .drop("_rn")
         )
     if quantize_wire:
-        qlat, qlon = _quantize_centroid(F.col("_plat"), F.col("_plon"))
+        qlat, qlon = _quantized("_plat", "_plon")
         partial = partial.withColumn("_qlat", qlat).withColumn("_qlon", qlon)
     else:
         partial = partial.withColumn("_qlat", F.col("_plat")).withColumn(
@@ -384,18 +357,8 @@ def _cell_aggregate_es(
     groupBy is the scale path; its centroids differ from ES only by the
     association order, ≤ ~1e-7).
     """
-    lat_step = float(geohash.LATITUDE_DECODE)
-    lon_step = float(geohash.LONGITUDE_DECODE)
     lat_d, lon_d = F.col(lat_col).cast("double"), F.col(lon_col).cast("double")
-    # Lucene encode steps the +edge down one ulp; everything else floors
-    qlat = (
-        F.floor(F.least(lat_d, F.lit(geohash_expr._LAT_MAX)) / F.lit(lat_step))
-        .cast("double") * F.lit(lat_step)
-    )
-    qlon = (
-        F.floor(F.least(lon_d, F.lit(geohash_expr._LON_MAX)) / F.lit(lon_step))
-        .cast("double") * F.lit(lon_step)
-    )
+    qlat, qlon = _quantized(f"CAST(`{lat_col}` AS DOUBLE)", f"CAST(`{lon_col}` AS DOUBLE)")
     base = (
         df.where(lat_d.isNotNull() & lon_d.isNotNull())
         .select(
@@ -407,12 +370,7 @@ def _cell_aggregate_es(
     )
     # cell keys from the QUANTIZED coords — the reference encodes from the
     # decoded doc_values, not the raw source
-    if plan.precision <= 11:
-        base = geohash_expr.with_cell_column(base, "_qlon", "_qlat", plan.precision, "cell")
-    else:  # max zoom: level-12 keys pack bit 63, Arrow/numpy path
-        base = base.withColumn(
-            "cell", cell_column("_qlon", "_qlat", plan.precision)
-        )
+    base = geohash_expr.with_cell_column(base, "_qlon", "_qlat", plan.precision, "cell")
 
     def assoc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_shard", "_ord"], kind="stable")

@@ -17,16 +17,13 @@ never persisted — everything global rides key-only column-pruned jobs:
    the global key order, never on where boundaries fall, so ids are
    identical across runs and parallelism levels (resume-stable).  Appends
    and upserts plan their batch through the same two jobs.
-2. **tokenize placement is a measured choice** (``pack_before_shuffle``):
-   by default tokenization runs fused inside the segment builder (one Python
-   stage per doc — fastest when Python CPU is the bottleneck, e.g. local
-   shuffle through the page cache); with ``pack_before_shuffle=True`` a
-   map-side ``mapInPandas`` collapses each doc to flat packed rows
-   (space-joined sorted-unique terms blob + varbyte tf bytes + varbyte
-   position deltas + sha256) and DROPS the raw content before the shuffle —
-   the right trade when the shuffle crosses a real network and content
-   bytes dominate the wire.  Segment bytes are identical in both modes
-   (tested).
+2. **tokenize once, inside the segment builder** — raw content rides the
+   one full-data shuffle and each document is analyzed exactly once, in the
+   same Python stage that encodes its segment (the host engine's shape: the
+   segment writer runs the analyzer).  A map-side pre-pack that shuffled
+   packed term rows instead was measured slower on the replicated-input
+   job at every parallelism (it doubles the per-document Python/Arrow
+   stages) and was removed.
 3. **segmenting** — ``seg_id = doc_id // docs_per_segment``: contiguous,
    disjoint docID ranges, the analog of Lucene segments.  Segments partition
    by DOCUMENT, not by term, so Zipf-hot terms ("the", "import") cannot
@@ -72,8 +69,6 @@ from ..functions.tokenizer import (
     TOKENIZER_VERSION,
     doc_term_frequencies,
     doc_term_positions,
-    pack_term_frequencies,
-    packed_term_frequencies,
 )
 from ..sources import segments as seg_store
 from ..sources.segments import (
@@ -197,11 +192,11 @@ def _partition_slot_expr(counts: dict[int, int], num_partitions: int) -> Column:
 
     ``repartitionByRange`` launches a range-boundary SAMPLING job that
     re-executes the exchange's whole child plan — for the index build that
-    is a second full pass over the corpus including sha256 (and tokenize in
-    pack mode).  The bucket counts are already EXACT (they drive the docID
-    offsets), so the driver can pack buckets into partitions itself and
-    skip the sampling pass entirely; placement balance is identical
-    (both pack the same exact counts toward total/P per partition).
+    is a second full pass over the corpus including sha256.  The bucket
+    counts are already EXACT (they drive the docID offsets), so the driver
+    can pack buckets into partitions itself and skip the sampling pass
+    entirely; placement balance is identical (both pack the same exact
+    counts toward total/P per partition).
     """
     total = sum(counts.values())
     if not counts or total == 0:
@@ -456,8 +451,8 @@ def _slot_exchange(
     A hash exchange on a driver-planned slot (see _partition_slot_expr): the
     same contiguous-bucket placement as ``repartitionByRange``, WITHOUT its
     boundary-sampling job, which would re-run the whole child plan (scan +
-    sha256, + tokenize/pack in pack mode) once more over every row.  Rows
-    come out sorted by (bucket, key) within each partition.
+    sha256) once more over every row.  Rows come out sorted by (bucket, key)
+    within each partition.
     """
     return (
         df.withColumn("_b", bexpr)
@@ -489,27 +484,6 @@ def _assign_ids_for_batch(
     return ids
 
 
-def _pack_fn(content_col: str, passthrough: list[str], with_positions: bool = True):
-    """mapInPandas: tokenize + collapse to flat packed term rows; DROP content."""
-
-    cols = (
-        ["terms_blob", "codes_pk", "n_terms", "dl"]
-        if with_positions
-        else ["terms_blob", "tfs_vb", "n_terms"]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            packed = pack_term_frequencies(pdf[content_col], with_positions)
-            out = pdf[passthrough].reset_index(drop=True)
-            out[cols] = packed[cols]
-            yield out
-
-    return run
-
-
 def _build_one_segment(
     index_dir: str,
     seg_id: int,
@@ -521,9 +495,6 @@ def _build_one_segment(
     """Pack one segment; write postings + docmap part atomically; return the
     manifest/lineage dict.  Shared by the interior (in-partition) and
     fragment (shuffled-boundary) build paths — identical bytes either way.
-    Accepts either raw content (fused tokenize path) or pre-packed term rows
-    (pack_before_shuffle path); both yield the same tf frame, so segment
-    bytes are identical across the two modes.
     """
     import pyarrow as pa
 
@@ -531,18 +502,7 @@ def _build_one_segment(
     pdf = pdf.sort_values("doc_id").reset_index(drop=True)
     doc_ids = pdf["doc_id"].to_numpy(np.int64)
 
-    if "terms_blob" in pdf.columns:
-        if with_positions:
-            tf_frame, pos_flat = packed_term_frequencies(
-                pdf["terms_blob"], pdf["n_terms"],
-                codes_pk=pdf["codes_pk"], dl=pdf["dl"],
-            )
-        else:
-            tf_frame = packed_term_frequencies(
-                pdf["terms_blob"], pdf["n_terms"], tfs_vb=pdf["tfs_vb"]
-            )
-            pos_flat = np.empty(0, dtype=np.int64)
-    elif with_positions:
+    if with_positions:
         tf_frame, pos_flat = doc_term_positions(pdf[content_col])
     else:
         tf_frame = doc_term_frequencies(pdf[content_col])
@@ -564,7 +524,7 @@ def _build_one_segment(
         pair_pos_starts = np.empty(0, dtype=np.int64)
     else:
         # postings order: (term asc, doc_id asc); rows within a term are
-        # already doc-ordered because packed_term_frequencies emits row-major
+        # already doc-ordered because the tokenizer emits row-major
         term_sorted = tf_frame.sort_values(["term", "row"], kind="stable")
         perm = term_sorted.index.to_numpy(np.int64)  # frame-order -> postings-order
         term_sorted = term_sorted.reset_index(drop=True)
@@ -752,7 +712,6 @@ def build_index(
     docs_per_segment: int = DEFAULT_DOCS_PER_SEGMENT,
     resume: bool = True,
     num_partitions: int | None = None,
-    pack_before_shuffle: bool = False,
     index_options: str = "positions",
 ) -> dict:
     """Build (or resume) the inverted index; returns the stats dict.
@@ -760,28 +719,20 @@ def build_index(
     ``index_options`` mirrors the ES mapping setting of the same name:
     ``"positions"`` (the Lucene text-field default) stores token positions
     per posting (pos_vb), enabling phrase/proximity queries; ``"freqs"``
-    omits them — segments and the (pack-mode) shuffle payload shrink by
-    roughly the token count, and phrase queries raise, exactly as ES errors
-    on a field "indexed without position data".  A resumed build keeps the
-    original index's setting.
+    omits them — segments shrink by roughly the token count, and phrase
+    queries raise, exactly as ES errors on a field "indexed without position
+    data".  A resumed build keeps the original index's setting.
 
     ``docmap_cols``: extra columns carried into the docmap table (e.g. lang,
     lon, lat) for query-time joins.  The docmap also records
     ``sha256(content)`` per row — the input_hint per-row invariant.
 
-    ``pack_before_shuffle`` chooses where tokenization runs relative to the
-    one full-data shuffle — segment bytes are identical either way:
-
-    * False (default): ship raw content, tokenize inside the segment builder.
-      ONE fused Python stage per doc; on a single box (local[N], shuffle via
-      page cache) this is strictly faster because Python CPU, not shuffle
-      bytes, is the bottleneck, and the fused stage pipelines perfectly with
-      the JVM shuffle.
-    * True: tokenize+pack map-side and shuffle flat packed term rows instead
-      of content.  Two Python stages per doc (~+50% Python/Arrow work), but
-      shuffle volume drops to the distinct-term payload — the right trade on
-      a real multi-executor cluster where the shuffle crosses a network and
-      content bytes dominate the wire.
+    Raw content rides the one full-data shuffle and is tokenized inside
+    the segment builder: ONE fused Python stage per document, which
+    pipelines with the JVM shuffle.  Tokenizing map-side and shuffling
+    packed term rows instead adds a second Python/Arrow stage per document
+    for a smaller shuffle; it lost on files/s at every parallelism measured
+    (CHANGES.md) and is not offered.
     """
     if index_options not in ("positions", "freqs"):
         raise ValueError(f"index_options must be positions|freqs: {index_options}")
@@ -821,7 +772,7 @@ def build_index(
         _write_segments(
             docs, index_dir, manifest, bexpr, counts, _bucket_offsets(counts), done,
             content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
-            num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
+            num_partitions=num_partitions,
         )
         parts = seg_store.load_manifest_parts(index_dir)
     return _commit(spark, index_dir, manifest, parts)
@@ -852,7 +803,6 @@ def _write_segments(
     key_cols: tuple[str, ...],
     docmap_cols: tuple[str, ...],
     num_partitions: int,
-    pack_before_shuffle: bool,
 ) -> None:
     """The ONE full-data job, shared by ``build_index`` and ``append_index``:
     build every segment of ``docs`` not in ``done``, with docIDs
@@ -869,18 +819,6 @@ def _write_segments(
     work = docs.select(*key_cols, *docmap_cols, content_col).withColumn(
         "sha256", F.sha2(F.col(content_col).cast("binary"), 256)
     )
-    if pack_before_shuffle:
-        packed_fields = (
-            ["terms_blob string", "codes_pk binary", "n_terms long", "dl long"]
-            if with_positions
-            else ["terms_blob string", "tfs_vb binary", "n_terms long"]
-        )
-        pack_schema = ", ".join(
-            [f"`{n}` {t}" for n, t in work.drop(content_col).dtypes] + packed_fields
-        )
-        work = work.mapInPandas(
-            _pack_fn(content_col, [*dm_cols, "sha256"], with_positions), pack_schema
-        )
     ranged = _slot_exchange(work, bexpr, counts, num_partitions, key_cols)
     frag_schema = ", ".join(
         ["doc_id long"]
@@ -914,36 +852,55 @@ def _commit(
     for sid, meta in parts.items():
         manifest.segments.setdefault(sid, meta)
     save_manifest(index_dir, manifest)
+    return _write_global_stats(
+        spark,
+        index_dir,
+        n_docs=sum(m["n_docs"] for m in manifest.segments.values()),
+        total_tokens=sum(m["total_tokens"] for m in manifest.segments.values()),
+        n_segments=len(manifest.segments),
+        tokenizer_version=manifest.tokenizer_version,
+        index_options=manifest.index_options,
+    )
 
-    # global term stats: one input row per distinct (term, segment) — the
-    # parquet scan is pruned to (term, df); partial aggregation collapses hot
-    # terms map-side, so no skewed reducer.
-    postings = spark.read.parquet(seg_store.segments_glob(index_dir))
-    # the groupBy's exchange already hash-partitions by term, so the write
-    # rides THAT partitioning: each file is term-sorted (row-group min/max
-    # stats prune point lookups within every file) and AQE sizes the file
-    # count from the data.  The earlier repartitionByRange(term) bought
-    # cross-file range disjointness at the price of a SECOND exchange plus
-    # its boundary-sampling job (one more full pass over the aggregated
-    # dictionary) — per-lookup cost is a footer-stats check per file either
-    # way, so the extra exchange was pure overhead.
+
+def _write_global_stats(
+    spark: SparkSession,
+    index_dir: str,
+    *,
+    n_docs: int,
+    total_tokens: int,
+    n_segments: int,
+    tokenizer_version: str,
+    index_options: str,
+) -> dict:
+    """The one global-stats writer, shared by ``_commit`` and
+    ``merge_segments``: ``term_stats`` = Σdf per term over the index's
+    segments, then stats.json; returns the stats dict."""
+    # one input row per distinct (term, segment) — the parquet scan is
+    # pruned to (term, df); partial aggregation collapses hot terms
+    # map-side, so no skewed reducer.  The groupBy's exchange already
+    # hash-partitions by term, so the write rides THAT partitioning: each
+    # file is term-sorted (row-group min/max stats prune point lookups
+    # within every file) and AQE sizes the file count from the data.  A
+    # repartitionByRange(term) would buy cross-file range disjointness at
+    # the price of a SECOND exchange plus its boundary-sampling job (one
+    # more full pass over the aggregated dictionary) — per-lookup cost is a
+    # footer-stats check per file either way.
     (
-        postings.groupBy("term")
+        spark.read.parquet(seg_store.segments_glob(index_dir))
+        .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(os.path.join(index_dir, "term_stats"))
     )
-
-    n_docs_total = sum(m["n_docs"] for m in manifest.segments.values())
-    total_tokens = sum(m["total_tokens"] for m in manifest.segments.values())
     stats = {
-        "n_docs": int(n_docs_total),
+        "n_docs": int(n_docs),
         "total_tokens": int(total_tokens),
-        "avgdl": (total_tokens / n_docs_total) if n_docs_total else 0.0,
-        "n_segments": len(manifest.segments),
-        "tokenizer_version": manifest.tokenizer_version,
-        "index_options": manifest.index_options,
+        "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
+        "n_segments": int(n_segments),
+        "tokenizer_version": tokenizer_version,
+        "index_options": index_options,
     }
     save_stats(index_dir, stats)
     return stats
@@ -998,7 +955,6 @@ def append_index(
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     docmap_cols: tuple[str, ...] = (),
     num_partitions: int | None = None,
-    pack_before_shuffle: bool = False,
     batch_id: int | None = None,
 ) -> dict:
     """Append a batch of NEW documents to an existing index (ES ``_bulk``).
@@ -1052,8 +1008,7 @@ def append_index(
     return _ingest(
         spark, docs, index_dir,
         content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
-        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
-        batch_id=batch_id, upsert=False,
+        num_partitions=num_partitions, batch_id=batch_id, upsert=False,
     )
 
 
@@ -1066,7 +1021,6 @@ def _ingest(
     key_cols: tuple[str, ...],
     docmap_cols: tuple[str, ...],
     num_partitions: int | None,
-    pack_before_shuffle: bool,
     batch_id: int | None,
     upsert: bool,
 ) -> dict:
@@ -1083,7 +1037,6 @@ def _ingest(
             key_cols=key_cols,
             docmap_cols=docmap_cols,
             num_partitions=num_partitions,
-            pack_before_shuffle=pack_before_shuffle,
         )
     docs_per_segment = manifest.docs_per_segment
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
@@ -1136,7 +1089,7 @@ def _ingest(
         docs, index_dir, manifest, bexpr, counts, offsets,
         _done_segments(index_dir, existing),
         content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
-        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
+        num_partitions=num_partitions,
     )
     return _commit(spark, index_dir, manifest, seg_store.load_manifest_parts(index_dir))
 
@@ -1204,7 +1157,6 @@ def upsert_index(
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     docmap_cols: tuple[str, ...] = (),
     num_partitions: int | None = None,
-    pack_before_shuffle: bool = False,
     batch_id: int | None = None,
 ) -> dict:
     """ES ``_bulk`` index action: update-or-insert by natural key.
@@ -1245,8 +1197,7 @@ def upsert_index(
     return _ingest(
         spark, docs, index_dir,
         content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
-        num_partitions=num_partitions, pack_before_shuffle=pack_before_shuffle,
-        batch_id=batch_id, upsert=True,
+        num_partitions=num_partitions, batch_id=batch_id, upsert=True,
     )
 
 
@@ -1433,22 +1384,13 @@ def merge_segments(
         merged.repartitionByRange(n_buckets, "seg_id", "term")
         .sortWithinPartitions("seg_id", "term")
         .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "segments"))
+        .parquet(seg_store.segments_glob(out_dir))
     )
 
     # --- finalize: make out_dir a fully-openable index ------------------
     # (stats.json + term_stats + docmap).  The merged dir is a read-
     # optimized snapshot — per-segment build lineage (manifest) stays with
     # the source index; resume/append continue against index_dir.
-    merged_read = spark.read.parquet(os.path.join(out_dir, "segments"))
-    (
-        merged_read.groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .repartitionByRange(n_buckets, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "term_stats"))
-    )
     docmap = spark.read.parquet(os.path.join(index_dir, "docmap"))
     old_stats = seg_store.load_stats(index_dir)
     if deleted_bc is not None:
@@ -1464,7 +1406,10 @@ def merge_segments(
             lambda s: s.map(lambda b: int(codec.varbyte_decode(b).sum())), "long"
         )
         total_tokens = (
-            merged_read.select(tf_sum("tfs_vb").alias("t")).agg(F.sum("t")).collect()[0][0]
+            spark.read.parquet(seg_store.segments_glob(out_dir))
+            .select(tf_sum("tfs_vb").alias("t"))
+            .agg(F.sum("t"))
+            .collect()[0][0]
             or 0
         )
     else:
@@ -1478,16 +1423,14 @@ def merge_segments(
             spark.read.parquet(src_deletes).write.mode("overwrite").parquet(
                 os.path.join(out_dir, "deletes")
             )
-    seg_store.save_stats(
+    _write_global_stats(
+        spark,
         out_dir,
-        {
-            "n_docs": int(n_docs),
-            "total_tokens": int(total_tokens),
-            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-            "n_segments": n_buckets,
-            "tokenizer_version": old_stats["tokenizer_version"],
-            "index_options": old_stats.get("index_options", "positions"),
-        },
+        n_docs=n_docs,
+        total_tokens=total_tokens,
+        n_segments=n_buckets,
+        tokenizer_version=old_stats["tokenizer_version"],
+        index_options=old_stats.get("index_options", "positions"),
     )
 
 

@@ -40,7 +40,6 @@ def main() -> None:
     ap.add_argument("--replicate", type=int, default=256)
     ap.add_argument("--docs-per-segment", type=int, default=2048)
     ap.add_argument("--num-partitions", type=int, default=None)
-    ap.add_argument("--pack", action="store_true", help="pack_before_shuffle mode")
     ap.add_argument(
         "--index-options", default="positions", choices=["positions", "freqs"],
         help="ES mapping index_options: store token positions or only freqs",
@@ -88,7 +87,6 @@ def main() -> None:
             docs_per_segment=args.docs_per_segment,
             resume=False,
             num_partitions=args.num_partitions,
-            pack_before_shuffle=args.pack,
             index_options=args.index_options,
         )
         wall = time.perf_counter() - t0

@@ -21,7 +21,7 @@ from datetime import datetime, timezone
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(master: str, replicate: int, pack: bool = False, index_options: str = "positions") -> dict:
+def run(master: str, replicate: int, index_options: str = "positions") -> dict:
     spark_submit = shutil.which("spark-submit") or os.path.join(
         os.path.dirname(sys.executable), "spark-submit"
     )
@@ -34,8 +34,6 @@ def run(master: str, replicate: int, pack: bool = False, index_options: str = "p
         os.path.join(REPO, "scripts", "index_build_job.py"),
         "--replicate", str(replicate),
     ]
-    if pack:
-        cmd.append("--pack")
     if index_options != "positions":
         cmd.extend(["--index-options", index_options])
     out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
@@ -122,8 +120,8 @@ def membw_probe() -> float:
     r5 protocol amendment, measured necessity: a session was observed where
     every pure-CPU probe read 0.93-1.10 (certifying "quiet") while the
     memcpy ceiling sat at 0.15 — a neighbor was saturating the shared
-    MEMORY BUS, not the cores, and the pack build (whose shuffle is
-    page-cache memcpy) read 0.62-0.68 efficiency in windows the CPU probe
+    MEMORY BUS, not the cores, and the then-measured build (whose shuffle
+    is page-cache memcpy) read 0.62-0.68 efficiency in windows the CPU probe
     called quiet.  The engine-independent membw probe sees exactly that
     contention: an idle-bus session reads ≥ 0.45 (0.51 in the r4
     recording), a saturated one 0.15.  A pair is now quiet only if BOTH
@@ -151,17 +149,15 @@ MEMBW_QUIET_THRESHOLD = 0.30
 MEMBW_QUIET_CEILING = 1.50
 
 
-def measured_pair(
-    replicate: int, pack: bool = False, index_options: str = "positions"
-) -> dict:
+def measured_pair(replicate: int, index_options: str = "positions") -> dict:
     """One interleaved N/4N trial pair bracketed by quiet probes.
 
     Per-pair efficiency keeps both levels under the SAME ambient load
     window; the probes before/after certify the window stayed quiet."""
     probe_before = quiet_probe()
     membw_before = membw_probe()
-    r_n = run("local[2]", replicate, pack=pack, index_options=index_options)
-    r_4n = run("local[8]", replicate, pack=pack, index_options=index_options)
+    r_n = run("local[2]", replicate, index_options=index_options)
+    r_4n = run("local[8]", replicate, index_options=index_options)
     probe_after = quiet_probe()
     membw_after = membw_probe()
     return {
@@ -200,18 +196,18 @@ def main() -> None:
     # printed and discarded; the scored protocol is unchanged.
     if warmup_replicate > 0:
         for master in ("local[2]", "local[8]"):
-            w = run(master, warmup_replicate, pack=True)
+            w = run(master, warmup_replicate)
             print(json.dumps({"warmup": master, "files_per_sec": w["files_per_sec"]}), flush=True)
 
-    # headline (pack/positions): keep running interleaved pairs until
-    # `repeats` QUIET pairs are in hand or the attempt budget runs out —
-    # the documented median-of-quiet-trials protocol
-    pack_pairs: list[dict] = []
+    # headline (positions): keep running interleaved pairs until `repeats`
+    # QUIET pairs are in hand or the attempt budget runs out — the
+    # documented median-of-quiet-trials protocol
+    pairs: list[dict] = []
     for _ in range(max_attempts):
-        pack_pairs.append(measured_pair(replicate, pack=True))
-        if sum(1 for p in pack_pairs if p["quiet"]) >= repeats:
+        pairs.append(measured_pair(replicate))
+        if sum(1 for p in pairs if p["quiet"]) >= repeats:
             break
-    quiet_pairs = [p for p in pack_pairs if p["quiet"]] or pack_pairs
+    quiet_pairs = [p for p in pairs if p["quiet"]] or pairs
 
     def median_eff(pairs: list[dict]) -> float:
         # true median: average the middle two for even counts (picking the
@@ -222,33 +218,25 @@ def main() -> None:
             return round((effs[mid - 1] + effs[mid]) / 2.0, 4)
         return effs[mid]
 
-    # context modes (fused default shuffle, freqs payload): fewer repeats
-    trials_n, trials_4n = [], []
-    pack_n = [p["n"] for p in pack_pairs]
-    pack_4n = [p["4n"] for p in pack_pairs]
+    # context mode (freqs payload, no positions): fewer repeats
     freq_n, freq_4n = [], []
     for _ in range(context_repeats):
-        trials_n.append(run("local[2]", replicate))
-        trials_4n.append(run("local[8]", replicate))
-        freq_n.append(run("local[2]", replicate, pack=True, index_options="freqs"))
-        freq_4n.append(run("local[8]", replicate, pack=True, index_options="freqs"))
+        freq_n.append(run("local[2]", replicate, index_options="freqs"))
+        freq_4n.append(run("local[8]", replicate, index_options="freqs"))
 
     def median(runs: list[dict]) -> dict:
         return sorted(runs, key=lambda r: r["files_per_sec"])[len(runs) // 2]
 
-    r8 = median(trials_n)
-    r32 = median(trials_4n)
-    p8 = median(pack_n)
-    p32 = median(pack_4n)
+    r8 = median([p["n"] for p in pairs])
+    r32 = median([p["4n"] for p in pairs])
     f8 = median(freq_n)
     f32 = median(freq_4n)
-    eff = (r32["files_per_sec"] / r8["files_per_sec"]) / 4.0  # local[2] vs local[8] = N vs 4N
-    eff_pack = median_eff(quiet_pairs)  # the documented gate number
-    eff_pack_all = median_eff(pack_pairs)
+    eff = median_eff(quiet_pairs)  # the documented gate number
+    eff_all = median_eff(pairs)
     eff_freq = (f32["files_per_sec"] / f8["files_per_sec"]) / 4.0
     result = {
         "metric": "scaling_efficiency",
-        "value": round(eff_pack, 4),
+        "value": round(eff, 4),
         "unit": "ratio",
         "protocol": "median per-pair raw efficiency over quiet trial pairs "
         f"(pure-CPU probe >= {QUIET_THRESHOLD} before and after each pair)",
@@ -258,16 +246,8 @@ def main() -> None:
         "localN_wall_sec": r8["build_wall_sec"],
         "local4N_wall_sec": r32["build_wall_sec"],
         "N": 2,
-        "fused_efficiency": round(eff, 4),
-        "trials_N": [t["files_per_sec"] for t in trials_n],
-        "trials_4N": [t["files_per_sec"] for t in trials_4n],
-        "pack_efficiency": round(eff_pack, 4),
-        "pack_efficiency_all_pairs": round(eff_pack_all, 4),
-        "pack_N_files_per_sec": p8["files_per_sec"],
-        "pack_4N_files_per_sec": p32["files_per_sec"],
-        "pack_trials_N": [t["files_per_sec"] for t in pack_n],
-        "pack_trials_4N": [t["files_per_sec"] for t in pack_4n],
-        "pack_pairs": [
+        "efficiency_all_pairs": round(eff_all, 4),
+        "pairs": [
             {
                 "efficiency": p["efficiency"],
                 "quiet": p["quiet"],
@@ -276,9 +256,9 @@ def main() -> None:
                 "N_files_per_sec": p["n"]["files_per_sec"],
                 "4N_files_per_sec": p["4n"]["files_per_sec"],
             }
-            for p in pack_pairs
+            for p in pairs
         ],
-        "n_quiet_pairs": sum(1 for p in pack_pairs if p["quiet"]),
+        "n_quiet_pairs": sum(1 for p in pairs if p["quiet"]),
         "freqs_efficiency": round(eff_freq, 4),
         "freqs_N_files_per_sec": f8["files_per_sec"],
         "freqs_4N_files_per_sec": f32["files_per_sec"],
@@ -304,15 +284,14 @@ def main() -> None:
             f"{p.get('membw_after', float('nan')):.2f} | "
             f"{'quiet' if p['quiet'] else 'NOISY'} | "
             f"{p['n']['files_per_sec']} | {p['4n']['files_per_sec']} |"
-            for i, p in enumerate(pack_pairs)
+            for i, p in enumerate(pairs)
         )
         fh.write(f"""# BENCH/BASELINE — measured numbers ({stamp})
 
 ## Scaling efficiency (north_rule: ≥ 0.8 between N and 4N)
 
-{multisession}**Latest-session headline: {eff_pack:.3f} raw — median per-pair efficiency over
-{len(quiet_pairs)} quiet trial pairs in the cluster-shaped configuration
-(`pack_before_shuffle=True`, positions).**
+{multisession}**Latest-session headline: {eff:.3f} raw — median per-pair efficiency over
+{len(quiet_pairs)} quiet trial pairs of the index build (positions).**
 
 ### Documented measurement standard (the gate protocol)
 
@@ -336,9 +315,9 @@ as:
    above 1.0 means the probe's own baseline leg hit a burst and certifies
    nothing).  The membw gate
    was added after a session where every CPU probe certified "quiet"
-   (0.93-1.10) while the memcpy ceiling sat at 0.15 and pack-build pairs
+   (0.93-1.10) while the memcpy ceiling sat at 0.15 and build pairs
    read 0.62-0.68 — the CPU probe is blind to the exact resource the
-   pack build's page-cache shuffle stresses, so it certified windows that
+   build's page-cache shuffle stresses, so it certified windows that
    were loud on the bus.  A pair whose own efficiency reads **superlinear
    (> 1.05)** is likewise disqualified (r5 amendment 2): 4× the cores
    cannot legitimately give > 4.2× this workload's throughput on one box,
@@ -353,14 +332,14 @@ as:
    ceiling) is reported alongside for cross-session comparability, not as
    the gate.
 
-Per-pair measurements this session (attempts = {len(pack_pairs)},
+Per-pair measurements this session (attempts = {len(pairs)},
 quiet = {result['n_quiet_pairs']}):
 
 | pair | efficiency | cpu probe b/a | membw probe b/a | window | N files/s | 4N files/s |
 |---|---|---|---|---|---|---|
 {pair_rows}
 
-Median over ALL pairs (noisy included): {eff_pack_all:.3f}.
+Median over ALL pairs (noisy included): {eff_all:.3f}.
 
 Sandbox protocol (BASELINE.md): identical index-build job + input, spark-submit
 --py-files eagc_spark.zip, local[2] (N) vs local[8] (4N), same configs
@@ -374,63 +353,37 @@ rejected as the pair: a 1-slot Spark still runs its JVM task thread and its
 python worker concurrently, so N=1 gets hidden 2x parallelism and reads
 artificially low efficiency, 0.60.)
 Input: sf0.1 documents × {replicate} replicas = {r8['n_docs']} files;
-{repeats} interleaved trials per level, median reported (shared-VM noise).
+{repeats} quiet interleaved pairs sought, median reported (shared-VM noise).
 Index output + shuffle on /dev/shm (a real cluster's storage/shuffle
 bandwidth scales with executors; this box's single /tmp disk does not).
 
-### pack_before_shuffle mode (network-shuffle shape) — the north-rule number
+### The index build (tokenize in the builder, content through the shuffle)
 
 The build writes positional postings by default (Lucene text-field default,
-``index_options="positions"``, new in r3 — phrase queries need them); both
-that configuration and the r1/r2-comparable ``index_options="freqs"`` build
-(no position payload) are measured.
+``index_options="positions"``, new in r3 — phrase queries need them); the
+r1/r2-comparable ``index_options="freqs"`` build (no position payload) is
+measured alongside.
 
-| parallelism | positions (default) files/sec | freqs files/sec |
-|---|---|---|
-| local[2] (N)   | {p8['files_per_sec']} | {f8['files_per_sec']} |
-| local[8] (4N)  | {p32['files_per_sec']} | {f32['files_per_sec']} |
+| parallelism | positions wall (s) | positions files/sec | freqs files/sec |
+|---|---|---|---|
+| local[2] (N)   | {r8['build_wall_sec']} | {r8['files_per_sec']} | {f8['files_per_sec']} |
+| local[8] (4N)  | {r32['build_wall_sec']} | {r32['files_per_sec']} | {f32['files_per_sec']} |
 
-**efficiency: positions {eff_pack:.3f} (quiet-pair median, the gate),
+**efficiency: positions {eff:.3f} (quiet-pair median, the gate),
 freqs {eff_freq:.3f}** (target ≥ 0.8); positions normalized to the
-session's pure-CPU ceiling: {eff_pack / calib['cpu']:.3f}.
-Positions ship as one bitpacked local-term-code sequence per doc
-(~3-4 bits/token, r5 — replacing the ~1.5 bytes/token varbyte tf+position
-deltas, a measured 2.3x raw / 1.3x post-lz4 cut of the positional columns);
-on this single shared-memory-bus box every remaining wire byte costs
-scaling slope (see ceilings below) — on a real cluster each executor brings
-its own NIC and the payload delta amortizes across the fabric.
-
-It trades ~40% single-node throughput (a second Python/Arrow stage per doc)
-for a ~4x smaller shuffle; on this single box the shuffle is page-cache
-memcpy, so the trade shows up as the better scaling slope.  Segment bytes
-are identical in both modes (tests/test_index_build.py byte-identity test).
-
-### fused mode (default: tokenize in the builder, content through the shuffle)
-
-| parallelism | wall (s) | throughput (files/sec) |
-|---|---|---|
-| local[2] (N)   | {r8['build_wall_sec']} | {r8['files_per_sec']} |
-| local[8] (4N)  | {r32['build_wall_sec']} | {r32['files_per_sec']} |
-
-**efficiency = {eff:.3f} raw; {eff / calib['memcpy']:.2f} normalized to the
-measured memcpy ceiling.**
-
-Per-level trials (files/sec): N = {[t['files_per_sec'] for t in trials_n]},
-4N = {[t['files_per_sec'] for t in trials_4n]}.
-This mode maximizes absolute single-box throughput (one fused Python stage
-pipelines perfectly with the JVM shuffle) and is the right default for
-local[] and page-cache shuffles; its raw slope is capped by the box, not the
-plan — see ceilings below.
+session's pure-CPU ceiling: {eff / calib['cpu']:.3f}, to the memcpy
+ceiling: {eff / calib['memcpy']:.3f}.
+One fused Python stage per document tokenizes and encodes its segment, and
+it pipelines with the JVM shuffle; its raw slope on one box is capped by
+the box, not the plan — see ceilings below.
 
 ### Host ceilings (same session, plain python multiprocessing, no Spark)
 
 Pure-CPU work scales at **{calib['cpu']:.2f}** efficiency from 2→8 procs;
 memory-bandwidth-bound work (50 MB numpy memcpy loops) reaches only
 **{calib['memcpy']:.2f}** — the shared VM saturates at ~19 GB/s RAM
-bandwidth.  The fused build streams every raw document byte through
-shuffle + Arrow, so its raw number tracks the memcpy ceiling; the pack build
-moves ~4x fewer bytes and correspondingly tracks the CPU ceiling
-({eff_pack:.2f}/{calib['cpu']:.2f} = {eff_pack / calib['cpu']:.2f}).
+bandwidth.  The build streams every raw document byte through shuffle +
+Arrow, so its raw number tracks the memcpy ceiling.
 Disabling shuffle compression was measured to CUT local[8] throughput ~2x
 while helping local[2] — direct evidence the 4N limiter is the single shared
 memory bus, a resource that scales with N on any real cluster (each executor

@@ -136,6 +136,19 @@ def test_quantize_wire_stays_within_grid_step(paris_df, spark):
         assert q.lon == pytest.approx(e.lon, abs=1e-7)
 
 
+@pytest.mark.parametrize("zoom, quantize_wire", [(25, False), (25, True), (9, True)])
+def test_cell_aggregate_plans_without_python(paris_df, zoom, quantize_wire):
+    """The cell key at every zoom (max zoom included) and the wire quantizer
+    are JVM expressions: no Python evaluation node in the plan."""
+    from elasticsearch_aggregation_geoclustering_spark.operators.clustering import (
+        geo_cell_aggregate,
+    )
+
+    df = geo_cell_aggregate(paris_df, "lon", "lat", zoom, quantize_wire=quantize_wire)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
 def test_unmapped_field_returns_empty(paris_df, spark):
     """P19: unmapped field → well-formed empty aggregation."""
     result = geo_point_clustering(paris_df, "nope_lon", "nope_lat", 9)

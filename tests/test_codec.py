@@ -74,77 +74,3 @@ def test_segmented_empty():
         np.empty(0, np.uint64), np.empty(0, np.int64), 0
     )
     assert len(arr) == 0
-
-
-# --- per-segment bitpacking (the positional shuffle wire format) ---------
-
-
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 17)),  # (len, width)
-        max_size=25,
-    ),
-    st.randoms(use_true_random=False),
-)
-@settings(max_examples=200, deadline=None)
-def test_bitpack_segments_roundtrip(shapes, rnd):
-    lens = np.array([l for l, _ in shapes], np.int64)
-    widths = np.array([w for _, w in shapes], np.int64)
-    vals = (
-        np.concatenate(
-            [
-                np.array([rnd.randrange(1 << w) if w else 0 for _ in range(l)], np.uint64)
-                for l, w in shapes
-            ]
-        )
-        if shapes
-        else np.empty(0, np.uint64)
-    )
-    buf, ends = codec.bitpack_segments(vals, lens, widths)
-    assert np.array_equal(codec.bitunpack_segments(buf, lens, widths), vals)
-    # per-segment slices decode independently (per-doc cells over the wire)
-    starts = np.concatenate(([0], ends[:-1])) if len(ends) else ends
-    off = 0
-    for i, (l, w) in enumerate(shapes):
-        seg = buf[starts[i] : ends[i]]
-        assert np.array_equal(
-            codec.bitunpack_segments(seg, lens[i : i + 1], widths[i : i + 1]),
-            vals[off : off + l],
-        )
-        off += l
-
-
-def test_code_width_exact_at_powers_of_two():
-    nt = np.array([0, 1, 2, 3, 4, 5, 8, 9, 16, 17, 1024, 1025, 1 << 20, (1 << 20) + 1])
-    want = [0, 0, 1, 2, 2, 3, 3, 4, 4, 5, 10, 11, 20, 21]
-    assert list(codec.code_width(nt)) == want
-
-
-def test_pack_positions_roundtrip_corpus_shaped():
-    import pandas as pd
-    from elasticsearch_aggregation_geoclustering_spark.functions.tokenizer import (
-        doc_term_positions,
-        pack_term_frequencies,
-        packed_term_frequencies,
-    )
-
-    rng = np.random.default_rng(11)
-    vocab = [f"t{i}" for i in range(40)]
-    texts = pd.Series(
-        [
-            " ".join(rng.choice(vocab, size=rng.integers(0, 60)))
-            for _ in range(300)
-        ]
-        + ["", "solo", "a a a a a"]
-    )
-    f0, p0 = doc_term_positions(texts)
-    pk = pack_term_frequencies(texts, with_positions=True)
-    assert list(pk.columns) == ["terms_blob", "codes_pk", "n_terms", "dl"]
-    f1, p1 = packed_term_frequencies(
-        pk["terms_blob"], pk["n_terms"], codes_pk=pk["codes_pk"], dl=pk["dl"]
-    )
-    assert f0.equals(f1)
-    assert np.array_equal(p0, p1)
-    # the packed positional payload beats 1 byte/token (what varbyte
-    # position deltas cost) on a zipf-free 40-term vocabulary: <= 6 bits
-    assert pk["codes_pk"].map(len).sum() <= (pk["dl"].sum() * 6) // 8 + len(pk)

@@ -181,13 +181,76 @@ def test_jvm_cell_expr_matches_numpy(spark):
         assert [r["k"] for r in staged.collect()] == expect, f"staged precision {precision}"
 
 
-def test_jvm_cell_expr_rejects_precision_12():
-    import pytest as _pytest
+def test_jvm_cell_expr_matches_numpy_at_precision_12(spark):
+    """Level 12 keeps bit 63: the JVM key is the negative long numpy's
+    uint64 key is when viewed as int64, on random and ±90/±180 edge points
+    (and the staged form agrees)."""
+    from elasticsearch_aggregation_geoclustering_spark.geo import geohash_expr
+
+    rng = np.random.default_rng(12)
+    edge_lon = np.array([-180.0, 180.0, -180.0, 180.0, 0.0, -0.0, 179.999999])
+    edge_lat = np.array([-90.0, 90.0, 90.0, -90.0, 0.0, -0.0, -89.999999])
+    lons = np.concatenate([edge_lon, rng.uniform(-180, 180, 2000)])
+    lats = np.concatenate([edge_lat, rng.uniform(-90, 90, 2000)])
+    df = spark.createDataFrame(
+        [(float(lo), float(la)) for lo, la in zip(lons, lats)], "lon double, lat double"
+    )
+    expect = geohash.long_encode(lons, lats, 12).tolist()
+    assert any(k < 0 for k in expect)  # bit 63 is exercised
+    got = [
+        r["k"] for r in df.select(geohash_expr.cell_expr("lon", "lat", 12).alias("k")).collect()
+    ]
+    assert got == expect
+    staged = geohash_expr.with_cell_column(df, "lon", "lat", 12, "k")
+    assert [r["k"] for r in staged.collect()] == expect
+    with pytest.raises(ValueError):
+        geohash_expr.cell_expr("lon", "lat", 13)
+
+
+def test_nan_coordinate_raises_at_every_precision(spark):
+    """A NaN coordinate is invalid, not a cell: numpy raises at every level
+    (level 12 used to return a garbage key), and so does the JVM key."""
+    from pyspark.errors import PySparkException
 
     from elasticsearch_aggregation_geoclustering_spark.geo import geohash_expr
 
-    with _pytest.raises(ValueError):
-        geohash_expr.cell_expr("lon", "lat", 12)
+    for precision in (1, 11, 12):
+        with pytest.raises(ValueError):
+            geohash.long_encode(np.array([np.nan]), np.array([10.0]), precision)
+        with pytest.raises(ValueError):
+            geohash.long_encode(np.array([10.0]), np.array([np.nan]), precision)
+    df = spark.createDataFrame([(float("nan"), 10.0)], "lon double, lat double")
+    with pytest.raises(PySparkException, match="out of range"):
+        df.select(geohash_expr.cell_expr("lon", "lat", 12)).collect()
+
+
+def test_quantize_sql_matches_numpy(spark):
+    """The one SQL Lucene-grid quantizer == numpy encode·step, bitwise, on
+    random and edge values; NaN and out-of-range raise; NULL stays NULL."""
+    from pyspark.errors import PySparkException
+
+    from elasticsearch_aggregation_geoclustering_spark.geo import geohash_expr
+
+    rng = np.random.default_rng(5)
+    lats = np.concatenate([[-90.0, 90.0, 0.0, -0.0, 89.9999999], rng.uniform(-90, 90, 500)])
+    lons = np.concatenate([[-180.0, 180.0, 0.0, -0.0, -179.9999999], rng.uniform(-180, 180, 500)])
+    df = spark.createDataFrame(
+        [(float(lo), float(la)) for lo, la in zip(lons, lats)], "lon double, lat double"
+    )
+    q = df.selectExpr(
+        f"{geohash_expr.quantize_sql('lat', geohash.LATITUDE_DECODE, 90.0)} AS qlat",
+        f"{geohash_expr.quantize_sql('lon', geohash.LONGITUDE_DECODE, 180.0)} AS qlon",
+    ).collect()
+    want_lat = geohash._encode_axis(lats, geohash.LATITUDE_DECODE, 90.0) * geohash.LATITUDE_DECODE
+    want_lon = geohash._encode_axis(lons, geohash.LONGITUDE_DECODE, 180.0) * geohash.LONGITUDE_DECODE
+    assert np.array_equal(np.array([r["qlat"] for r in q]), want_lat)
+    assert np.array_equal(np.array([r["qlon"] for r in q]), want_lon)
+    bad = spark.createDataFrame([(float("nan"),), (90.5,), (None,)], "lat double")
+    expr = geohash_expr.quantize_sql("lat", geohash.LATITUDE_DECODE, 90.0)
+    for cond in ("isnan(lat)", "lat > 90.0D"):
+        with pytest.raises(PySparkException, match="out of range"):
+            bad.where(cond).selectExpr(expr).collect()
+    assert bad.where("lat IS NULL").selectExpr(f"{expr} AS q").collect()[0]["q"] is None
 
 
 def test_geo_distance_filter_matches_numpy(spark):

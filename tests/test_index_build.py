@@ -266,25 +266,6 @@ def test_merge_segments_preserves_postings(spark, index, tmp_path_factory):
     assert merged_idx.postings(probe).count() <= idx.postings(probe).count()
 
 
-def test_pack_before_shuffle_is_byte_identical(spark, corpus, tmp_path_factory):
-    """pack_before_shuffle ships packed term rows instead of content through
-    the shuffle; the resulting segments must be byte-identical to the fused
-    tokenize-in-builder default."""
-    fused_dir = str(tmp_path_factory.mktemp("fused"))
-    packed_dir = str(tmp_path_factory.mktemp("packed"))
-    docs = spark.createDataFrame(corpus).repartition(8)
-    build_index(spark, docs, fused_dir, docs_per_segment=DOCS_PER_SEGMENT)
-    build_index(
-        spark, docs, packed_dir, docs_per_segment=DOCS_PER_SEGMENT,
-        pack_before_shuffle=True,
-    )
-    a = load_manifest(fused_dir)
-    b = load_manifest(packed_dir)
-    assert a.completed_segment_ids() == b.completed_segment_ids()
-    for sid, meta in a.segments.items():
-        assert b.segments[sid]["sha256"] == meta["sha256"], f"segment {sid}"
-
-
 def test_resume_across_parallelism_levels(spark, corpus, tmp_path_factory):
     """docIDs are a pure function of the key order, so a build started at one
     parallelism and resumed at another must produce byte-identical segments

@@ -43,6 +43,9 @@ def test_duplicate_cell_skip(spark):
     cells = geo_cell_aggregate(pts, zoom=9)
     counts = {r["cell"]: r["doc_count"] for r in cells.collect()}
     assert sorted(counts.values()) == [1, 1, 1]
+    # the level-12 sort key is a JVM expression like every other cell key
+    plan = cells._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_multivalue_single_point_docs_match_plain_path(spark):

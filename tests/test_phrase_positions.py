@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from elasticsearch_aggregation_geoclustering_spark.functions.tokenizer import (
     doc_term_positions,
-    pack_term_frequencies,
-    packed_term_frequencies,
     tokenize_python,
 )
 from elasticsearch_aggregation_geoclustering_spark.plans.index_build import (
@@ -73,20 +71,6 @@ def test_doc_term_positions_roundtrip_pandas():
         assert got == truth[(r["row"], r["term"])]
         cum += r["tf"]
     assert cum == len(pos)
-
-
-def test_pack_roundtrip_with_positions():
-    import pandas as pd
-
-    texts = pd.Series([t for _, t in DOCS])
-    packed = pack_term_frequencies(texts)
-    frame0, pos0 = doc_term_positions(texts)
-    frame1, pos1 = packed_term_frequencies(
-        packed["terms_blob"], packed["n_terms"],
-        codes_pk=packed["codes_pk"], dl=packed["dl"],
-    )
-    assert frame0.equals(frame1)
-    assert (pos0 == pos1).all()
 
 
 @pytest.fixture(scope="module")

@@ -361,6 +361,31 @@ def test_merge_without_apply_carries_tombstones(spark, index_dir):
         shutil.rmtree(out, ignore_errors=True)
 
 
+@pytest.mark.parametrize("apply_deletes", [False, True])
+def test_merged_term_stats_are_segment_df_sums(spark, index_dir, apply_deletes):
+    """merge_segments writes term_stats with the build's writer: one row per
+    term holding the Σdf of the merged segments — tombstoned docs dropped
+    from both when deletes are applied, kept in both otherwise."""
+    from collections import Counter
+
+    delete_docs(spark, index_dir, _internal_ids(spark, index_dir, [0, 4]))
+    out = tempfile.mkdtemp(prefix="statsmerge_")
+    try:
+        merge_segments(spark, index_dir, out, fanin=8, apply_deletes=apply_deletes)
+        got = sorted(
+            (r["term"], r["df"])
+            for r in spark.read.parquet(os.path.join(out, "term_stats")).collect()
+        )
+        seg_df: Counter = Counter()
+        for r in spark.read.parquet(os.path.join(out, "segments")).select("term", "df").collect():
+            seg_df[r["term"]] += r["df"]
+        assert got == sorted(seg_df.items())
+        live = [t for i, t in DOCS if not (apply_deletes and i in (0, 4))]
+        assert got == sorted(Counter(w for t in live for w in set(t.split())).items())
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_refresh_reopens_point_in_time_view(spark, index_dir):
     """An InvertedIndex is a point-in-time snapshot (postings relation, df
     cache, stats, tombstones all pinned at open).  refresh() must re-open
