@@ -38,6 +38,11 @@ def tokenize_column(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT_REGEX), lambda t: t != "")
 
 
+def tokenize_sql(text: str) -> str:
+    """:func:`tokenize_column` as SQL text over the string expression ``text``."""
+    return f"filter(split(lower({text}), '{TOKEN_SPLIT_REGEX}'), t -> t != '')"
+
+
 def tokenize_pandas(texts: pd.Series) -> pd.Series:
     """Vectorized pandas tokenization: Series[str] -> Series[list[str]]."""
     return texts.fillna("").str.lower().str.findall(_TOKEN_RE)

@@ -1,4 +1,4 @@
-"""ES ``multi_match`` (best_fields / dis_max) — per-field BM25 combined.
+"""Index-free BM25 and ES ``multi_match`` (best_fields / dis_max).
 
 ES scores each field with that FIELD's own statistics (per-field postings,
 df, avgdl) and combines per-doc with Lucene's DisjunctionMaxQuery:
@@ -8,88 +8,150 @@ df, avgdl) and combines per-doc with Lucene's DisjunctionMaxQuery:
 ``tie_breaker=0`` is pure dis_max (best_fields default); ``1`` degenerates to
 a bool-OR sum (most_fields-ish).
 
-Spark shape: one tokenize+aggregate pass per field (per-field stats are the
-point — same work ES's per-field inverted lists represent), then a single
-full-outer join on doc id and a codegen'd combine expression.  Each field
-pass is one shuffle on doc id; the join co-partitions on the same key, so
-AQE usually plans it shuffle-free after the aggs.  Nothing collects besides
-two scalar stats rows.
+``score_field``, ``multi_match_best_fields`` and ``query.bm25_search_docs``
+share one scorer, built as SQL text:
+
+* one projection, in-row per field: ``dl = size(tokens)`` and ``tf(t) =
+  size(tokens) − size(array_remove(tokens, t))``, each field tokenized once
+  per row, zero shuffles.  NULL text tokenizes to no tokens, so its dl and
+  tf are 0 whatever ``spark.sql.ansi.enabled`` makes of ``size(NULL)``, and
+  the doc still counts toward N;
+* one statistics aggregate: N, each field's token total and each (field,
+  term) df;
+* one BM25 expression per field: the index's ``_bm25_sql`` over the sorted
+  terms with idf from ``bm25.idf``, each term scored only where its tf > 0
+  and folded ``(0.0 + s0) + s1 …`` like the index's pivot fold, so a
+  field's scores are bit-identical to ``InvertedIndex.score_matches`` over
+  the same docs.
+
+Scores are per row: ``id_col`` is assumed unique per row (the doc-id
+contract everywhere in this engine).
 """
 
 from __future__ import annotations
 
-import math
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions import bm25
-from ..functions.tokenizer import tokenize_column
+from ..functions import sql_text as sql
+from ..functions.tokenizer import tokenize_sql
+from .query import _bm25_sql
 
 __all__ = ["score_field", "multi_match_best_fields", "dis_max"]
 
 
-def _per_doc_tf(
-    docs: DataFrame, terms: list[str], id_col: str, text_col: str
-) -> DataFrame:
-    """ONE tokenize pass: per-doc ``(doc_id, dl, _tf0.._tfN)`` for sorted
-    ``terms``.  Both the field statistics aggregate and the scoring
-    projection read this frame — persist it so the corpus is tokenized once
-    per field, not once per consumer."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode_outer(tokenize_column(F.col(text_col))).alias("term"),
-    )
-    # count("term") skips the explode_outer null: empty docs get dl=0 but
-    # still count toward N (BM25's N is ALL docs)
-    return toks.groupBy("doc_id").agg(
-        F.count("term").alias("dl"),
-        *[
-            F.count(F.when(F.col("term") == F.lit(t), True)).alias(f"_tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
+def _query_terms(terms: list[str], params: bm25.Bm25Params) -> list[str]:
+    """The distinct query terms in the index's fold order (sorted)."""
+    if params.lucene_norms:
+        # the index quantizes dl while decoding postings; there is no SQL
+        # port of that codec, so an index-free score would use exact lengths
+        raise ValueError("lucene_norms needs an index: index-free BM25 scores exact lengths")
+    return sorted(set(terms))
 
 
-def _field_stats(per_doc: DataFrame, n_terms: int):
-    """(n_docs, avgdl, idfs) from one scalar aggregation over ``per_doc``."""
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("total"),
-        *[
-            F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"_df{i}")
-            for i in range(n_terms)
-        ],
+def _projection(docs: DataFrame, terms: list[str], fields: list[str], id_col: str) -> DataFrame:
+    """Per row ``(doc_id, _dl{i}, _tf{i}_{j})`` for field i and term j."""
+    toks = docs.selectExpr(
+        f"{sql.name(id_col)} AS doc_id",
+        *[f"coalesce({tokenize_sql(sql.name(f))}, array()) AS _tok{i}" for i, f in enumerate(fields)],
+    )
+    # a Project of its own: CollapseProject does not inline a non-trivial
+    # expression used more than once, so each field is tokenized once per row
+    cols = []
+    for i in range(len(fields)):
+        cols.append(f"size(_tok{i}) AS _dl{i}")
+        cols += [
+            f"(size(_tok{i}) - size(array_remove(_tok{i}, {sql.string(t)}))) AS _tf{i}_{j}"
+            for j, t in enumerate(terms)
+        ]
+    return toks.selectExpr("doc_id", *cols)
+
+
+def _field_scores(
+    proj: DataFrame, n_fields: int, n_terms: int, params: bm25.Bm25Params
+) -> list[str] | None:
+    """Each field's BM25 score as SQL text over ``proj``, from ONE statistics
+    aggregate; None when ``proj`` has no rows."""
+    stats = proj.selectExpr(
+        "count(1) AS n",
+        *[f"coalesce(sum(_dl{i}), 0) AS _total{i}" for i in range(n_fields)],
+        *[f"count_if(_tf{i}_{j} > 0) AS _df{i}_{j}" for i in range(n_fields) for j in range(n_terms)],
     ).collect()[0]
     n_docs = int(stats["n"])
     if n_docs == 0:
-        return 0, 0.0, []
-    avgdl = float(stats["total"]) / n_docs
-    idfs = [
-        math.log(
-            1.0
-            + (n_docs - int(stats[f"_df{i}"]) + 0.5) / (int(stats[f"_df{i}"]) + 0.5)
-        )
-        for i in range(n_terms)
-    ]
-    return n_docs, avgdl, idfs
+        return None
+    scores = []
+    for i in range(n_fields):
+        avgdl = int(stats[f"_total{i}"]) / n_docs
+        dl = f"CAST(_dl{i} AS DOUBLE)"
+        score = "0.0D"
+        for j in range(n_terms):
+            idf = sql.dbl(bm25.idf(n_docs, int(stats[f"_df{i}_{j}"])))
+            term = _bm25_sql(idf, f"CAST(_tf{i}_{j} AS DOUBLE)", params, avgdl, dl)
+            # as in the index, only a posting (tf > 0) scores: the +0.0 of
+            # tf = 0 leaves the sum's bits alone, but 0/0 (k1 = 0, or an
+            # all-empty field's avgdl = 0) must not be evaluated
+            score = f"({score} + CASE WHEN _tf{i}_{j} > 0 THEN {term} ELSE 0.0D END)"
+        scores.append(score)
+    return scores
 
 
-def _field_score_frame(
-    per_doc: DataFrame, idfs: list[float], avgdl: float, params: bm25.Bm25Params
+def _matched_sql(n_fields: int, n_terms: int, need: int) -> str:
+    """Rows holding at least ``need`` distinct query terms, in any field."""
+    hits = [" OR ".join(f"_tf{i}_{j} > 0" for i in range(n_fields)) for j in range(n_terms)]
+    return f"({' + '.join(f'CAST(({h}) AS INT)' for h in hits)}) >= {int(need)}"
+
+
+def _top_k(
+    docs: DataFrame,
+    terms: list[str],
+    fields: list[str],
+    *,
+    id_col: str,
+    k: int,
+    tie_breaker: float,
+    need: int,
+    params: bm25.Bm25Params,
 ) -> DataFrame:
-    """(doc_id, score) over every matching doc — the scoring projection."""
-    dl_d = F.col("dl").cast("double")
-    norm = F.lit(params.k1) * (
-        F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(avgdl)
+    """Top-k ``(doc_id, score)`` of the docs holding ``need`` distinct terms,
+    ``score = max over fields + tie_breaker · sum of the rest``.  The numeric
+    projection is persisted for the query: the statistics aggregate
+    materializes it and the top-k reads it back instead of re-tokenizing the
+    corpus.  The ≤ k rows are collected, so the cache is released before the
+    small local result returns."""
+    spark = docs.sparkSession
+    schema = StructType(
+        [
+            StructField("doc_id", docs.schema[id_col].dataType),
+            StructField("score", DoubleType()),
+        ]
     )
-    score = F.lit(0.0)
-    matched = F.lit(False)
-    for i in range(len(idfs)):  # sorted terms => deterministic fold order
-        tf_d = F.col(f"_tf{i}").cast("double")
-        score = score + F.lit(idfs[i]) * (tf_d / (tf_d + norm))
-        matched = matched | (F.col(f"_tf{i}") > 0)
-    return per_doc.where(matched).select("doc_id", score.alias("score"))
+    terms = _query_terms(terms, params)
+    if not terms:
+        return spark.createDataFrame([], schema)
+    proj = _projection(docs, terms, fields, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        scores = _field_scores(proj, len(fields), len(terms), params)
+        if scores is None:
+            return spark.createDataFrame([], schema)
+        best = f"greatest({', '.join(scores)})" if len(scores) > 1 else scores[0]
+        total = scores[0]
+        for s in scores[1:]:
+            total = f"({total} + {s})"
+        score = f"({best} + ({sql.dbl(tie_breaker)} * ({total} - {best})))"
+        rows = (
+            proj.where(_matched_sql(len(fields), len(terms), need))
+            .selectExpr("doc_id", f"{score} AS score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+            .collect()
+        )
+    finally:
+        proj.unpersist()
+    return spark.createDataFrame([tuple(r) for r in rows], schema)
 
 
 def score_field(
@@ -102,25 +164,20 @@ def score_field(
 ) -> DataFrame:
     """Full per-field BM25 scoring: (doc_id, score) for EVERY matching doc.
 
-    Same math and sorted-term fold order as ``InvertedIndex.search`` /
-    ``bm25_search_docs``, but lazy and unlimited — the building block
-    ``multi_match_best_fields`` combines.  ``text_col`` may be any string
-    expression name already present on ``docs``.
+    Bit-identical to ``InvertedIndex.score_matches`` over the same docs, but
+    lazy and unlimited.  ``text_col`` may be any string column of ``docs``.
 
-    NOTE: the lazy return means the tokenize+aggregate lineage re-runs on
-    every downstream action (the stats pass here is one, the caller's is
-    another).  ``multi_match_best_fields`` avoids that by persisting the
-    per-doc tf frame; standalone callers with several actions should
-    persist this result themselves.
+    NOTE: the statistics aggregate runs here; the lazy result re-tokenizes
+    the corpus on every downstream action, so callers with several actions
+    should persist it themselves.
     """
-    terms = sorted(set(terms))
-    if not terms:
-        return docs.sparkSession.createDataFrame([], "doc_id long, score double")
-    per_doc = _per_doc_tf(docs, terms, id_col, text_col)
-    n_docs, avgdl, idfs = _field_stats(per_doc, len(terms))
-    if n_docs == 0:
-        return docs.sparkSession.createDataFrame([], "doc_id long, score double")
-    return _field_score_frame(per_doc, idfs, avgdl, params)
+    terms = _query_terms(terms, params)
+    if terms:
+        proj = _projection(docs, terms, [text_col], id_col)
+        scores = _field_scores(proj, 1, len(terms), params)
+        if scores is not None:
+            return proj.where(_matched_sql(1, len(terms), 1)).selectExpr("doc_id", f"{scores[0]} AS score")
+    return docs.sparkSession.createDataFrame([], "doc_id long, score double")
 
 
 def multi_match_best_fields(
@@ -134,110 +191,16 @@ def multi_match_best_fields(
     params: bm25.Bm25Params = bm25.Bm25Params(),
 ) -> DataFrame:
     """ES ``multi_match`` type ``best_fields``: top-k (doc_id, score) where
-    ``score = max over fields + tie_breaker * sum of the rest``.
-
-    Plan shape (round 6): every field's tf/dl is computed IN-ROW on one
-    shared projection — ``dl = size(tokens)``, ``tf(t) = size(tokens) −
-    size(array_remove(tokens, t))``, all native array builtins with the
-    tokenize subexpression CSE'd once per field — so the whole query is
-    ONE tokenize pass over the corpus, independent of the field count.
-    The numeric projection (1 + F·(T+1) longs per doc — orders of
-    magnitude smaller than the text it summarizes) is persisted spillable
-    for the duration of the query: the stats aggregate materializes it and
-    the scoring projection + TakeOrderedAndProject reads the cached
-    numbers instead of re-tokenizing the corpus (the lazy lineage used to
-    re-run per action).  Zero shuffles either way.  The earlier shape ran
-    per field an explode → groupBy(doc) shuffle TWICE (stats pass +
-    scoring pass) and full-outer-joined the per-field frames: for F
-    fields, 2F corpus scans, 2F shuffles and F−1 joins versus 1 scan and
-    0 shuffles now.
-
-    Scores are bit-identical: a zero-tf term contributes ``idf · 0/(0 +
-    norm) = +0.0`` exactly (the old per-field sum included the same +0.0
-    terms), and a doc that missed a field entirely scored ``coalesce(NULL,
-    0.0)`` there — equal to the in-row field score ``Σ +0.0 = 0.0``.
-
-    Assumes ``id_col`` is unique per row (the doc-id contract everywhere in
-    this engine); duplicate ids would previously have been merged into one
-    pseudo-doc by the groupBy, and now score per row.
-    """
+    ``score = max over fields + tie_breaker * sum of the rest``, each field
+    scored with its own statistics.  One tokenize pass over the corpus and
+    zero shuffles, whatever the field count."""
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError(f"tie_breaker must be in [0, 1]: {tie_breaker}")
     if not fields:
         raise ValueError("need at least one field")
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    spark = docs.sparkSession
-    terms = sorted(set(terms))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    nf, nt = len(fields), len(terms)
-    proj_cols = [F.col(id_col).alias("doc_id")]
-    for i, f in enumerate(fields):
-        toks = tokenize_column(F.col(f))
-        # CSE evaluates `toks` once per row per field within this Project
-        proj_cols.append(F.coalesce(F.size(toks), F.lit(0)).alias(f"_dl{i}"))
-        for j, t in enumerate(terms):
-            tf = F.size(toks) - F.size(F.array_remove(toks, t))
-            proj_cols.append(F.coalesce(tf, F.lit(0)).alias(f"_tf{i}_{j}"))
-    from pyspark import StorageLevel
-
-    proj = docs.select(*proj_cols).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        stats = proj.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.coalesce(F.sum(f"_dl{i}"), F.lit(0)).alias(f"_total{i}") for i in range(nf)],
-            *[
-                F.sum((F.col(f"_tf{i}_{j}") > 0).cast("long")).alias(f"_df{i}_{j}")
-                for i in range(nf)
-                for j in range(nt)
-            ],
-        ).collect()[0]
-        n_docs = int(stats["n"])
-        if n_docs == 0:
-            return spark.createDataFrame([], "doc_id long, score double")
-
-        field_scores = []
-        matched = F.lit(False)
-        for i in range(nf):
-            avgdl = float(stats[f"_total{i}"]) / n_docs
-            dl_d = F.col(f"_dl{i}").cast("double")
-            norm = F.lit(params.k1) * (
-                F.lit(1.0) - F.lit(params.b) + F.lit(params.b) * dl_d / F.lit(avgdl)
-            )
-            score_i = F.lit(0.0)
-            for j in range(nt):  # sorted terms => deterministic fold order
-                df_j = int(stats[f"_df{i}_{j}"])
-                idf = math.log(1.0 + (n_docs - df_j + 0.5) / (df_j + 0.5))
-                tf_d = F.col(f"_tf{i}_{j}").cast("double")
-                score_i = score_i + F.lit(idf) * (tf_d / (tf_d + norm))
-                matched = matched | (F.col(f"_tf{i}_{j}") > 0)
-            field_scores.append(score_i)
-
-        best = F.greatest(*field_scores) if nf > 1 else field_scores[0]
-        total = field_scores[0]
-        for c in field_scores[1:]:
-            total = total + c
-        score = best + F.lit(tie_breaker) * (total - best)
-        result_schema = StructType(
-            [
-                StructField("doc_id", docs.schema[id_col].dataType),
-                StructField("score", DoubleType()),
-            ]
-        )
-        rows = (
-            proj.where(matched)
-            .select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        return spark.createDataFrame(
-            [(r["doc_id"], r["score"]) for r in rows], result_schema
-        )
-    finally:
-        proj.unpersist()
+    return _top_k(
+        docs, terms, fields, id_col=id_col, k=k, tie_breaker=tie_breaker, need=1, params=params
+    )
 
 
 def dis_max(

@@ -216,13 +216,15 @@ def _idf_sql(idfs: dict[str, float]) -> str:
     return f"element_at(map({pairs}), term)"
 
 
-def _bm25_sql(idf: str, tf: str, params: bm25.Bm25Params, avgdl: float) -> str:
+def _bm25_sql(
+    idf: str, tf: str, params: bm25.Bm25Params, avgdl: float, dl: str = "CAST(dl AS DOUBLE)"
+) -> str:
     """``idf · tf / (tf + k1·(1 − b + b·dl/avgdl))`` as SQL text over the
-    DOUBLE expressions ``idf`` and ``tf`` and the ``dl`` column: the one BM25
-    expression every scorer here shares.  It keeps the numpy oracle's
+    DOUBLE expressions ``idf``, ``tf`` and ``dl`` (default: the ``dl``
+    column): the one BM25 expression every scorer shares, the index-free
+    ones in plans/multimatch.py included.  It keeps the numpy oracle's
     association order, so the scores are bit-identical to it."""
     k1, b = sql.dbl(params.k1), sql.dbl(params.b)
-    dl = "CAST(dl AS DOUBLE)"
     denom = f"({tf} + ({k1} * ((1.0D - {b}) + (({b} * {dl}) / {sql.dbl(avgdl)}))))"
     return f"({idf} * ({tf} / {denom}))"
 
@@ -718,7 +720,6 @@ class InvertedIndex:
         k: int = 10,
         mode: str = "OR",
         params: bm25.Bm25Params = bm25.Bm25Params(),
-        salt_partitions: int | None = None,
     ) -> DataFrame:
         """Top-k for a whole query batch in ONE scan and ONE doc-keyed
         shuffle: DataFrame (query_id, doc_id, score), ≤ k rows per query.
@@ -731,17 +732,6 @@ class InvertedIndex:
         ``search()`` for every query (pinned by tests).  The final per-query
         top-k is a window ``row_number`` over (query_id): its sort is
         disk-spillable but parallelism is #queries.
-
-        ``salt_partitions``: at very large batch × corpus products, set to
-        S > 1 for a SALTED two-stage top-k — a first window over
-        (query_id, doc_id % S) takes a per-salt top-k at parallelism
-        #queries × S, so no task ever sorts more than ~1/S of a query's
-        matches; the global window then ranks the surviving ≤ k·S rows per
-        query.  Results are bit-identical to the unsalted plan (pinned):
-        the union of per-salt top-ks contains the global top-k because the
-        (score desc, doc_id asc) order is total.  Costs one extra (tiny)
-        shuffle — leave ``None`` while a single query's matches fit one
-        task's spillable sort.
 
         query_id is the position of the query in ``queries``.
         """
@@ -775,16 +765,13 @@ class InvertedIndex:
             # compares against the FULL term count)
             qlen = ", ".join(f"{qid}, {len(q)}" for qid, q in enumerate(norm_qs))
             agg = agg.where(f"_nterms = element_at(map({qlen}), query_id)")
-        rank = "row_number() OVER (PARTITION BY query_id{} ORDER BY score DESC, doc_id)"
-        if salt_partitions is not None and salt_partitions > 1:
-            agg = (
-                agg.selectExpr("*", f"CAST(doc_id % {int(salt_partitions)} AS INT) AS _salt")
-                .selectExpr("*", f"{rank.format(', _salt')} AS _srn")
-                .where(f"_srn <= {int(k)}")
-                .drop("_salt", "_srn")
-            )
         return (
-            agg.selectExpr("query_id", "doc_id", "score", f"{rank.format('')} AS _rn")
+            agg.selectExpr(
+                "query_id",
+                "doc_id",
+                "score",
+                "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_id) AS _rn",
+            )
             .where(f"_rn <= {int(k)}")
             .drop("_rn")
         )
@@ -1505,84 +1492,17 @@ def bm25_search_docs(
 ) -> DataFrame:
     """Index-free BM25 top-k straight off a documents DataFrame (doc_id, score).
 
-    For ad-hoc queries where building the inverted index isn't worth it.
-    ONE tokenize pass total: explode → groupBy(doc) computing dl and one tf
-    column per query term (query terms ≤ tens, so the aggregate row is
-    narrow), persisted; a single tiny action over that cached per-doc frame
-    yields N / total-tokens / per-term df (never re-reading the raw text),
-    and the score is a literal-idf expression folded in sorted-term order —
-    the same association order as InvertedIndex.search.  The earlier shape
-    ran four separate jobs over uncached text (tokenizing the corpus ~3×).
-
-    The top-k is materialized eagerly (≤ k rows) so the per-doc cache can be
-    released before returning; the result is a small local DataFrame.
+    For ad-hoc queries where building the inverted index isn't worth it: the
+    one-field case of ``multi_match_best_fields``' scorer (plans/multimatch.py),
+    so the scores are bit-identical to ``InvertedIndex.search`` over the same
+    docs.  AND keeps the docs holding every distinct term.  The top-k is
+    materialized eagerly (≤ k rows); the result is a small local DataFrame.
     """
-    import math
+    from .multimatch import _top_k
 
-    from pyspark import StorageLevel
-
-    from ..functions.tokenizer import tokenize_column
-
-    spark = docs.sparkSession
-    terms = sorted(set(terms))
-    # preserve the caller's id type (the signature admits any id column, not
-    # just the long docIDs the inverted index mints)
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    result_schema = StructType(
-        [
-            StructField("doc_id", docs.schema[id_col].dataType),
-            StructField("score", DoubleType()),
-        ]
-    )
-    if not terms:
-        return spark.createDataFrame([], result_schema)
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode_outer(tokenize_column(F.col(text_col))).alias("term"),
-    )
-    # count("term") skips the explode_outer null, so empty docs get dl=0 but
-    # still count toward N (BM25's N is ALL docs, not docs-with-tokens)
-    per_doc = toks.groupBy("doc_id").agg(
-        F.expr("count(term) AS dl"),
-        *[
-            F.expr(f"count(CASE WHEN term = {sql.string(t)} THEN true END) AS _tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        stats = per_doc.selectExpr(
-            "count(1) AS n",
-            "coalesce(sum(dl), 0) AS total",
-            *[f"sum(CAST(_tf{i} > 0 AS BIGINT)) AS _df{i}" for i in range(len(terms))],
-        ).collect()[0]
-        n_docs = int(stats["n"])
-        if n_docs == 0:
-            return spark.createDataFrame([], result_schema)
-        avgdl = float(stats["total"]) / n_docs
-        idfs = [
-            math.log(1.0 + (n_docs - int(stats[f"_df{i}"]) + 0.5) / (int(stats[f"_df{i}"]) + 0.5))
-            for i in range(len(terms))
-        ]
-
-        score, nterms = "0.0D", "0"
-        for i, idf in enumerate(idfs):  # terms sorted => deterministic fold order
-            tf = f"CAST(_tf{i} AS DOUBLE)"
-            score = f"({score} + {_bm25_sql(sql.dbl(idf), tf, params, avgdl)})"
-            nterms = f"({nterms} + CAST(_tf{i} > 0 AS INT))"
-        need = len(terms) if mode.upper() == "AND" else 1
-        rows = (
-            per_doc.where(f"{nterms} >= {need}")
-            .selectExpr("doc_id", f"{score} AS score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-    finally:
-        per_doc.unpersist()
-    return spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in rows], result_schema
+    need = len(set(terms)) if mode.upper() == "AND" else 1
+    return _top_k(
+        docs, terms, [text_col], id_col=id_col, k=k, tie_breaker=0.0, need=need, params=params
     )
 
 

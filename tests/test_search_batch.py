@@ -248,23 +248,6 @@ def test_expansion_cap_and_scored_multiterm(spark, tmp_path):
     assert idx.expand_fuzzy("table", 1, max_expansions=1) == ["table"]
 
 
-@pytest.mark.parametrize("salt", [2, 4])
-def test_batch_salted_pretruncation_bit_identical(spark, index, salt):
-    """salt_partitions: the two-stage (per-salt top-k -> global top-k)
-    window must return exactly the unsalted plan's rows, and the physical
-    plan must show BOTH windows (the salted pre-truncation runs at
-    #queries x S parallelism before the global rank)."""
-    plain = index.search_batch(QUERIES, k=3)
-    salted = index.search_batch(QUERIES, k=3, salt_partitions=salt)
-    key = lambda r: (r["query_id"], r["doc_id"])
-    assert sorted(map(tuple, salted.collect()), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, plain.collect()), key=lambda t: (t[0], t[1])
-    )
-    p = salted._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Window") >= 2
-    assert index.search_batch(QUERIES, k=3, salt_partitions=1)  # no-op salt ok
-
-
 def _plan_nodes(df) -> list[str]:
     """Node names of ``df``'s executed plan, through AQE wrappers but not
     into a cached relation's stored lineage (an InMemoryTableScan is a
