@@ -115,10 +115,3 @@ def fake_image_features(df: DataFrame, dim: int = FAKE_FEATURE_DIM) -> DataFrame
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
     return df.mapInPandas(compute, "doc_id long, features array<double>")
-
-
-def frame_sample(df: DataFrame, *, every_nth: int = 30) -> DataFrame:
-    """Video frame sampling STUB — same contract story as decode_image."""
-    raise NotImplementedError(
-        "video decode requires av/ffmpeg bindings not present in this environment"
-    )

@@ -39,15 +39,6 @@ def arc_distance(lat1, lon1, lat2, lon2):
     return EARTH_MEAN_RADIUS * 2.0 * np.arcsin(np.minimum(1.0, np.sqrt(h * 0.5)))
 
 
-def latitude_corrected_radius(radius_m: float, lat1, lat2):
-    """Merge radius shrunk by cos of the mean latitude.
-
-    InternalGeoPointClustering.java:380-384.
-    """
-    avg_lat = (np.asarray(lat1, dtype=np.float64) + np.asarray(lat2, dtype=np.float64)) / 2.0
-    return radius_m * np.cos(np.radians(avg_lat))
-
-
 def arc_distance_column(lat1, lon1, lat2, lon2):
     """``arc_distance`` as a pure-JVM Spark Column (whole-stage codegen).
 

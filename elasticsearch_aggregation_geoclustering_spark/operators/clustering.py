@@ -92,16 +92,6 @@ def cell_column(lon_col: str, lat_col: str, precision: int) -> Column:
     return geohash_expr.cell_expr(lon_col, lat_col, precision)
 
 
-def geohash_string_column(cells: Column) -> Column:
-    """Render geohash long keys (or arrays of them) to base-32 strings (P22)."""
-
-    @F.pandas_udf(StringType())
-    def _render(cell_s: pd.Series) -> pd.Series:
-        return pd.Series(geohash.string_encode_from_long(cell_s.to_numpy(dtype=np.int64)))
-
-    return _render(cells)
-
-
 def _quantized(lat: str, lon: str) -> tuple[Column, Column]:
     """Round-trip a (lat, lon) pair of SQL expressions through the Lucene
     32-bit grid (P11): the doc_values grid and the wire grid of
@@ -408,21 +398,6 @@ def _cell_aggregate_es(
     return base.groupBy("cell").applyInPandas(
         assoc, "cell long, doc_count long, centroid_lat double, centroid_lon double"
     )
-
-
-def geo_cell_aggregate_es(
-    df: DataFrame,
-    lon_col: str,
-    lat_col: str,
-    zoom: int = 1,
-    *,
-    shard_col: str,
-    order_col: str,
-    **params,
-) -> DataFrame:
-    """Public wrapper over _cell_aggregate_es (plan derived from zoom)."""
-    plan = plan_clustering(zoom, **params)
-    return _cell_aggregate_es(df, lon_col, lat_col, plan, shard_col, order_col)
 
 
 def geo_point_clustering(

@@ -6,11 +6,14 @@ never persisted — everything global rides key-only column-pruned jobs:
 
 1. **deterministic key buckets** (``_rank_plan``) — two cheap jobs over
    ONLY the natural-key columns (Catalyst prunes ``content`` out of both
-   scans), no sampling: one aggregation reads the count and the min/max of
-   an order-preserving key encoding, and a ``groupBy(fine bucket).count()``
-   over a prefix of that encoding yields exact counts the driver packs into
-   balanced buckets.  The bucket is a PURE FUNCTION of the key (a chain of
-   comparisons against literal boundaries), so — unlike
+   scans), no sampling, for every key: one aggregation reads the count and
+   the min/max of the one order-preserving binary key encoding
+   (``_encoded_key_sql``: integer, boolean, date, timestamp, float, double,
+   decimal and string columns; any other type raises TypeError), and a
+   ``groupBy(fine bucket).count()`` over a window of that encoding yields
+   exact counts the driver packs into balanced buckets.  The bucket is a
+   PURE FUNCTION of the key (a chain of comparisons against literal
+   boundaries), so — unlike
    ``repartitionByRange``'s per-action sampled boundaries — every job in the
    build sees the same assignment without persisting anything.  Cumulative
    bucket counts give each bucket's starting docID; docIDs depend only on
@@ -48,16 +51,19 @@ Resumability (north_rule): completed segment ids are recorded in
 atomically with deterministic bytes and sha256 recorded
 (tests/test_index_build.py asserts byte-identical resume).
 
-Scale notes: the bucket expression is O(#buckets) comparisons per row
-(#buckets = 2·partitions); at many thousands of target partitions switch the
-assignment to a range-join against a broadcast boundary table instead.  The
+Scale notes: the bucket is one fine-bucket evaluation plus O(#buckets)
+comparisons per row (#buckets = 2·partitions); at many thousands of target
+partitions switch the assignment to a range-join against a broadcast
+boundary table instead.  The
 two key-only jobs are metadata-cheap on columnar sources at any scale.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import warnings
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -65,6 +71,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from ..functions import sql_text as sql
 from ..functions.tokenizer import (
     TOKENIZER_VERSION,
     doc_term_frequencies,
@@ -81,60 +88,6 @@ from ..sources.segments import (
 )
 
 DEFAULT_DOCS_PER_SEGMENT = 8192
-_SAMPLES_PER_BUCKET = 48
-
-
-def _key_struct(key_cols: tuple[str, ...]) -> Column:
-    return F.struct(*[F.col(c) for c in key_cols])
-
-
-def _sample_key_boundaries(
-    df: DataFrame,
-    key_cols: tuple[str, ...],
-    n_rows: int,
-    n_buckets: int,
-    seed: int = 42,
-) -> list[tuple]:
-    """~Equi-depth key boundaries from a fixed-seed key-only sample —
-    ``_rank_plan``'s fallback for keys its string encoding cannot order.
-
-    Returns at most ``n_buckets - 1`` strictly increasing key tuples; rows
-    with key <= boundaries[i] (and > boundaries[i-1]) fall in bucket i.
-    Boundary *placement* only affects balance — docIDs are invariant to it.
-    """
-    if n_rows == 0 or n_buckets <= 1:
-        return []
-    target = n_buckets * _SAMPLES_PER_BUCKET
-    fraction = min(1.0, (target * 1.2) / n_rows)
-    keys = sorted(
-        tuple(r) for r in df.select(*key_cols).sample(fraction=fraction, seed=seed).collect()
-    )
-    if not keys:
-        return []
-    bounds: list[tuple] = []
-    for i in range(1, n_buckets):
-        cand = keys[min(int(i * len(keys) / n_buckets), len(keys) - 1)]
-        if not bounds or cand > bounds[-1]:
-            bounds.append(cand)
-    return bounds
-
-
-def _bucket_column(
-    key_cols: tuple[str, ...], bounds: list[tuple], dtypes: dict[str, str]
-) -> Column:
-    """bucket(key) = #{boundaries < key} — a pure, literal-folded expression.
-
-    Boundary literals are cast to the key columns' exact types so the struct
-    comparison resolves (lit(int) would otherwise be int32 vs a bigint key).
-    """
-    ks = _key_struct(key_cols)
-    b: Column = F.lit(0)
-    for t in bounds:
-        lit_struct = F.struct(
-            *[F.lit(v).cast(dtypes[c]) for c, v in zip(key_cols, t)]
-        )
-        b = b + (ks > lit_struct).cast("int")
-    return b.cast("int")
 
 
 def _bucket_offsets(counts: dict[int, int]) -> dict[int, int]:
@@ -216,50 +169,84 @@ def _partition_slot_expr(counts: dict[int, int], num_partitions: int) -> Column:
     return F.element_at(F.create_map(*pairs), F.col("_b").cast("int"))
 
 
-#: fine proxy-bucket resolution: counts are exact per 2^16 contiguous key
+#: fine proxy-bucket resolution: counts are exact per ≤ 2^16 contiguous key
 #: ranges, then packed into ~2x num_partitions balanced coarse buckets
 _FINE_BITS = 16
 _PROXY_BYTES = 7
 
-_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
+_MIN_LONG = "-9223372036854775808L"
 
 
-def _text_misorders(dtype: str) -> bool:
-    """Fractional types, whose string form does not sort in value order
-    (as text ``"-1.5" < "-10.0"`` and ``"9.5" > "10.5"``)."""
-    return dtype in ("float", "double") or dtype.startswith("decimal")
+def _be8(long_sql: str) -> str:
+    """A BIGINT as its 8 big-endian bytes (BINARY): unsigned byte order."""
+    return f"unhex(lpad(hex({long_sql}), 16, '0'))"
 
 
-def _encoded_key_expr(key_cols: tuple[str, ...], dtypes: dict[str, str]) -> Column:
-    """Order-preserving string encoding of the key tuple.
+def _key_part_sql(col: str, dtype: str) -> str:
+    """One key column as order-preserving BINARY (SQL text); raises
+    TypeError for a type the encoding cannot order."""
+    x = sql.name(col)
+    if dtype in ("tinyint", "smallint", "int", "bigint", "boolean", "date", "timestamp"):
+        v = {"date": f"unix_date({x})", "timestamp": f"unix_micros({x})"}.get(dtype, x)
+        # offset-binary: flipping the sign bit makes signed order unsigned
+        return _be8(f"CAST({v} AS BIGINT) ^ {_MIN_LONG}")
+    if dtype in ("float", "double"):
+        # IEEE bits with -0.0 folded onto 0.0 (Spark ties them); negatives
+        # flip every bit, non-negatives the sign bit, so canonical NaN sorts
+        # above +inf, as in Spark.  Each row takes one branch, so one
+        # reflective call; NULL takes none and never reaches java_method
+        # (which rejects NULL for a primitive double)
+        d = f"(CAST({x} AS DOUBLE) + 0.0D)"
+        bits = f"CAST(java_method('java.lang.Double', 'doubleToLongBits', {d}) AS BIGINT)"
+        return _be8(f"CASE WHEN {d} < 0 THEN ~{bits} WHEN {d} >= 0 THEN {bits} ^ {_MIN_LONG} END")
+    m = re.fullmatch(r"decimal\((\d+),(\d+)\)", dtype)
+    if m:
+        # a sign byte, then the digits zero-padded to one width (text only:
+        # abs() and scaling overflow decimal(38, s))
+        digits = f"lpad(translate(CAST({x} AS STRING), '-.', ''), {int(m[1]) + 1}, '0')"
+        flipped = f"translate({digits}, '0123456789', '9876543210')"
+        return f"encode(CASE WHEN {x} < 0 THEN concat('0', {flipped}) ELSE concat('1', {digits}) END, 'UTF-8')"
+    if dtype == "string":
+        # NUL -> NUL 0x01, so the 0x0000 column separator sorts below any
+        # continuation of the string
+        return f"encode(replace({x}, chr(0), concat(chr(0), chr(1))), 'UTF-8')"
+    raise TypeError(
+        f"key column {col!r} has type {dtype}: docIDs need an order-preserving"
+        " key encoding, which exists for integer, boolean, date, timestamp,"
+        " float, double, decimal and string columns"
+    )
 
-    String columns compare bytewise (UTF-8 order == Spark string order);
-    non-negative integers are zero-padded to 19 digits so lexical order is
-    numeric order.  NUL separates columns — it sorts below every other byte,
-    so shorter prefixes order before their extensions, matching tuple order.
+
+def _encoded_key_sql(key_cols: tuple[str, ...], dtypes: dict[str, str]) -> str:
+    """The one order-preserving encoding of the key tuple (SQL text, BINARY):
+    the unsigned byte order of the encoding is Spark's ``ORDER BY key_cols``.
+
+    Per-column parts (``_key_part_sql``) are joined by ``0x0000``, which
+    sorts below every continuation of a column's part, so a shorter column
+    value orders before its extensions, matching tuple order.
     """
-    parts = []
-    for c in key_cols:
-        if dtypes[c] in _INT_TYPES:
-            parts.append(F.lpad(F.col(c).cast("string"), 19, "0"))
-        else:
-            parts.append(F.col(c).cast("string"))
-    return F.concat_ws("\x00", *parts)
+    return "concat(" + ", X'0000', ".join(_key_part_sql(c, dtypes[c]) for c in key_cols) + ")"
 
 
-def _fine_bucket_expr(encoded: Column, prefix_len: int) -> Column:
-    """Top ``_FINE_BITS`` bits of the 7 key bytes after the corpus-wide
-    common prefix — a pure JVM long, monotone (non-strict) in key order.
+def _proxy(key: bytes, prefix_len: int) -> int:
+    """The ``_PROXY_BYTES`` key bytes after the common prefix, as an int."""
+    return int.from_bytes(bytes(key[prefix_len : prefix_len + _PROXY_BYTES]).ljust(_PROXY_BYTES, b"\x00"), "big")
+
+
+def _fine_bucket_sql(encoded: str, prefix_len: int, base: int, shift: int) -> str:
+    """``(proxy − base) >> shift`` (SQL text, BIGINT), monotone (non-strict)
+    in key order: ``proxy`` is the 7 key bytes after the corpus-wide
+    common prefix.
 
     Any key between min and max shares their common prefix, so skipping it
     spends the proxy's resolution where keys actually diverge (e.g. every
-    repo key starting "github.com/").  7 bytes = 14 hex digits < 2^56, so
+    repo key starting "github.com/").  ``base`` is the proxy of the minimum
+    key and ``shift`` keeps the result below 2^16, so the fine buckets span
+    the key range actually present.  7 bytes = 14 hex digits < 2^56, so
     ``conv`` is exact in a long.
     """
-    seg = F.substring(F.encode(encoded, "UTF-8"), prefix_len + 1, _PROXY_BYTES)
-    padded = F.rpad(seg, _PROXY_BYTES, F.lit(b"\x00"))
-    v = F.coalesce(F.conv(F.hex(padded), 16, 10).cast("long"), F.lit(0))
-    return F.shiftright(v, _PROXY_BYTES * 8 - _FINE_BITS)
+    seg = f"rpad(substring({encoded}, {prefix_len + 1}, {_PROXY_BYTES}), {_PROXY_BYTES}, X'00')"
+    return f"shiftright(CAST(conv(hex({seg}), 16, 10) AS BIGINT) - {base}L, {shift})"
 
 
 def _pack_fine_counts(
@@ -292,20 +279,21 @@ def _rank_plan(
     num_partitions: int,
     *,
     content_col: str | None = None,
-) -> tuple[Column, dict[int, int], int, dict | None]:
-    """The docID pre-plan: (bucket expression, exact per-bucket counts,
-    n_docs, batch fingerprint) in exactly TWO key-only jobs, no sampling.
+) -> tuple[Callable[[DataFrame], DataFrame], dict[int, int], int, dict | None]:
+    """The docID pre-plan: (a function adding the bucket column ``_b``,
+    exact per-bucket counts, n_docs, batch fingerprint) in exactly TWO
+    key-only jobs, no sampling.
 
-    Job 1 is one aggregation (count + min/max encoded key + per-int-column
-    min); job 2 counts rows per fine proxy bucket (≤ 2^16 groups) and the
+    Every key plans through the one order-preserving binary encoding
+    (``_encoded_key_sql``) of integer, boolean, date, timestamp, float,
+    double, decimal and string columns; any other key type raises TypeError
+    before a job runs.  Job 1 is one aggregation (count + min/max encoded
+    key); job 2 counts rows per fine proxy bucket (≤ 2^16 groups) and the
     driver packs them into balanced coarse buckets with exact offsets.
     docIDs are invariant to where the boundaries fall — the bucket is
     monotone in key and offsets are exact prefix counts, so
     ``offset[bucket] + within-bucket key rank`` IS the global key rank
-    regardless of balance.  Keys the zero-pad string encoding cannot order
-    (negative integers, NUL inside a string, float/double/decimal columns)
-    fall back to sampled bounds (one extra sample job) — same docIDs either
-    way.
+    regardless of balance.
 
     With ``content_col`` (appends and upserts) job 1 also folds the
     append-ledger fingerprint: ``n_docs``, struct ``min_key``/``max_key``,
@@ -314,52 +302,35 @@ def _rank_plan(
     the content column).  Without it the fourth element is None and the jobs
     stay key-only.
     """
-    dtypes = dict(df.dtypes)
-    enc = _encoded_key_expr(key_cols, dtypes)
-    int_cols = [c for c in key_cols if dtypes[c] in _INT_TYPES]
-    str_cols = [c for c in key_cols if dtypes[c] not in _INT_TYPES]
-    ledger_aggs = []
+    enc = _encoded_key_sql(key_cols, dict(df.dtypes))
+    keys = ", ".join(sql.name(c) for c in key_cols)
+    # NULL key values have no place in the key order (the encoding of a
+    # tuple holding one is NULL), so the docID contract requires non-null
+    # keys, enforced here in the same single aggregation
+    aggs = [
+        "count(1) AS _n",
+        "min(_enc) AS _min",
+        "max(_enc) AS _max",
+        "max(" + " OR ".join(f"{sql.name(c)} IS NULL" for c in key_cols) + ") AS _nullkey",
+    ]
+    cols = key_cols
     if content_col is not None:
-        keys = [F.col(c) for c in key_cols]
-        ks = _key_struct(key_cols)
-        ledger_aggs = [
-            F.min(ks).alias("_kmin"),
-            F.max(ks).alias("_kmax"),
-            F.bit_xor(F.xxhash64(*keys)).alias("_kxor"),
-            F.bit_xor(F.xxhash64(*keys, F.col(content_col))).alias("_cxor"),
+        cols = (*key_cols, content_col)
+        aggs += [
+            f"min(struct({keys})) AS _kmin",
+            f"max(struct({keys})) AS _kmax",
+            f"bit_xor(xxhash64({keys})) AS _kxor",
+            f"bit_xor(xxhash64({keys}, {sql.name(content_col)})) AS _cxor",
         ]
-    # a NUL inside a key string would collide with the encoding's column
-    # separator (breaking tuple-order monotonicity) — detect in the same agg
-    nul_checks = [F.instr(F.col(c).cast("string"), "\x00") for c in str_cols]
-    if not nul_checks:
-        nul_probe = F.lit(0)
-    elif len(nul_checks) == 1:
-        nul_probe = F.max(nul_checks[0])
-    else:
-        nul_probe = F.max(F.greatest(*nul_checks))
-    # NULL key values have no deterministic place in ANY of the orderings
-    # (concat_ws silently drops NULL columns so (NULL,'b') and ('b',NULL)
-    # encode identically; struct comparisons against a NULL yield NULL; the
-    # sampled-bounds python sort raises) — so the docID contract requires
-    # non-null keys, enforced here in the same single aggregation.
-    null_key_probe = F.max(
-        F.greatest(*[F.col(c).isNull().cast("int") for c in key_cols])
-        if len(key_cols) > 1
-        else F.col(key_cols[0]).isNull().cast("int")
-    )
-    row = df.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.min(enc).alias("_min"),
-        F.max(enc).alias("_max"),
-        nul_probe.alias("_nul"),
-        null_key_probe.alias("_nullkey"),
-        *[F.min(F.col(c)).alias(f"_imin_{c}") for c in int_cols],
-        *ledger_aggs,
-    ).collect()[0]
+    # the encoding is projected below the aggregate: java_method (float
+    # keys) is non-deterministic to the analyzer, which rejects it inside
+    # an aggregate's arguments
+    keyed = df.selectExpr(f"{enc} AS _enc", *(sql.name(c) for c in cols))
+    row = keyed.agg(*[F.expr(a) for a in aggs]).collect()[0]
     n_docs = int(row["_n"])
     if n_docs == 0:
-        return F.lit(0).cast("int"), {}, 0, None
-    if (row["_nullkey"] or 0) > 0:
+        return lambda frame: frame.withColumn("_b", F.lit(0)), {}, 0, None
+    if row["_nullkey"]:
         raise ValueError(
             f"key columns {list(key_cols)} contain NULL values: docID "
             "assignment requires a total order over non-null unique keys — "
@@ -374,36 +345,28 @@ def _rank_plan(
             "key_xor": int(row["_kxor"]),
             "content_xor": int(row["_cxor"]),
         }
-    needs_fallback = (
-        (row["_nul"] or 0) > 0
-        or any(row[f"_imin_{c}"] < 0 for c in int_cols)
-        or any(_text_misorders(dtypes[c]) for c in str_cols)
-    )
-    if needs_fallback:
-        bounds = _sample_key_boundaries(df, key_cols, n_docs, 2 * num_partitions)
-        bexpr = _bucket_column(key_cols, bounds, dtypes)
-        counts = {
-            r["_b"]: r["cnt"]
-            for r in df.select(bexpr.alias("_b"))
-            .groupBy("_b")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        return bexpr, counts, n_docs, fp
-    prefix_len = len(os.path.commonprefix([row["_min"].encode(), row["_max"].encode()]))
-    fine = _fine_bucket_expr(enc, prefix_len)
+    lo, hi = bytes(row["_min"]), bytes(row["_max"])
+    prefix_len = len(os.path.commonprefix([lo, hi]))
+    base = _proxy(lo, prefix_len)
+    shift = max(0, (_proxy(hi, prefix_len) - base).bit_length() - _FINE_BITS)
+    fine = _fine_bucket_sql(enc, prefix_len, base, shift)
     fine_counts = {
         int(r["_f"]): int(r["cnt"])
-        for r in df.select(fine.alias("_f"))
+        for r in df.select(F.expr(f"{fine} AS _f"))
         .groupBy("_f")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     }
     bounds, counts = _pack_fine_counts(fine_counts, 2 * num_partitions)
-    bexpr: Column = F.lit(0)
-    for b in bounds:
-        bexpr = bexpr + (fine > F.lit(b)).cast("int")
-    return bexpr.cast("int"), counts, n_docs, fp
+    bexpr = F.expr(" + ".join(f"CAST(_f > {b}L AS INT)" for b in bounds) or "0")
+
+    def bucket(frame: DataFrame) -> DataFrame:
+        # the fine bucket is its own column, evaluated once per row and
+        # compared once per boundary: common-subexpression elimination
+        # never merges copies of java_method (float/double keys)
+        return frame.withColumn("_f", F.expr(fine)).withColumn("_b", bexpr).drop("_f")
+
+    return bucket, counts, n_docs, fp
 
 
 def assign_doc_ids(
@@ -418,30 +381,38 @@ def assign_doc_ids(
     boundaries).
     """
     num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    bexpr, counts, _, _ = _rank_plan(df, key_cols, num_partitions)
+    bucket, counts, _, _ = _rank_plan(df, key_cols, num_partitions)
     offsets = _bucket_offsets(counts)
-    ranged = _slot_exchange(df, bexpr, counts, num_partitions, key_cols)
+    ranged = _slot_exchange(df, bucket, counts, num_partitions, key_cols)
     out_cols = [c for c in df.columns]
     schema = ", ".join(
         ["doc_id long"] + [f"`{n}` {t}" for n, t in ranged.drop("_b").dtypes]
     )
 
+    # Arrow batches, not pandas: a pandas round trip rewrites timestamps
+    # through the session timezone (a DST fall-back hour collapses)
     def run(batches):
-        next_id: dict[int, int] = {}
-        for raw in batches:
-            if raw.empty:
-                continue
-            ids = _assign_ids_for_batch(raw["_b"].to_numpy(np.int64), next_id, offsets)
-            pdf = raw.drop(columns=["_b"])
-            pdf.insert(0, "doc_id", ids)
-            yield pdf
+        import pyarrow as pa
 
-    return ranged.mapInPandas(run, schema).select("doc_id", *out_cols)
+        next_id: dict[int, int] = {}
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            b = batch.schema.get_field_index("_b")
+            ids = _assign_ids_for_batch(
+                batch.column(b).to_numpy(zero_copy_only=False).astype(np.int64), next_id, offsets
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, pa.int64()), *(batch.column(i) for i in range(batch.num_columns) if i != b)],
+                names=["doc_id", *(n for i, n in enumerate(batch.schema.names) if i != b)],
+            )
+
+    return ranged.mapInArrow(run, schema).select("doc_id", *out_cols)
 
 
 def _slot_exchange(
     df: DataFrame,
-    bexpr: Column,
+    bucket: Callable[[DataFrame], DataFrame],
     counts: dict[int, int],
     num_partitions: int,
     key_cols: tuple[str, ...],
@@ -455,7 +426,7 @@ def _slot_exchange(
     within each partition.
     """
     return (
-        df.withColumn("_b", bexpr)
+        bucket(df)
         .withColumn("_slot", _partition_slot_expr(counts, num_partitions))
         .repartition(num_partitions, F.col("_slot"))
         .drop("_slot")
@@ -736,6 +707,7 @@ def build_index(
     """
     if index_options not in ("positions", "freqs"):
         raise ValueError(f"index_options must be positions|freqs: {index_options}")
+    _check_docmap_types(docs, (*key_cols, *docmap_cols))
     os.makedirs(index_dir, exist_ok=True)
     manifest = load_manifest(index_dir) if resume else None
     if manifest is not None:
@@ -747,7 +719,7 @@ def build_index(
     # TWO key-only pre-jobs total (content pruned out of both scans), no
     # sampling: one agg for count + min/max key, one exact fine-bucket count
     # -> literal boundaries + exact offsets (see _rank_plan)
-    bexpr, counts, n_docs, _ = _rank_plan(docs, key_cols, num_partitions)
+    bucket, counts, n_docs, _ = _rank_plan(docs, key_cols, num_partitions)
 
     if manifest is None:
         manifest = IndexManifest(
@@ -770,12 +742,25 @@ def build_index(
 
     if len(done) < max(1, manifest.num_segments_expected):
         _write_segments(
-            docs, index_dir, manifest, bexpr, counts, _bucket_offsets(counts), done,
+            docs, index_dir, manifest, bucket, counts, _bucket_offsets(counts), done,
             content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
             num_partitions=num_partitions,
         )
         parts = seg_store.load_manifest_parts(index_dir)
     return _commit(spark, index_dir, manifest, parts)
+
+
+def _check_docmap_types(docs: DataFrame, cols: tuple[str, ...]) -> None:
+    """Reject timestamp key and docmap columns (reads ``docs.dtypes`` only):
+    the docmap parts are written from pandas, whose ``timestamp[ns]``
+    parquet column Spark cannot read back."""
+    dtypes = dict(docs.dtypes)
+    bad = [c for c in cols if dtypes.get(c) in ("timestamp", "timestamp_ntz")]
+    if bad:
+        raise ValueError(
+            f"key/docmap columns {bad} are timestamps, which the docmap cannot"
+            " store readably: pass them as long (unix_micros) or string"
+        )
 
 
 def _done_segments(index_dir: str, claimed: set[int]) -> frozenset[int]:
@@ -794,7 +779,7 @@ def _write_segments(
     docs: DataFrame,
     index_dir: str,
     manifest: IndexManifest,
-    bexpr: Column,
+    bucket: Callable[[DataFrame], DataFrame],
     counts: dict[int, int],
     offsets: dict[int, int],
     done: frozenset[int],
@@ -806,7 +791,7 @@ def _write_segments(
 ) -> None:
     """The ONE full-data job, shared by ``build_index`` and ``append_index``:
     build every segment of ``docs`` not in ``done``, with docIDs
-    ``offsets[bucket] + key rank`` (``bexpr``/``counts`` from _rank_plan).
+    ``offsets[bucket] + key rank`` (``bucket``/``counts`` from _rank_plan).
 
     Interior segments are written as side effects inside the partitions
     (each leaves a manifest part); only boundary rows reach the tiny
@@ -819,7 +804,7 @@ def _write_segments(
     work = docs.select(*key_cols, *docmap_cols, content_col).withColumn(
         "sha256", F.sha2(F.col(content_col).cast("binary"), 256)
     )
-    ranged = _slot_exchange(work, bexpr, counts, num_partitions, key_cols)
+    ranged = _slot_exchange(work, bucket, counts, num_partitions, key_cols)
     frag_schema = ", ".join(
         ["doc_id long"]
         + [f"`{n}` {t}" for n, t in ranged.drop("_b").dtypes]
@@ -1040,8 +1025,9 @@ def _ingest(
         )
     docs_per_segment = manifest.docs_per_segment
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
+    _check_docmap_types(docs, (*key_cols, *docmap_cols))
 
-    bexpr, counts, n_new, fp = _rank_plan(
+    bucket, counts, n_new, fp = _rank_plan(
         docs, key_cols, num_partitions, content_col=content_col
     )
     if n_new == 0:
@@ -1086,7 +1072,7 @@ def _ingest(
     save_manifest(index_dir, manifest)
 
     _write_segments(
-        docs, index_dir, manifest, bexpr, counts, offsets,
+        docs, index_dir, manifest, bucket, counts, offsets,
         _done_segments(index_dir, existing),
         content_col=content_col, key_cols=key_cols, docmap_cols=docmap_cols,
         num_partitions=num_partitions,

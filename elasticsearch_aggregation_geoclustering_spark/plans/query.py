@@ -211,8 +211,9 @@ def _sorted_term_score_sum(terms_sorted: list[str]) -> str:
 
 
 def _idf_sql(idfs: dict[str, float]) -> str:
-    """Each row's idf (SQL text): a literal map looked up by ``term``."""
-    pairs = ", ".join(f"{sql.string(t)}, {sql.dbl(v)}" for t, v in idfs.items())
+    """Each row's idf (SQL text): a literal map looked up by ``term``, its
+    pairs in term order so the text does not follow dict (hash) order."""
+    pairs = ", ".join(f"{sql.string(t)}, {sql.dbl(idfs[t])}" for t in sorted(idfs))
     return f"element_at(map({pairs}), term)"
 
 

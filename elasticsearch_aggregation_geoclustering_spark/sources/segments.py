@@ -94,9 +94,6 @@ class IndexManifest:
     def completed_segment_ids(self) -> set[int]:
         return {int(s) for s in self.segments}
 
-    def is_complete(self) -> bool:
-        return len(self.segments) >= self.num_segments_expected
-
 
 def manifest_path(index_dir: str) -> str:
     return os.path.join(index_dir, MANIFEST_NAME)

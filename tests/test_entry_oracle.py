@@ -111,8 +111,9 @@ def test_query_matches_oracle(spark, duck, name):
     # oracle whose top-k boundary lands on an EXACT score tie can flip which
     # tied row survives the limit between runs (measured on
     # bm25_rescore_phrase: rank 50/51 share the same double bit-for-bit and
-    # duck returns either, ~5:1; Spark's answer is stable and equals duck's
-    # majority outcome).  The engine result is a valid execution of the
+    # duck returns either; Spark's answer is stable and is duck's MINORITY
+    # outcome, 10 of 12 and 12 of 16 fresh duck runs returning the other
+    # tied row).  The engine result is a valid execution of the
     # oracle, so on mismatch re-run the DUCK side on fresh connections —
     # three consecutive disagreements are a real failure, one agreement
     # proves equivalence.

@@ -4,8 +4,9 @@ _rank_plan, decide replay vs new batch with one ledger rule
 
 Pins the batch_id-first replay rule on both the upsert and the plain append
 path, the ledger entry format (and that entries written in older formats
-keep matching replays), the append's Spark job count, and the sampled
-fallback of _rank_plan on an append batch.
+keep matching replays), the append's Spark job count, that a signed-key
+append plans in as many jobs as a string-key one, and the rejection of
+timestamp key and docmap columns.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_aggregation_geoclustering_spark.plans import index_build
 from elasticsearch_aggregation_geoclustering_spark.plans.index_build import (
     append_index,
     build_index,
@@ -141,41 +141,50 @@ def test_older_ledger_entries_match_replays(spark, index_dir, drop):
     assert after[0]["base_sid"] == entry["base_sid"]
 
 
-def test_append_job_count(spark, index_dir):
-    """One append_index plans with _rank_plan's two key-only jobs; a re-added
-    count or sample job pushes the count over the bound."""
+def _count_jobs(spark, group, fn):
+    """Spark jobs ``fn()`` runs with AQE off (AQE splits each shuffle
+    materialization into its own job id; count the engine's own jobs)."""
     sc = spark.sparkContext
-    # AQE splits each shuffle materialization into its own job id; count
-    # the engine's own job structure
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    batch = _batch(spark, [(7, "kappa lambda"), (8, "lambda mu")])
-    sc.setJobGroup("append_job_count", "one append_index")
+    sc.setJobGroup(group, group)
     try:
-        append_index(spark, batch, index_dir, **KW)
+        fn()
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    jobs = sc.statusTracker().getJobIdsForGroup("append_job_count")
-    assert len(jobs) <= APPEND_JOBS, f"{len(jobs)} jobs"
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_append_negative_long_keys_use_sampled_fallback(spark, index_dir, monkeypatch):
-    """Negative long keys break the zero-pad key encoding, so _rank_plan
-    plans the batch from sampled bounds; docIDs are still
-    base_sid·docs_per_segment + dense key rank."""
-    calls = []
-    sample = index_build._sample_key_boundaries
+def test_append_job_count(spark, index_dir):
+    """One append_index plans with _rank_plan's two key-only jobs; a re-added
+    count or sample job pushes the count over the bound."""
+    batch = _batch(spark, [(7, "kappa lambda"), (8, "lambda mu")])
+    jobs = _count_jobs(spark, "append_job_count", lambda: append_index(spark, batch, index_dir, **KW))
+    assert jobs <= APPEND_JOBS, f"{jobs} jobs"
 
-    def counting_sample(*args, **kwargs):
-        calls.append(args[2])
-        return sample(*args, **kwargs)
 
-    monkeypatch.setattr(index_build, "_sample_key_boundaries", counting_sample)
+def test_append_negative_long_keys_plan_like_string_keys(spark, index_dir, tmp_path):
+    """Negative long keys plan through the same two key-only jobs as string
+    keys (one binary key encoding for every key type, no sampled bounds);
+    docIDs are base_sid·docs_per_segment + dense key rank."""
     keys = [-(i * 37 % 101) - 1 for i in range(23)]
     rows = [(k, f"neg{abs(k) % 5} tok") for k in keys]
-    append_index(spark, _batch(spark, rows), index_dir, num_partitions=3, **KW)
-    assert calls == [len(rows)]
+    neg_jobs = _count_jobs(
+        spark, "append_negative_long",
+        lambda: append_index(spark, _batch(spark, rows), index_dir, num_partitions=3, **KW),
+    )
+    str_dir = str(tmp_path / "str_idx")
+    build_index(
+        spark, spark.createDataFrame([(str(i), t) for i, t in DOCS], "orig_id string, text string"),
+        str_dir, docs_per_segment=2, **KW,
+    )
+    str_rows = spark.createDataFrame([(f"k{k:+04d}", t) for k, t in rows], "orig_id string, text string")
+    str_jobs = _count_jobs(
+        spark, "append_string",
+        lambda: append_index(spark, str_rows, str_dir, num_partitions=3, **KW),
+    )
+    assert neg_jobs == str_jobs, (neg_jobs, str_jobs)
 
     entry = load_manifest(index_dir).appends[-1]
     assert entry["min_key"] == [min(keys)] and entry["max_key"] == [max(keys)]
@@ -187,3 +196,33 @@ def test_append_negative_long_keys_use_sampled_fallback(spark, index_dir, monkey
     }
     assert got == {k: base + rank for rank, k in enumerate(sorted(keys))}
     assert idx.n_docs == len(DOCS) + len(rows)
+
+
+@pytest.mark.parametrize(
+    "schema,cols",
+    [
+        ("orig_id timestamp, text string", {}),
+        ("orig_id long, text string, ts timestamp", {"docmap_cols": ("ts",)}),
+        ("orig_id long, text string, ts timestamp_ntz", {"docmap_cols": ("ts",)}),
+    ],
+    ids=["timestamp_key", "timestamp_docmap", "timestamp_ntz_docmap"],
+)
+@pytest.mark.parametrize("op", ["build", "append"])
+def test_timestamp_key_and_docmap_columns_rejected(spark, index_dir, schema, cols, op):
+    """The docmap parts are written from pandas as timestamp[ns], which Spark
+    cannot read back: build and append reject timestamp key and docmap
+    columns before any Spark job."""
+    import datetime as dt
+
+    ts = dt.datetime(2021, 11, 7, 1, 30)
+    row = (ts, "omega") if schema.startswith("orig_id timestamp") else (9, "omega", ts)
+    docs = spark.createDataFrame([row], schema)
+    target = str(index_dir) + "_new" if op == "build" else index_dir
+    write = build_index if op == "build" else append_index
+
+    def run():
+        with pytest.raises(ValueError, match="timestamps"):
+            write(spark, docs, target, **{**KW, **cols})
+
+    assert _count_jobs(spark, f"timestamp_{op}", run) == 0
+    assert op == "append" or not os.path.exists(target)

@@ -223,8 +223,7 @@ TOY_IDFS = {"apple": 0.3746934494414107, "banana": 0.3746934494414107, "grape": 
 def test_indexed_bm25_sql_text_pinned(toy_index, monkeypatch):
     """score_matches, search_batch and explain splice the one BM25 expression
     the index-free scorers also use; pin its text on the indexed path so an
-    edit made for the index-free callers cannot change it.  The idf map's
-    pair order follows the query's set iteration, so it is pinned as a dict."""
+    edit made for the index-free callers cannot change it."""
     idf_maps, texts = [], []
     idf_sql, bm25_sql = query._idf_sql, query._bm25_sql
 
@@ -246,10 +245,23 @@ def test_indexed_bm25_sql_text_pinned(toy_index, monkeypatch):
         TOY_IDFS,
         {t: TOY_IDFS[t] for t in ("apple", "grape")},
     ]
-    assert len(texts) == 3
-    for (idf, text), idfs in zip(texts, idf_maps):
-        assert idf == idf_sql(idfs)
+    all3 = (
+        "element_at(map('apple', 0.3746934494414107D, 'banana', 0.3746934494414107D,"
+        " 'grape', 1.6739764335716714D), term)"
+    )
+    two = "element_at(map('apple', 0.3746934494414107D, 'grape', 1.6739764335716714D), term)"
+    assert [idf for idf, _text in texts] == [all3, all3, two]
+    for idf, text in texts:
         assert text == TOY_BM25_SQL.replace("{idf}", idf)
+
+
+def test_idf_sql_ignores_dict_order():
+    """The idf map text lists its pairs in term order, whatever the dict's
+    insertion (and so hash-seeded set iteration) order."""
+    fwd = dict(TOY_IDFS)
+    rev = dict(reversed(list(TOY_IDFS.items())))
+    assert list(fwd) != list(rev)
+    assert query._idf_sql(fwd) == query._idf_sql(rev)
 
 
 def test_multi_match_tie_breaker_semantics(spark):
